@@ -119,7 +119,7 @@ def main() -> None:
         catalog = synth_media_catalog(spark)
         res = validate_run(
             spark, docs, corpus_ruleset(), media_catalog=catalog,
-            stats_columns=None, check_uniqueness=True,
+            check_uniqueness=True,
         )
         # ONE action: the merged-stream metrics agg evaluates the whole
         # pipeline once (violation count + failing row-rule partitions).
@@ -141,7 +141,7 @@ def main() -> None:
     res_warm = validate_run(
         spark, spark.read.parquet(corpus_path),
         corpus_ruleset(), media_catalog=synth_media_catalog(spark),
-        stats_columns=None, check_uniqueness=True,
+        check_uniqueness=True,
     )
     res_warm.metrics.collect()
 

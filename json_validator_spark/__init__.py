@@ -5,7 +5,8 @@ Reproduces the validation semantics and report contract of the reference
 ``jsonvalidator-common/.../JSONValidator.java``) as distributed, set-based
 dataflow over Spark DataFrames:
 
-- rules compile to Catalyst ``Column`` predicates (whole-stage codegen);
+- rules compile to Catalyst ``Column`` predicates (span rules fuse into one
+  higher-order ``transform`` per spans column, which Spark runs interpreted);
 - one narrow pass over the corpus emits structured violation rows
   ``(doc_id, span_path, rule_id, severity, message)`` — the analogue of the
   reference's TAR report items (``JSONValidator.java:461-465``);

@@ -14,7 +14,8 @@ or locally: ``python -m json_validator_spark.cli validate ...``.
 
 Outputs (S7 sink analogue, ``FileManager.java:100-139``):
 ``{output}/violations``, ``{output}/verdicts``, ``{output}/aggregate``,
-``{output}/metrics`` — Iceberg tables when the catalog resolves,
+and ``{output}/partition_verdicts`` without ``--checkpoint`` — Iceberg
+tables when the catalog resolves,
 parquet otherwise (``sources/tables.write_table``).
 """
 
@@ -62,7 +63,11 @@ def _load_ruleset(path: str | None):
 
 
 def cmd_validate(args: argparse.Namespace) -> int:
-    from json_validator_spark.operators.report import ordered
+    from json_validator_spark.operators.report import (
+        aggregate_report,
+        doc_verdicts_merged,
+        ordered,
+    )
     from json_validator_spark.plans.pipeline import validate_run
     from json_validator_spark.session import get_spark
     from json_validator_spark.sources.tables import load_table, write_table
@@ -138,6 +143,7 @@ def cmd_validate(args: argparse.Namespace) -> int:
         ruleset = _load_ruleset(args.rules)
 
     t0 = time.perf_counter()
+    partition_verdicts = None
     if args.checkpoint:
         from json_validator_spark.plans.checkpoint import (
             read_violations,
@@ -149,35 +155,22 @@ def cmd_validate(args: argparse.Namespace) -> int:
             media_catalog=media, extra_violations=extra, definitions=definitions,
         )
         violations = read_violations(spark, args.checkpoint)
-        write_table(ordered(violations), f"{args.output}/violations")
-        # same report surface as the non-checkpoint path: per-doc
-        # verdicts (merged-TAR counters over the resumed violations)
-        # plus the aggregate rollup
-        from json_validator_spark.operators.report import (
-            aggregate_report,
-            doc_verdicts_merged,
-        )
-
-        write_table(doc_verdicts_merged(verdict_base, violations), f"{args.output}/verdicts")
-        write_table(aggregate_report(violations), f"{args.output}/aggregate")
-        out_violations = violations
     else:
         res = validate_run(
             spark, docs, ruleset, definitions=definitions, media_catalog=media,
             repartition_to=args.repartition,
-            stats_columns=None,
             extra_violations=extra,
         )
-        # same verdict surface in both modes: {output}/verdicts is ALWAYS
-        # per-doc merged-TAR rows (doc_id, n_errors, n_warnings, result);
-        # the partition rollup gets its own table
-        from json_validator_spark.operators.report import doc_verdicts_merged
-
-        write_table(ordered(res.violations), f"{args.output}/violations")
-        write_table(doc_verdicts_merged(verdict_base, res.violations), f"{args.output}/verdicts")
-        write_table(res.partition_verdicts, f"{args.output}/partition_verdicts")
-        write_table(res.aggregate, f"{args.output}/aggregate")
-        out_violations = res.violations
+        violations = res.violations
+        partition_verdicts = res.partition_verdicts
+    # same verdict surface in both modes: {output}/verdicts is ALWAYS
+    # per-doc merged-TAR rows (doc_id, n_errors, n_warnings, result);
+    # the partition rollup gets its own table where there is one
+    write_table(ordered(violations), f"{args.output}/violations")
+    write_table(doc_verdicts_merged(verdict_base, violations), f"{args.output}/verdicts")
+    if partition_verdicts is not None:
+        write_table(partition_verdicts, f"{args.output}/partition_verdicts")
+    write_table(aggregate_report(violations), f"{args.output}/aggregate")
     if args.format == "xml":
         import datetime as _dt
 
@@ -189,16 +182,16 @@ def cmd_validate(args: argparse.Namespace) -> int:
 
         now = _dt.datetime.now(_dt.timezone.utc).isoformat(timespec="seconds")
         write_tar_xml_reports(
-            tar_reports_from_violations(docs, out_violations),
+            tar_reports_from_violations(docs, violations),
             f"{args.output}/xml",
             max_docs=args.xml_max,
             date=now,
         )
         write_tar_xml_aggregate(
-            out_violations, f"{args.output}/xml/TAR-aggregate.xml", date=now
+            violations, f"{args.output}/xml/TAR-aggregate.xml", date=now
         )
     elif args.format == "csv":
-        ordered(out_violations).write.option("header", True).mode(
+        ordered(violations).write.option("header", True).mode(
             "overwrite"
         ).csv(f"{args.output}/csv")
     elif args.format == "pdf":
@@ -212,13 +205,13 @@ def cmd_validate(args: argparse.Namespace) -> int:
 
         now = _dt.datetime.now(_dt.timezone.utc).isoformat(timespec="seconds")
         write_tar_pdf_reports(
-            tar_reports_from_violations(docs, out_violations),
+            tar_reports_from_violations(docs, violations),
             f"{args.output}/pdf",
             max_docs=args.xml_max,
             date=now,
         )
         write_tar_pdf_aggregate(
-            out_violations, f"{args.output}/pdf/TAR-aggregate.pdf", date=now
+            violations, f"{args.output}/pdf/TAR-aggregate.pdf", date=now
         )
     elapsed = time.perf_counter() - t0
     # count from the materialized verdict table (one row per doc incl.

@@ -18,13 +18,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from json_validator_spark.rules.compiler import severity_count
+
 
 def doc_verdicts(with_viols: DataFrame, doc_id: str = "doc_id") -> DataFrame:
     """Per-document verdict from a ``with_violations`` frame. SUCCESS iff
     zero error-severity violations (``JSONValidator.java:454-459``) —
     warnings/infos are counted but do not fail the document."""
-    n_err = F.size(F.filter(F.col("violations"), lambda v: v["severity"] == "error"))
-    n_warn = F.size(F.filter(F.col("violations"), lambda v: v["severity"] == "warning"))
+    n_err = severity_count(F.col("violations"), "error")
+    n_warn = severity_count(F.col("violations"), "warning")
     # result derives from n_errors, not doc_pass: by construction every
     # failing combination emits ≥1 error-severity violation (ANY/ONE_OF
     # failures add an error header), and referencing doc_pass would
@@ -79,7 +81,7 @@ def partition_verdicts(with_viols: DataFrame) -> DataFrame:
     result)`` — the verdict unit named by the north star; partial
     (map-side) aggregation means one tiny row per partition hits the
     shuffle."""
-    n_err = F.size(F.filter(F.col("violations"), lambda v: v["severity"] == "error"))
+    n_err = severity_count(F.col("violations"), "error")
     return (
         with_viols.select(
             F.spark_partition_id().alias("partition_id"), n_err.alias("n_err")
@@ -117,8 +119,8 @@ def run_summary(with_viols: DataFrame) -> DataFrame:
     (``FileReport``/``ValidationRunner.java:156-157``): docs seen,
     total error/warning counts, failed docs, failure rate. One agg
     pass, map-side combined — constant output at any corpus size."""
-    n_err = F.size(F.filter(F.col("violations"), lambda v: v["severity"] == "error"))
-    n_warn = F.size(F.filter(F.col("violations"), lambda v: v["severity"] == "warning"))
+    n_err = severity_count(F.col("violations"), "error")
+    n_warn = severity_count(F.col("violations"), "warning")
     return (
         with_viols.select(n_err.alias("e"), n_warn.alias("w"))
         .agg(

@@ -15,8 +15,9 @@ projection over the corpus:
 3. the combination decides which violations survive and whether to add a
    combination-level header violation.
 
-No shuffle, no UDF: the plan is a single whole-stage-codegen'd Project.
-At 100 TB this layer is scan-bound — exactly what you want.
+No shuffle, no UDF: the plan is a single narrow Project. The fused span
+lambdas are higher-order functions, which Spark runs interpreted rather
+than in whole-stage codegen (see ``_branch_violations``).
 """
 
 from __future__ import annotations
@@ -28,8 +29,10 @@ from pyspark.sql import functions as F
 
 from json_validator_spark.rules.compiler import (
     VIOLATION_ARRAY_TYPE,
+    VIOLATION_FIELD_NAMES,
     compile_rule,
     normalize_rule,
+    severity_count,
     span_violation_expr,
 )
 from json_validator_spark.rules.model import Combination, Rule, RuleSet, RuleSetGroup
@@ -79,10 +82,7 @@ def _branch_violations(
                 F.flatten(F.transform(F.col(spans_col), per_span)),
             ).otherwise(F.array().cast(VIOLATION_ARRAY_TYPE))
         )
-    arrays.extend(
-        compile_rule(r, detail=detail).violations()
-        for r in norm if r.level == "doc"
-    )
+    arrays.extend(compile_rule(r, detail=detail) for r in norm if r.level == "doc")
     return _concat_arrays(arrays)
 
 def _concat_arrays(arrays: list[Column]) -> Column:
@@ -129,15 +129,13 @@ def _combine(
     # help here — the wrapper itself is re-referenced per column. The
     # known-good mitigations (aggregation barrier / persist) cost more
     # than the 2-3x for the ANY/ONE_OF shapes, so this is deliberate;
-    # the hot ALL path explodes violations ONCE via violations_df.
+    # the combined array itself is exploded once, by explode_violations.
     branch_viols: list[Column] = []
     branch_pass: list[Column] = []
     for b in branches:
         viols = _branch_violations(ruleset.branch(b), definitions, detail)
         branch_viols.append(viols)
-        branch_pass.append(
-            F.size(F.filter(viols, lambda v: v["severity"] == "error")) == 0
-        )
+        branch_pass.append(severity_count(viols, "error") == 0)
 
     n_passed = sum((p.cast("int") for p in branch_pass), start=F.lit(0))
     combo = ruleset.combination
@@ -226,6 +224,30 @@ def with_violations(
     )
 
 
+def explode_violations(wv: DataFrame, doc_id: Column, **carry: Column) -> DataFrame:
+    """One row per entry of a ``with_violations`` frame's array:
+    ``(doc_id, span_path, rule_id, severity, message, *carry)``, where
+    ``carry`` names further per-doc columns to keep alongside."""
+    # explode_outer + isNotNull, NOT plain explode: the optimizer guards a
+    # non-outer Generate with a size(violations)>0 pre-filter, and because
+    # higher-order functions are CodegenFallback (no cross-reference CSE)
+    # that filter re-evaluates the entire rule expression a second time —
+    # measured 1.6x slower on a 4M-doc corpus.
+    return (
+        wv.select(
+            doc_id.alias("doc_id"),
+            *[c.alias(name) for name, c in carry.items()],
+            F.explode_outer("violations").alias("v"),
+        )
+        .filter(F.col("v").isNotNull())
+        .select(
+            "doc_id",
+            *[F.col(f"v.{f}").alias(f) for f in VIOLATION_FIELD_NAMES],
+            *carry,
+        )
+    )
+
+
 def violations_df(
     df: DataFrame,
     ruleset: RuleSet | RuleSetGroup,
@@ -234,21 +256,7 @@ def violations_df(
     detail: bool = False,
 ) -> DataFrame:
     """Exploded violation rows ``(doc_id, span_path, rule_id, severity,
-    message)`` — the reference's report items (``JSONValidator.java:461-465``)."""
+    message)`` — the reference's report items (``JSONValidator.java:461-465``).
+    ``doc_id`` keeps the corpus's own type."""
     vdf = with_violations(df, ruleset, definitions, detail=detail)
-    # explode_outer + isNotNull, NOT plain explode: the optimizer guards a
-    # non-outer Generate with a size(violations)>0 pre-filter, and because
-    # higher-order functions are CodegenFallback (no cross-reference CSE)
-    # that filter re-evaluates the entire rule expression a second time —
-    # measured 1.6x slower on a 4M-doc corpus.
-    return (
-        vdf.select(F.col(doc_id).alias("doc_id"), F.explode_outer("violations").alias("v"))
-        .filter(F.col("v").isNotNull())
-        .select(
-            "doc_id",
-            F.col("v.span_path").alias("span_path"),
-            F.col("v.rule_id").alias("rule_id"),
-            F.col("v.severity").alias("severity"),
-            F.col("v.message").alias("message"),
-        )
-    )
+    return explode_violations(vdf, F.col(doc_id))

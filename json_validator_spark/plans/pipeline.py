@@ -3,13 +3,13 @@
 The reference's per-document loop (``RestValidationController.java:276-289``
 ``validateMultiple``; CLI loop ``ValidationRunner.java:141-192``) becomes
 ONE DataFrame pass: scan → salted repartition → row rules (narrow) →
-set checks (uniqueness groupBy + broadcast referential + single stats agg)
+set checks (uniqueness groupBy + broadcast referential)
 → union violations → verdicts/aggregate/metrics.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,12 +17,13 @@ from pyspark.sql import functions as F
 
 from json_validator_spark.operators import report as rpt
 from json_validator_spark.operators import set_checks as sc
-from json_validator_spark.operators.row_checks import with_violations
+from json_validator_spark.operators.row_checks import explode_violations, with_violations
+from json_validator_spark.rules.compiler import VIOLATION_FIELD_NAMES
 from json_validator_spark.rules.model import RuleSet, RuleSetGroup
 from json_validator_spark.session import size_shuffle_for
 
 
-def salted_repartition(df: DataFrame, n: int, key: str = "doc_id", salt_buckets: int = 16) -> DataFrame:
+def salted_repartition(df: DataFrame, n: int, key: str = "doc_id") -> DataFrame:
     """Explicit skew-spreading repartition (SURVEY §4.3.1).
 
     Media-heavy documents (100-1000 spans vs a 1-10 median) cluster in
@@ -37,7 +38,7 @@ def salted_repartition(df: DataFrame, n: int, key: str = "doc_id", salt_buckets:
     carried such a salt column and it was dead computation).
     Deterministic — a pure function of the key — so N-vs-4N runs see
     identical row→partition *groups* (partition count differs, content
-    hashes don't). ``salt_buckets`` is retained for API compatibility."""
+    hashes don't)."""
     return df.repartition(n, F.xxhash64(F.col(key)))
 
 
@@ -47,7 +48,6 @@ class RunResult:
     doc_verdicts: DataFrame    # (doc_id, n_errors, n_warnings, result) — row rules only, no join
     partition_verdicts: DataFrame
     aggregate: DataFrame       # (rule_id, severity, count)
-    stats: DataFrame | None    # column_stats output
     # row rules ∪ uniqueness ∪ referential ∪ plugins — the reference's
     # merged-TAR counter semantics (lazy; costs a join only if used)
     doc_verdicts_merged: DataFrame | None = None
@@ -59,7 +59,6 @@ class RunResult:
     # without an explicit persist, which costs more than it saves here —
     # measured: 7.2s two-action vs 4.0s single-action on a 1M-doc corpus).
     metrics: DataFrame | None = None
-    extras: dict[str, Any] = field(default_factory=dict)
 
 
 def validate_run(
@@ -68,15 +67,14 @@ def validate_run(
     ruleset: RuleSet | RuleSetGroup,
     definitions: dict[str, dict[str, Any]] | None = None,
     media_catalog: DataFrame | None = None,
-    stats_columns: list[str] | None = None,
     doc_id: str = "doc_id",
     repartition_to: int | None = None,
     check_uniqueness: bool = True,
     extra_violations: list[DataFrame] | None = None,
 ) -> RunResult:
     """The whole engine, one call. Everything row-level happens in a
-    single narrow projection; only uniqueness (groupBy) and the stats agg
-    shuffle, and the referential join broadcasts its dimension.
+    single narrow projection; only uniqueness (groupBy) and the report
+    aggregates shuffle, and the referential join broadcasts its dimension.
 
     ``extra_violations`` is the plugin fan-out hook
     (``JSONValidator.java:193-219``: configured plugin validators run
@@ -86,25 +84,17 @@ def validate_run(
     findings flow through verdicts / aggregate / metrics identically to
     built-in rules."""
     # Data-proportional wide start for the run's shuffles (uniqueness
-    # groupBy, stats agg): input_bytes/64MB initial partitions, floored
+    # groupBy, report aggs): input_bytes/64MB initial partitions, floored
     # at the session base — see session.size_shuffle_for.
     size_shuffle_for(spark, docs)
     if repartition_to:
         docs = salted_repartition(docs, repartition_to, key=doc_id)
 
     wv = with_violations(docs, ruleset, definitions)
-    # explode_outer: see operators/row_checks.violations_df — avoids the
-    # optimizer's size>0 pre-filter double-evaluating the rule expression.
     # __pid rides along so `metrics` can count failing partitions from
     # the SAME subtree (same partition ids partition_verdicts sees).
-    row_viols_tagged = (
-        wv.select(
-            F.col(doc_id).cast("string").alias("doc_id"),
-            F.spark_partition_id().alias("__pid"),
-            F.explode_outer("violations").alias("v"),
-        )
-        .filter(F.col("v").isNotNull())
-        .select("doc_id", "v.span_path", "v.rule_id", "v.severity", "v.message", "__pid")
+    row_viols_tagged = explode_violations(
+        wv, F.col(doc_id).cast("string"), __pid=F.spark_partition_id()
     )
 
     def _untagged(df: DataFrame) -> DataFrame:
@@ -124,13 +114,12 @@ def validate_run(
                 )
             )
         )
-    _VIOL_COLS = ["doc_id", "span_path", "rule_id", "severity", "message"]
     for extra in extra_violations or []:
         all_viols.append(
             _untagged(
                 extra.select(
                     F.col("doc_id").cast("string").alias("doc_id"),
-                    *_VIOL_COLS[1:],
+                    *VIOLATION_FIELD_NAMES,
                 )
             )
         )
@@ -158,14 +147,11 @@ def validate_run(
         ).alias("n_failing_partitions"),
     )
 
-    stats = sc.column_stats(docs, stats_columns) if stats_columns else None
-
     return RunResult(
         violations=violations,
         doc_verdicts=rpt.doc_verdicts(wv, doc_id=doc_id),
         partition_verdicts=rpt.partition_verdicts(wv),
         aggregate=rpt.aggregate_report(violations),
-        stats=stats,
         doc_verdicts_merged=rpt.doc_verdicts_merged(docs, violations, doc_id=doc_id),
         metrics=metrics,
     )

@@ -2,12 +2,17 @@
 
 The analogue of the reference's schema parsing + keyword interpretation
 (``JSONValidator.java:321-345`` parse, ``:381-397`` evaluate), except the
-"interpretation" happens once at the driver: every rule compiles to ONE
-Column expression of type ``array<struct<span_path,rule_id,severity,
-message>>`` — the per-row violations that rule produces. The pipeline
-concatenates these arrays and explodes once, so the entire row-rule layer
-is a single narrow, whole-stage-codegen'd projection with zero shuffles
-and zero Python in the hot path.
+"interpretation" happens once at the driver: every rule compiles to
+Column expressions over ``array<struct<span_path,rule_id,severity,
+message>>`` — the per-row violations that rule produces. A doc-level
+rule compiles to its own array (``compile_rule``); a span-level rule
+compiles to one per-span struct (``span_violation_expr``) that
+``operators/row_checks`` fuses with its siblings into a single
+``transform`` over the spans array. The pipeline concatenates these
+arrays and explodes once, so the entire row-rule layer is a single
+narrow projection with zero shuffles. The span lambdas are
+higher-order functions, which Spark evaluates interpreted rather than
+in whole-stage codegen.
 
 ``$ref`` resolution inlines named definitions with a cycle guard,
 mirroring ``SchemaResolutionState.java:30-56``.
@@ -15,7 +20,6 @@ mirroring ``SchemaResolutionState.java:30-56``.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from typing import Any, Callable
 
 from pyspark.sql import Column
@@ -24,8 +28,15 @@ from pyspark.sql import functions as F
 from json_validator_spark.rules.model import Rule
 from json_validator_spark.rules.vocabulary import PRESENCE_KINDS, build_pass
 
-VIOLATION_FIELDS = "span_path string, rule_id string, severity string, message string"
+VIOLATION_FIELD_NAMES = ("span_path", "rule_id", "severity", "message")
+VIOLATION_FIELDS = ", ".join(f"{f} string" for f in VIOLATION_FIELD_NAMES)
 VIOLATION_ARRAY_TYPE = f"array<struct<{VIOLATION_FIELDS}>>"
+
+
+def severity_count(violations: Column, severity: str) -> Column:
+    """Number of ``severity`` entries in a per-row violations array."""
+    return F.size(F.filter(violations, lambda v: v["severity"] == severity))
+
 
 def _message(rule: Rule) -> str:
     """Static per-rule message from the locale-keyed catalog
@@ -149,15 +160,8 @@ def _span_guard(params: dict[str, Any]) -> Callable[[Column], Column] | None:
 
 
 # ----------------------------------------------------------------------
-# Compiled form
+# Compilation
 # ----------------------------------------------------------------------
-
-@dataclass(frozen=True)
-class CompiledRule:
-    rule: Rule
-    violations: Callable[[], Column]  # () -> array<struct<...>> per row
-    pass_flag: Callable[[], Column]   # () -> boolean per row (True = pass)
-
 
 def normalize_rule(
     rule: Rule, definitions: dict[str, dict[str, Any]] | None = None
@@ -207,17 +211,6 @@ def _uses_python_predicate(kind: str, params: dict[str, Any]) -> bool:
     )
 
 
-def compile_rule(
-    rule: Rule,
-    definitions: dict[str, dict[str, Any]] | None = None,
-    detail: bool = False,
-) -> CompiledRule:
-    r = normalize_rule(rule, definitions)
-    if r.level == "span":
-        return _compile_span_rule(r, detail)
-    return _compile_doc_rule(r, detail)
-
-
 def _null_wrapped(kind: str, value: Column, params: dict[str, Any]) -> Column:
     """JSON-Schema null semantics: absent value passes all keywords except
     the presence family (``required`` etc.)."""
@@ -227,16 +220,10 @@ def _null_wrapped(kind: str, value: Column, params: dict[str, Any]) -> Column:
     return F.when(value.isNull(), F.lit(True)).otherwise(raw)
 
 
-def _doc_value(rule: Rule) -> Column:
-    # F.get for positions: ANSI mode errors on out-of-range indexes,
-    # but a pointer past the end must read as absent (null).
-    return _pointer_value(rule.target)
-
-
 def _pointer_value(target: str) -> Column:
-    """Resolve a full JSON-pointer path to a Column — same traversal as
-    ``_doc_value`` (nested fields + positional F.get), for guards and
-    dependency targets that are NOT the rule's own target."""
+    """Resolve a full JSON-pointer path to a Column (nested fields +
+    positional F.get) — a doc rule's own target, its guards and its
+    dependency targets."""
     parts = target.strip("/").split("/")
     if parts == [""]:
         # document-root target ("/"): no single column carries "the whole
@@ -244,47 +231,47 @@ def _pointer_value(target: str) -> Column:
         # anchor here, and their predicates ignore the value
         return F.lit(None).cast("string")
     col: Column = F.col(parts[0])
+    # F.get for positions: ANSI mode errors on out-of-range indexes,
+    # but a pointer past the end must read as absent (null).
     for p in parts[1:]:
         col = col[p] if not p.isdigit() else F.get(col, int(p))
     return col
 
 
-def _compile_doc_rule(rule: Rule, detail: bool = False) -> CompiledRule:
-    value = _doc_value(rule)
-
-    def pass_flag() -> Column:
-        if rule.kind == "dependentRequired":
-            # full-pointer resolution: '/meta/lang' must test meta.lang,
-            # not the whole meta struct
-            if_val = _pointer_value(rule.params["if_target"])
-            return F.when(if_val.isNotNull(), value.isNotNull()).otherwise(F.lit(True))
+def compile_rule(rule: Rule, detail: bool = False) -> Column:
+    """A doc-level rule → its per-row violations array (one violation or
+    null). ``rule`` must already be normalized (``normalize_rule``);
+    span-level rules compile through ``span_violation_expr`` instead."""
+    if rule.level == "span":
+        raise ValueError(
+            f"rule {rule.rule_id!r}: span target {rule.target!r} compiles "
+            "through span_violation_expr, not the doc-rule compiler"
+        )
+    value = _pointer_value(rule.target)
+    if rule.kind == "dependentRequired":
+        # full-pointer resolution: '/meta/lang' must test meta.lang,
+        # not the whole meta struct
+        if_val = _pointer_value(rule.params["if_target"])
+        ok = F.when(if_val.isNotNull(), value.isNotNull()).otherwise(F.lit(True))
+    else:
         ok = _null_wrapped(rule.kind, value, rule.params)
         w = rule.params.get("when_doc")
         if w:  # doc-level guard: apply only when another column matches
             gv = _pointer_value(w["target"])
             g = gv == F.lit(w["eq"]) if "eq" in w else gv.isin(list(w["in"]))
             ok = F.when(gv.isNotNull() & g, ok).otherwise(F.lit(True))
-        return ok
-
-    def violations() -> Column:
-        v = F.struct(
-            F.lit(rule.target).alias("span_path"),
-            F.lit(rule.rule_id).alias("rule_id"),
-            F.lit(rule.severity).alias("severity"),
-            _message_col(rule, value, detail).alias("message"),
-        )
-        return F.when(~pass_flag(), F.array(v)).otherwise(
-            F.lit(None).cast(VIOLATION_ARRAY_TYPE)
-        )
-
-    return CompiledRule(rule, violations, pass_flag)
+    v = F.struct(
+        F.lit(rule.target).alias("span_path"),
+        F.lit(rule.rule_id).alias("rule_id"),
+        F.lit(rule.severity).alias("severity"),
+        _message_col(rule, value, detail).alias("message"),
+    )
+    return F.when(~ok, F.array(v)).otherwise(F.lit(None).cast(VIOLATION_ARRAY_TYPE))
 
 
 def _per_span_ok(rule: Rule, s: Column) -> Column:
-    """Pass predicate for ONE span struct value — used both inside the
-    array lambda (`_compile_span_rule`) and over a posexploded scalar
-    struct column (`span_violation_expr`, the whole-stage-codegen fast
-    path)."""
+    """Pass predicate for ONE span struct value ``s`` (the lambda
+    variable of the fused spans ``transform``)."""
     fld = rule.span_field
     guard = _span_guard(rule.params)
     if rule.kind == "dependentRequired":
@@ -300,11 +287,10 @@ def _per_span_ok(rule: Rule, s: Column) -> Column:
 def span_violation_expr(
     rule: Rule, s: Column, i: Column, detail: bool = False
 ) -> Column:
-    """``when(span fails rule, violation struct)`` over an EXPLODED span:
-    ``s`` is the span struct value, ``i`` its position. Pure scalar
-    expressions — stays inside whole-stage codegen, unlike the
-    higher-order-function array path (HOFs are CodegenFallback and run
-    interpreted)."""
+    """``when(span fails rule, violation struct)`` for one span: ``s`` is
+    the span struct value, ``i`` its position in the spans array. Called
+    inside the fused per-span lambda of ``row_checks._branch_violations``,
+    so it runs interpreted with the rest of the higher-order function."""
     v = F.struct(
         F.concat(
             F.lit(f"/{rule.column}/"), i.cast("string"), F.lit(f"/{rule.span_field}")
@@ -316,34 +302,3 @@ def span_violation_expr(
     return F.when(~_per_span_ok(rule, s), v).otherwise(
         F.lit(None).cast(f"struct<{VIOLATION_FIELDS}>")
     )
-
-
-def _compile_span_rule(rule: Rule, detail: bool = False) -> CompiledRule:
-    spans_col = rule.column  # e.g. "spans"
-    fld = rule.span_field
-
-    def per_span_ok(s: Column) -> Column:
-        return _per_span_ok(rule, s)
-
-    def violations() -> Column:
-        def per_elem(s: Column, i: Column) -> Column:
-            v = F.struct(
-                F.concat(
-                    F.lit(f"/{spans_col}/"), i.cast("string"), F.lit(f"/{fld}")
-                ).alias("span_path"),
-                F.lit(rule.rule_id).alias("rule_id"),
-                F.lit(rule.severity).alias("severity"),
-                _message_col(rule, s[fld], detail).alias("message"),
-            )
-            return F.when(~per_span_ok(s), v).otherwise(
-                F.lit(None).cast(f"struct<{VIOLATION_FIELDS}>")
-            )
-
-        return F.filter(
-            F.transform(F.col(spans_col), per_elem), lambda x: x.isNotNull()
-        )
-
-    def pass_flag() -> Column:
-        return F.forall(F.col(spans_col), per_span_ok) | F.col(spans_col).isNull()
-
-    return CompiledRule(rule, violations, pass_flag)

@@ -25,6 +25,7 @@ never data-scale, so nothing here touches the distributed plan.
 from __future__ import annotations
 
 import json
+import urllib.request
 from pathlib import Path
 from typing import Any, Callable
 
@@ -170,8 +171,9 @@ def http_fetcher(
     (``LocalSchemaResolver.java:71-85`` cache-miss network fetch, gated
     by the ``ImportedUriAuthorizer`` at ``:76-79``). Only constructible
     with a NON-EMPTY explicit prefix allowlist: the fetcher re-checks
-    the prefix itself (defense in depth — the registry's
-    authorize-then-fetch gate is the primary check), enforces a
+    the prefix itself, and again on every redirect hop (defense in
+    depth — the registry's authorize-then-fetch gate is the primary
+    check and never sees redirects), enforces a
     wall-clock timeout and a response size cap, requires http(s), and
     accepts only a JSON object body. Driver-side, config-scale: one
     fetch per distinct URI, cached by ``SchemaRegistry.resolve``.
@@ -193,18 +195,28 @@ def http_fetcher(
                 f"allowed URI prefix {p!r} must start with http:// or https://"
             )
 
-    def fetch(uri: str) -> dict[str, Any]:
-        import urllib.request
-
+    def authorize(uri: str, what: str) -> None:
         if not any(uri.startswith(p) for p in prefixes):
             raise PermissionError(
-                f"remote $ref target {uri!r} not authorized: outside the "
+                f"{what} {uri!r} not authorized: outside the "
                 f"allowed URI prefixes {prefixes!r} "
                 "(authorize-then-fetch, LocalSchemaResolver.java:78)"
             )
+
+    class AuthorizedRedirects(urllib.request.HTTPRedirectHandler):
+        # every 3xx hop is re-authorized before it is requested: the
+        # default opener would follow a redirect to any host
+        def redirect_request(self, req, fp, code, msg, headers, newurl):
+            authorize(newurl, f"redirect ({code}) from {req.full_url!r} to")
+            return super().redirect_request(req, fp, code, msg, headers, newurl)
+
+    opener = urllib.request.build_opener(AuthorizedRedirects)
+
+    def fetch(uri: str) -> dict[str, Any]:
+        authorize(uri, "remote $ref target")
         req = urllib.request.Request(
             uri, headers={"Accept": "application/json"})
-        with urllib.request.urlopen(req, timeout=timeout_s) as resp:
+        with opener.open(req, timeout=timeout_s) as resp:
             body = resp.read(max_bytes + 1)
         if len(body) > max_bytes:
             raise ValueError(

@@ -27,7 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from json_validator_spark.operators.row_checks import with_violations
+from json_validator_spark.operators.row_checks import explode_violations, with_violations
+from json_validator_spark.rules.compiler import severity_count
 from json_validator_spark.rules.model import RuleSet
 
 
@@ -53,11 +54,7 @@ def validate_stream(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(input_path)
     wv = with_violations(stream, ruleset, definitions)
-    viols = (
-        wv.select(F.col(doc_id).cast("string").alias("doc_id"), F.explode_outer("violations").alias("v"))
-        .filter(F.col("v").isNotNull())
-        .select("doc_id", "v.span_path", "v.rule_id", "v.severity", "v.message")
-    )
+    viols = explode_violations(wv, F.col(doc_id).cast("string"))
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         write_batch_idempotent(batch, batch_id, f"{output_path}/violations")
@@ -107,7 +104,7 @@ def windowed_violation_rates(
     is_stream = wv.isStreaming
     if is_stream:
         wv = wv.withWatermark(ts_col, watermark)
-    n_err = F.size(F.filter(F.col("violations"), lambda v: v["severity"] == "error"))
+    n_err = severity_count(F.col("violations"), "error")
     return (
         wv.select(F.col(ts_col), n_err.alias("n_err"))
         .groupBy(F.window(ts_col, window).alias("w"))

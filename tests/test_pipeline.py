@@ -31,7 +31,7 @@ def test_validate_run_end_to_end(spark):
     cat = synth_media_catalog(spark)
     res = validate_run(
         spark, docs, corpus_ruleset(), media_catalog=cat,
-        stats_columns=["doc_id"], repartition_to=8,
+        repartition_to=8,
     )
     viols = _viol_set(res)
     assert len(viols) > 0
@@ -76,8 +76,11 @@ def test_run_metrics_clean_corpus_zero_counters(spark):
 
     docs = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, s string")
     rs = RuleSet(rules=(Rule("req.s", "/s", "required"),))
-    m = validate_run(spark, docs, rs, check_uniqueness=False).metrics.collect()[0]
+    res = validate_run(spark, docs, rs, check_uniqueness=False)
+    m = res.metrics.collect()[0]
     assert (m["n_violations"], m["n_errors"], m["n_warnings"], m["n_failing_partitions"]) == (0, 0, 0, 0)
+    # the merged violation stream carries doc_id as string whatever the corpus type
+    assert dict(res.violations.dtypes)["doc_id"] == "string"
 
 
 def test_determinism_across_parallelism(spark):

@@ -206,9 +206,16 @@ def test_warning_severity_does_not_fail_doc(spark):
     assert verdicts == {("d1", "SUCCESS", 1)}
 
 
-def test_unknown_kind_raises():
+@pytest.mark.parametrize("target", ["/v", "/spans/*/kind"], ids=["doc", "span"])
+def test_unknown_kind_raises(spark, target):
+    rs = RuleSet(rules=(Rule("x", target, "no-such-keyword"),))
     with pytest.raises(ValueError, match="unknown rule kind"):
-        compile_rule(Rule("x", "/v", "no-such-keyword")).violations()
+        violations_df(docs_df(spark, []), rs)
+
+
+def test_doc_compiler_rejects_span_rule():
+    with pytest.raises(ValueError, match="span_violation_expr"):
+        compile_rule(Rule("x", "/spans/*/kind", "enum", {"values": ["text"]}))
 
 
 # ----------------------------------------------------------------------

@@ -1712,7 +1712,8 @@ def test_import_recursive_ref_error_shapes():
 @pytest.fixture()
 def _local_http():
     """Loopback HTTP server serving canned schema bytes and counting
-    hits per path — no external network involved."""
+    hits per path — no external network involved. A ``str`` value in
+    ``docs`` is served as a 302 redirect to that location."""
     import http.server
     import threading
 
@@ -1725,6 +1726,11 @@ def _local_http():
             body = docs.get(self.path)
             if body is None:
                 self.send_error(404)
+                return
+            if isinstance(body, str):
+                self.send_response(302)
+                self.send_header("Location", body)
+                self.end_headers()
                 return
             self.send_response(200)
             self.send_header("Content-Type", "application/json")
@@ -1791,6 +1797,27 @@ def test_http_fetcher_unauthorized_prefix_raises(_local_http):
             registry=reg,
         )
     assert hits == {}  # authorize-THEN-fetch: denial precedes any request
+
+
+def test_http_fetcher_reauthorizes_every_redirect_hop(_local_http):
+    import json as _json
+
+    from json_validator_spark.rules.schema_registry import http_fetcher
+
+    base, docs, hits = _local_http
+    schema = {"$defs": {"cap": {"maximum": 10}}}
+    docs["/allowed/moved.json"] = f"{base}/allowed/x.json"
+    docs["/allowed/x.json"] = _json.dumps(schema).encode()
+    docs["/allowed/escape.json"] = f"{base}/other/x.json"
+    docs["/other/x.json"] = _json.dumps(schema).encode()
+    fetch = http_fetcher([base + "/allowed/"])
+    # a hop inside the allowlist is followed
+    assert fetch(f"{base}/allowed/moved.json") == schema
+    # a hop outside it is refused before the target is requested
+    with pytest.raises(PermissionError, match="redirect .* not authorized"):
+        fetch(f"{base}/allowed/escape.json")
+    assert "/other/x.json" not in hits
+    assert hits["/allowed/escape.json"] == 1
 
 
 def test_http_fetcher_rejects_non_json_and_preload_wins(_local_http):

@@ -34,9 +34,10 @@ def test_validate_stream_matches_batch(tmp_path, spark, landing):
     q.awaitTermination(120)
 
     streamed = spark.read.parquet(f"{out}/violations").drop("batch_id")
-    batch = violations_df(corpus, derived_corpus_ruleset()).withColumn(
-        "doc_id", F.col("doc_id").cast("string")
-    )
+    batch = violations_df(corpus, derived_corpus_ruleset())
+    # violations_df keeps the corpus's own id type; the stream casts
+    assert dict(batch.dtypes)["doc_id"] == "bigint"
+    batch = batch.withColumn("doc_id", F.col("doc_id").cast("string"))
     assert rows_set(streamed) == rows_set(batch)
 
     # second batch of new files → incremental, no reprocessing of batch 1

@@ -116,7 +116,7 @@ def main() -> None:
         res = validate_run(
             spark, spark.read.parquet(corpus_path), corpus_ruleset(),
             media_catalog=synth_media_catalog(spark),
-            stats_columns=None, check_uniqueness=True,
+            check_uniqueness=True,
         )
         m = res.metrics.collect()[0]
         wall = time.perf_counter() - t0
