@@ -121,11 +121,9 @@ def main() -> None:
             spark, docs, corpus_ruleset(), media_catalog=catalog,
             check_uniqueness=True,
         )
-        # ONE action: the merged-stream metrics agg evaluates the whole
-        # pipeline once (violation count + failing row-rule partitions).
-        # Counting violations and partition verdicts as separate actions
-        # evaluates the rule projection twice — measured 7.2s vs 4.0s on
-        # this corpus (equivalence asserted in
+        # validate_run has already evaluated the rules once into its
+        # materialized frames; metrics is a small agg over them
+        # (equivalence with the other RunResult fields asserted in
         # tests/test_pipeline.py::test_run_metrics_single_action).
         m = res.metrics.collect()[0]
         return m["n_violations"], m["n_failing_partitions"]

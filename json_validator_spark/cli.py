@@ -100,16 +100,9 @@ def cmd_validate(args: argparse.Namespace) -> int:
         docs = jsonl_valid(raw)
         corrupt = jsonl_corrupt_violations(raw)
         extra = (extra or []) + [corrupt]
-        # the verdict surface must FAIL corrupt uploads like the
-        # reference does: include their surrogate ids in the per-doc base
-        from pyspark.sql import functions as F
-
-        verdict_base = docs.select(F.col("doc_id").cast("string").alias("doc_id")).unionByName(
-            corrupt.select("doc_id")
-        )
     else:
         docs = load_table(spark, args.input)
-        verdict_base = docs
+        corrupt = None
     media = load_table(spark, args.media_catalog) if args.media_catalog else None
     definitions = None
     if args.schema:
@@ -143,7 +136,6 @@ def cmd_validate(args: argparse.Namespace) -> int:
         ruleset = _load_ruleset(args.rules)
 
     t0 = time.perf_counter()
-    partition_verdicts = None
     if args.checkpoint:
         from json_validator_spark.plans.checkpoint import (
             read_violations,
@@ -155,22 +147,39 @@ def cmd_validate(args: argparse.Namespace) -> int:
             media_catalog=media, extra_violations=extra, definitions=definitions,
         )
         violations = read_violations(spark, args.checkpoint)
+        doc_ids = docs
+        verdicts = doc_verdicts_merged(doc_ids, violations)
+        partition_verdicts = None
+        aggregate = aggregate_report(violations)
     else:
+        # every table below is derived from the run's materialized frames
         res = validate_run(
             spark, docs, ruleset, definitions=definitions, media_catalog=media,
             repartition_to=args.repartition,
             extra_violations=extra,
         )
         violations = res.violations
+        doc_ids = res.doc_verdicts  # one row per doc, no corpus re-scan
+        verdicts = res.doc_verdicts_merged
         partition_verdicts = res.partition_verdicts
+        aggregate = res.aggregate
+    if corrupt is not None:
+        # the verdict surface must FAIL corrupt uploads like the
+        # reference does: include their surrogate ids in the per-doc base
+        from pyspark.sql import functions as F
+
+        verdict_base = doc_ids.select(
+            F.col("doc_id").cast("string").alias("doc_id")
+        ).unionByName(corrupt.select("doc_id"))
+        verdicts = doc_verdicts_merged(verdict_base, violations)
     # same verdict surface in both modes: {output}/verdicts is ALWAYS
     # per-doc merged-TAR rows (doc_id, n_errors, n_warnings, result);
     # the partition rollup gets its own table where there is one
     write_table(ordered(violations), f"{args.output}/violations")
-    write_table(doc_verdicts_merged(verdict_base, violations), f"{args.output}/verdicts")
+    write_table(verdicts, f"{args.output}/verdicts")
     if partition_verdicts is not None:
         write_table(partition_verdicts, f"{args.output}/partition_verdicts")
-    write_table(aggregate_report(violations), f"{args.output}/aggregate")
+    write_table(aggregate, f"{args.output}/aggregate")
     if args.format == "xml":
         import datetime as _dt
 
@@ -182,7 +191,7 @@ def cmd_validate(args: argparse.Namespace) -> int:
 
         now = _dt.datetime.now(_dt.timezone.utc).isoformat(timespec="seconds")
         write_tar_xml_reports(
-            tar_reports_from_violations(docs, violations),
+            tar_reports_from_violations(doc_ids, violations),
             f"{args.output}/xml",
             max_docs=args.xml_max,
             date=now,
@@ -205,7 +214,7 @@ def cmd_validate(args: argparse.Namespace) -> int:
 
         now = _dt.datetime.now(_dt.timezone.utc).isoformat(timespec="seconds")
         write_tar_pdf_reports(
-            tar_reports_from_violations(docs, violations),
+            tar_reports_from_violations(doc_ids, violations),
             f"{args.output}/pdf",
             max_docs=args.xml_max,
             date=now,

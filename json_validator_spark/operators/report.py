@@ -29,9 +29,9 @@ def doc_verdicts(with_viols: DataFrame, doc_id: str = "doc_id") -> DataFrame:
     n_warn = severity_count(F.col("violations"), "warning")
     # result derives from n_errors, not doc_pass: by construction every
     # failing combination emits ≥1 error-severity violation (ANY/ONE_OF
-    # failures add an error header), and referencing doc_pass would
-    # re-evaluate every branch expression a third time (HOFs are
-    # CodegenFallback — each reference is a full re-evaluation).
+    # failures add an error header), so the violations array alone
+    # decides the verdict — which lets validate_run keep only that array
+    # in its materialized per-doc frame.
     return with_viols.select(
         F.col(doc_id).alias("doc_id"),
         n_err.alias("n_errors"),
@@ -78,14 +78,19 @@ def doc_verdicts_merged(
 
 def partition_verdicts(with_viols: DataFrame) -> DataFrame:
     """Per-partition pass/fail rollup ``(partition_id, n_docs, n_errors,
-    result)`` — the verdict unit named by the north star; partial
-    (map-side) aggregation means one tiny row per partition hits the
-    shuffle."""
+    result)`` over the partitions ``with_viols`` is evaluated in — the
+    verdict unit named by the north star."""
+    return partition_rollup(with_viols.withColumn("__pid", F.spark_partition_id()))
+
+
+def partition_rollup(tagged: DataFrame) -> DataFrame:
+    """``partition_verdicts`` of a frame that carries its ``violations``
+    array and, as ``__pid``, the partition id it was evaluated in (the
+    per-doc frame ``validate_run`` materializes); partial (map-side)
+    aggregation means one tiny row per partition hits the shuffle."""
     n_err = severity_count(F.col("violations"), "error")
     return (
-        with_viols.select(
-            F.spark_partition_id().alias("partition_id"), n_err.alias("n_err")
-        )
+        tagged.select(F.col("__pid").alias("partition_id"), n_err.alias("n_err"))
         .groupBy("partition_id")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -168,14 +173,12 @@ def _empty_items():
 def tar_reports_from_violations(
     docs: DataFrame, violations: DataFrame, doc_id: str = "doc_id"
 ) -> DataFrame:
-    """``tar_reports`` computed from the exploded violation stream in ONE
-    aggregation: counters (nrOfErrors/nrOfWarnings) and the sorted
+    """``tar_reports`` computed from the exploded violation stream alone,
+    in ONE aggregation: counters (nrOfErrors/nrOfWarnings) and the sorted
     report-item list come out of the same groupBy, then left-join back
-    to the corpus ids so clean docs get SUCCESS rows. Use this when the
-    violations are already materialized (the pipeline's normal state) —
-    passing separately-derived verdicts + violations into
-    ``tar_reports`` evaluates the rule projection once per consumer
-    subtree, twice the scan work for the same output."""
+    to the ids in ``docs`` so clean docs get SUCCESS rows. ``docs`` only
+    supplies the ids: the corpus, or any frame with one row per doc
+    (``RunResult.doc_verdicts``)."""
     agg = (
         violations.groupBy(F.col("doc_id").cast("string").alias("__d"))
         .agg(

@@ -112,28 +112,21 @@ def _run_pending(
     if not pending:
         return []
 
-    subset = docs.withColumn("__bucket", bucket_col(doc_id, n_buckets)).filter(
-        F.col("__bucket").isin(pending)
-    )
+    subset = docs.filter(bucket_col(doc_id, n_buckets).isin(pending))
     extra_subset = [
         e.filter(bucket_col("doc_id", n_buckets).isin(pending))
         for e in extra_violations or []
     ]
-    result = validate_run(
-        spark, subset.drop("__bucket"), ruleset, definitions=definitions,
-        doc_id=doc_id, check_uniqueness=False, media_catalog=media_catalog,
-        extra_violations=extra_subset or None,
-    )
     # uniqueness within the whole corpus can't be bucketed arbitrarily —
     # but bucketing BY doc_id hash means duplicates co-locate in one
-    # bucket, so per-bucket uniqueness == global uniqueness. Run it on
-    # the subset with the bucket column retained.
-    from json_validator_spark.operators.set_checks import uniqueness_violations
-
-    viols = result.violations.unionByName(uniqueness_violations(subset.drop("__bucket"), key=doc_id))
-    # persist: three actions below (violations write, error counts,
-    # metrics write) would otherwise re-execute the full rule DAG 3x
-    out = viols.withColumn("bucket", bucket_col("doc_id", n_buckets)).persist()
+    # bucket, so per-bucket uniqueness == global uniqueness.
+    result = validate_run(
+        spark, subset, ruleset, definitions=definitions, doc_id=doc_id,
+        media_catalog=media_catalog, extra_violations=extra_subset or None,
+    )
+    # result's frames are materialized: the actions below (violations
+    # write, per-bucket counts, metrics write) re-run no rule
+    out = result.violations.withColumn("bucket", bucket_col("doc_id", n_buckets))
 
     # clear the pending buckets' directories first: dynamic overwrite
     # only replaces partitions PRESENT in the new data, so a redone
@@ -146,7 +139,9 @@ def _run_pending(
     )
 
     per_bucket = (
-        subset.groupBy("__bucket").agg(F.count(F.lit(1)).alias("n_docs")).collect()
+        result.doc_verdicts.groupBy(bucket_col("doc_id", n_buckets).alias("__bucket"))
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+        .collect()
     )
     err_by_bucket = {
         r["bucket"]: r["n"]
@@ -180,7 +175,6 @@ def _run_pending(
     spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).write.mode("append").parquet(
         os.path.join(ckpt_dir, "lineage")
     )
-    out.unpersist()
     return pending
 
 

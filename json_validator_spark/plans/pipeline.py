@@ -2,9 +2,12 @@
 
 The reference's per-document loop (``RestValidationController.java:276-289``
 ``validateMultiple``; CLI loop ``ValidationRunner.java:141-192``) becomes
-ONE DataFrame pass: scan → salted repartition → row rules (narrow) →
-set checks (uniqueness groupBy + broadcast referential)
-→ union violations → verdicts/aggregate/metrics.
+one set-based run: scan → salted repartition → row rules (one narrow
+projection, materialized per doc) → set checks (uniqueness groupBy +
+broadcast referential) → one materialized violation stream. Verdicts,
+partition verdicts, aggregate and metrics are all derived from those two
+materialized frames, so the rules are evaluated once per run however
+many reports the caller writes.
 """
 
 from __future__ import annotations
@@ -45,19 +48,14 @@ def salted_repartition(df: DataFrame, n: int, key: str = "doc_id") -> DataFrame:
 @dataclass
 class RunResult:
     violations: DataFrame      # (doc_id, span_path, rule_id, severity, message)
-    doc_verdicts: DataFrame    # (doc_id, n_errors, n_warnings, result) — row rules only, no join
-    partition_verdicts: DataFrame
+    doc_verdicts: DataFrame    # (doc_id, n_errors, n_warnings, result) — row rules only
+    partition_verdicts: DataFrame  # (partition_id, n_docs, n_errors, result) — row rules only
     aggregate: DataFrame       # (rule_id, severity, count)
     # row rules ∪ uniqueness ∪ referential ∪ plugins — the reference's
-    # merged-TAR counter semantics (lazy; costs a join only if used)
+    # merged-TAR counter semantics
     doc_verdicts_merged: DataFrame | None = None
-    # ONE-ACTION run metrics: (n_violations, n_errors, n_warnings,
-    # n_failing_partitions) over the merged stream. Collecting this is
-    # ONE evaluation of the whole pipeline; collecting violations.count()
-    # and a partition_verdicts action separately evaluates the rule
-    # projection once per action (Spark shares no work between actions
-    # without an explicit persist, which costs more than it saves here —
-    # measured: 7.2s two-action vs 4.0s single-action on a 1M-doc corpus).
+    # one-row run metrics (n_violations, n_errors, n_warnings,
+    # n_failing_partitions) over the merged stream
     metrics: DataFrame | None = None
 
 
@@ -76,6 +74,22 @@ def validate_run(
     single narrow projection; only uniqueness (groupBy) and the report
     aggregates shuffle, and the referential join broadcasts its dimension.
 
+    The rules are evaluated exactly once, before this returns, into two
+    frames materialized with ``localCheckpoint(eager=True)``:
+
+    - the per-doc frame ``(doc_id, __pid, violations)``, where ``__pid``
+      is the partition the rules ran in;
+    - the merged violation stream (row rules ∪ uniqueness ∪ referential
+      ∪ extras), carrying ``__pid`` (NULL on set-layer rows).
+
+    Every ``RunResult`` field is a cheap plan over those two frames, so
+    writing all of them costs no second rule evaluation or corpus scan.
+    A local checkpoint leaves no cache entry to unpersist, but its blocks
+    live on the executors and are not recomputed from lineage: losing an
+    executor loses them. At a scale where that matters,
+    ``plans/checkpoint.run_with_checkpoint`` is the recovery unit — it
+    runs this per bucket set and commits each bucket's output.
+
     ``extra_violations`` is the plugin fan-out hook
     (``JSONValidator.java:193-219``: configured plugin validators run
     after the schema pass and their TAR reports merge into one): each
@@ -90,17 +104,24 @@ def validate_run(
     if repartition_to:
         docs = salted_repartition(docs, repartition_to, key=doc_id)
 
-    wv = with_violations(docs, ruleset, definitions)
-    # __pid rides along so `metrics` can count failing partitions from
-    # the SAME subtree (same partition ids partition_verdicts sees).
-    row_viols_tagged = explode_violations(
-        wv, F.col(doc_id).cast("string"), __pid=F.spark_partition_id()
+    per_doc = (
+        with_violations(docs, ruleset, definitions)
+        .select(
+            F.col(doc_id).alias("doc_id"),
+            F.spark_partition_id().alias("__pid"),
+            "violations",
+        )
+        .localCheckpoint(eager=True)
     )
 
     def _untagged(df: DataFrame) -> DataFrame:
         return df.withColumn("__pid", F.lit(None).cast("int"))
 
-    all_viols = [row_viols_tagged]
+    all_viols = [
+        explode_violations(
+            per_doc, F.col("doc_id").cast("string"), __pid=F.col("__pid")
+        )
+    ]
     if check_uniqueness:
         all_viols.append(_untagged(sc.uniqueness_violations(docs, key=doc_id)))
     if media_catalog is not None:
@@ -126,12 +147,12 @@ def validate_run(
     tagged = all_viols[0]
     for v in all_viols[1:]:
         tagged = tagged.unionByName(v)
+    tagged = tagged.localCheckpoint(eager=True)
     violations = tagged.drop("__pid")
 
-    # One global agg over the merged stream: total/error/warning counts
-    # plus failing row-rule partitions (distinct __pid among error rows;
-    # set-layer rows carry NULL __pid and are excluded, matching
-    # partition_verdicts' row-rule scope). Collect = one pipeline pass.
+    # Total/error/warning counts plus failing row-rule partitions
+    # (distinct __pid among error rows; set-layer rows carry NULL __pid
+    # and are excluded, matching partition_verdicts' row-rule scope).
     # coalesce: F.sum over an EMPTY stream is NULL — a fully clean corpus
     # must report 0 counters, not None
     metrics = tagged.agg(
@@ -149,9 +170,9 @@ def validate_run(
 
     return RunResult(
         violations=violations,
-        doc_verdicts=rpt.doc_verdicts(wv, doc_id=doc_id),
-        partition_verdicts=rpt.partition_verdicts(wv),
+        doc_verdicts=rpt.doc_verdicts(per_doc),
+        partition_verdicts=rpt.partition_rollup(per_doc),
         aggregate=rpt.aggregate_report(violations),
-        doc_verdicts_merged=rpt.doc_verdicts_merged(docs, violations, doc_id=doc_id),
+        doc_verdicts_merged=rpt.doc_verdicts_merged(per_doc, violations),
         metrics=metrics,
     )

@@ -3,8 +3,12 @@ invariant, checkpoint/resume identity (SURVEY §5.2 items 4-5)."""
 
 from __future__ import annotations
 
+import contextlib
+import io
 import uuid
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from json_validator_spark.corpus import corpus_ruleset
@@ -81,6 +85,114 @@ def test_run_metrics_clean_corpus_zero_counters(spark):
     assert (m["n_violations"], m["n_errors"], m["n_warnings"], m["n_failing_partitions"]) == (0, 0, 0, 0)
     # the merged violation stream carries doc_id as string whatever the corpus type
     assert dict(res.violations.dtypes)["doc_id"] == "string"
+
+
+def test_validate_run_evaluates_rules_once(spark, tmp_path):
+    """Writing every report table of a run and collecting its metrics
+    evaluates the rule projection and the extra violations once each: a
+    counting UDF feeding each reads exactly its row count."""
+    from pyspark.sql.types import LongType, StringType
+
+    from json_validator_spark.operators.report import ordered
+    from json_validator_spark.rules.model import Rule, RuleSet
+
+    doc_calls = spark.sparkContext.accumulator(0)
+    extra_calls = spark.sparkContext.accumulator(0)
+
+    @F.udf(LongType())
+    def counted_score(doc_id):
+        doc_calls.add(1)
+        return doc_id % 10
+
+    @F.udf(StringType())
+    def counted_message(doc_id):
+        extra_calls.add(1)
+        return f"plugin finding {doc_id}"
+
+    n_docs, n_extra = 400, 30
+    docs = spark.range(n_docs).select(
+        F.col("id").alias("doc_id"), counted_score("id").alias("score")
+    )
+    extra = spark.range(n_extra).select(
+        F.col("id").alias("doc_id"),
+        F.lit("/").alias("span_path"),
+        F.lit("plugin.note").alias("rule_id"),
+        F.lit("warning").alias("severity"),
+        counted_message("id").alias("message"),
+    )
+    rs = RuleSet(rules=(Rule("cap.score", "/score", "maximum", {"value": 5}),))
+    res = validate_run(spark, docs, rs, extra_violations=[extra])
+
+    ordered(res.violations).write.parquet(str(tmp_path / "violations"))
+    res.doc_verdicts_merged.write.parquet(str(tmp_path / "verdicts"))
+    res.partition_verdicts.write.parquet(str(tmp_path / "partition_verdicts"))
+    res.aggregate.write.parquet(str(tmp_path / "aggregate"))
+    m = res.metrics.collect()[0]
+
+    # scores 6..9 break the cap: 4 of every 10 docs
+    assert (m["n_errors"], m["n_warnings"]) == (n_docs * 4 // 10, n_extra)
+    assert doc_calls.value == n_docs
+    assert extra_calls.value == n_extra
+
+
+@pytest.mark.parametrize("repartition", [None, 8])
+def test_cli_tables_match_independent_derivation(spark, tmp_path, repartition):
+    """The four ``cli validate`` tables equal the same tables built
+    without ``validate_run``, from the row-rule, uniqueness and
+    referential operators on their own; neither a plain nor a
+    ``--checkpoint`` run leaves a cache entry behind."""
+    from json_validator_spark.cli import main
+    from json_validator_spark.operators import report as rpt
+    from json_validator_spark.operators import set_checks as sc
+    from json_validator_spark.operators.row_checks import violations_df, with_violations
+
+    docs_path, cat_path = str(tmp_path / "docs"), str(tmp_path / "media")
+    synth_documents(spark, 1200).write.parquet(docs_path)
+    synth_media_catalog(spark).write.parquet(cat_path)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+
+    def cli(out: str, *extra_args: str) -> dict[str, Counter]:
+        argv = ["validate", "--input", docs_path, "--output", out,
+                "--media-catalog", cat_path, *extra_args]
+        with contextlib.redirect_stdout(io.StringIO()):
+            assert main(argv) == 0
+        assert cache.isEmpty()
+        return {
+            name: Counter(map(tuple, spark.read.parquet(f"{out}/{name}").collect()))
+            for name in ("violations", "verdicts", "partition_verdicts", "aggregate")
+            if name != "partition_verdicts" or "--checkpoint" not in extra_args
+        }
+
+    docs = spark.read.parquet(docs_path)
+    if repartition:
+        docs = salted_repartition(docs, repartition)
+    rs = corpus_ruleset()
+    violations = (
+        violations_df(docs, rs)
+        .withColumn("doc_id", F.col("doc_id").cast("string"))
+        .unionByName(sc.uniqueness_violations(docs))
+        .unionByName(
+            sc.referential_violations(
+                sc.span_media_refs(docs), "media_ref", spark.read.parquet(cat_path),
+                "media_ref", rule_id="ref.media_catalog", span_path=F.col("span_path"),
+            )
+        )
+    )
+    expected = {
+        "violations": rpt.ordered(violations),
+        "verdicts": rpt.doc_verdicts_merged(docs, violations),
+        "partition_verdicts": rpt.partition_verdicts(with_violations(docs, rs)),
+        "aggregate": rpt.aggregate_report(violations),
+    }
+    expected = {k: Counter(map(tuple, df.collect())) for k, df in expected.items()}
+
+    plain = cli(str(tmp_path / "out"), *(["--repartition", str(repartition)] if repartition else []))
+    assert plain == expected
+    assert sum(plain["violations"].values()) > 0
+
+    ckpt = cli(str(tmp_path / "ckpt_out"), "--checkpoint", str(tmp_path / "ckpt"))
+    assert ckpt == {k: v for k, v in expected.items() if k != "partition_verdicts"}
 
 
 def test_determinism_across_parallelism(spark):

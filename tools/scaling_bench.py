@@ -131,8 +131,8 @@ def run_level(cores: int) -> dict:
         res = validate_run(
             spark, docs, corpus_ruleset(), media_catalog=synth_media_catalog(spark)
         )
-        # one-action metrics: violation count + failing partitions from a
-        # single pipeline evaluation (see plans/pipeline.RunResult.metrics)
+        # violation count + failing partitions from the run's one
+        # evaluation of the rules (see plans/pipeline.validate_run)
         m = res.metrics.collect()[0]
         return time.perf_counter() - t0, m["n_violations"]
 
