@@ -6,9 +6,11 @@ replaced by one distributed pass.
 Usage:
     spark-submit --py-files json_validator_spark.zip \
         -m json_validator_spark.cli validate \
-        --input <table-or-parquet> --output <dir> \
-        [--rules rules.json] [--media-catalog <table>] \
-        [--checkpoint <dir> --run-id <id>] [--repartition N]
+        --input <table-or-parquet-or-files> --output <dir> \
+        [--input-format table|jsonl|yaml --input-schema <ddl>] \
+        [--rules rules.json | --schema schema.json] [--media-catalog <table>] \
+        [--checkpoint <dir> --run-id <id>] [--repartition N] \
+        [--format tables|xml|csv|pdf [--xml-max N]]
 
 or locally: ``python -m json_validator_spark.cli validate ...``.
 
@@ -63,11 +65,9 @@ def _load_ruleset(path: str | None):
 
 
 def cmd_validate(args: argparse.Namespace) -> int:
-    from json_validator_spark.operators.report import (
-        aggregate_report,
-        doc_verdicts_merged,
-        ordered,
-    )
+    from pyspark.sql import functions as F
+
+    from json_validator_spark.operators import report as rpt
     from json_validator_spark.plans.pipeline import validate_run
     from json_validator_spark.session import get_spark
     from json_validator_spark.sources.tables import load_table, write_table
@@ -136,6 +136,7 @@ def cmd_validate(args: argparse.Namespace) -> int:
         ruleset = _load_ruleset(args.rules)
 
     t0 = time.perf_counter()
+    partition_verdicts = None
     if args.checkpoint:
         from json_validator_spark.plans.checkpoint import (
             read_violations,
@@ -147,10 +148,8 @@ def cmd_validate(args: argparse.Namespace) -> int:
             media_catalog=media, extra_violations=extra, definitions=definitions,
         )
         violations = read_violations(spark, args.checkpoint)
-        doc_ids = docs
-        verdicts = doc_verdicts_merged(doc_ids, violations)
-        partition_verdicts = None
-        aggregate = aggregate_report(violations)
+        ids = docs
+        aggregate = rpt.aggregate_report(violations)
     else:
         # every table below is derived from the run's materialized frames
         res = validate_run(
@@ -159,69 +158,41 @@ def cmd_validate(args: argparse.Namespace) -> int:
             extra_violations=extra,
         )
         violations = res.violations
-        doc_ids = res.doc_verdicts  # one row per doc, no corpus re-scan
-        verdicts = res.doc_verdicts_merged
+        ids = res.doc_verdicts  # one row per doc, no corpus re-scan
         partition_verdicts = res.partition_verdicts
         aggregate = res.aggregate
+    # one string id base for every per-doc surface
+    ids = ids.select(F.col("doc_id").cast("string").alias("doc_id"))
     if corrupt is not None:
-        # the verdict surface must FAIL corrupt uploads like the
-        # reference does: include their surrogate ids in the per-doc base
-        from pyspark.sql import functions as F
-
-        verdict_base = doc_ids.select(
-            F.col("doc_id").cast("string").alias("doc_id")
-        ).unionByName(corrupt.select("doc_id"))
-        verdicts = doc_verdicts_merged(verdict_base, violations)
-    # same verdict surface in both modes: {output}/verdicts is ALWAYS
-    # per-doc merged-TAR rows (doc_id, n_errors, n_warnings, result);
-    # the partition rollup gets its own table where there is one
-    write_table(ordered(violations), f"{args.output}/violations")
-    write_table(verdicts, f"{args.output}/verdicts")
+        # corrupt uploads FAIL like the reference's: their surrogate ids
+        # join the base, so they get verdict rows and TAR files too
+        ids = ids.unionByName(corrupt.select("doc_id"))
+    # {output}/verdicts is ALWAYS per-doc merged-TAR rows (doc_id,
+    # n_errors, n_warnings, result); the partition rollup gets its own
+    # table where there is one
+    write_table(rpt.ordered(violations), f"{args.output}/violations")
+    write_table(rpt.doc_verdicts_merged(ids, violations), f"{args.output}/verdicts")
     if partition_verdicts is not None:
         write_table(partition_verdicts, f"{args.output}/partition_verdicts")
     write_table(aggregate, f"{args.output}/aggregate")
-    if args.format == "xml":
-        import datetime as _dt
-
-        from json_validator_spark.operators.report import (
-            tar_reports_from_violations,
-            write_tar_xml_aggregate,
-            write_tar_xml_reports,
-        )
-
-        now = _dt.datetime.now(_dt.timezone.utc).isoformat(timespec="seconds")
-        write_tar_xml_reports(
-            tar_reports_from_violations(doc_ids, violations),
-            f"{args.output}/xml",
-            max_docs=args.xml_max,
-            date=now,
-        )
-        write_tar_xml_aggregate(
-            violations, f"{args.output}/xml/TAR-aggregate.xml", date=now
-        )
-    elif args.format == "csv":
-        ordered(violations).write.option("header", True).mode(
+    if args.format == "csv":
+        rpt.ordered(violations).write.option("header", True).mode(
             "overwrite"
         ).csv(f"{args.output}/csv")
-    elif args.format == "pdf":
+    elif args.format in ("xml", "pdf"):
         import datetime as _dt
 
-        from json_validator_spark.operators.report import (
-            tar_reports_from_violations,
-            write_tar_pdf_aggregate,
-            write_tar_pdf_reports,
-        )
-
+        write_reports, write_aggregate = {
+            "xml": (rpt.write_tar_xml_reports, rpt.write_tar_xml_aggregate),
+            "pdf": (rpt.write_tar_pdf_reports, rpt.write_tar_pdf_aggregate),
+        }[args.format]
         now = _dt.datetime.now(_dt.timezone.utc).isoformat(timespec="seconds")
-        write_tar_pdf_reports(
-            tar_reports_from_violations(doc_ids, violations),
-            f"{args.output}/pdf",
-            max_docs=args.xml_max,
-            date=now,
+        out_dir = f"{args.output}/{args.format}"
+        write_reports(
+            rpt.tar_reports_from_violations(ids, violations),
+            out_dir, max_docs=args.xml_max, date=now,
         )
-        write_tar_pdf_aggregate(
-            violations, f"{args.output}/pdf/TAR-aggregate.pdf", date=now
-        )
+        write_aggregate(violations, f"{out_dir}/TAR-aggregate.{args.format}", date=now)
     elapsed = time.perf_counter() - t0
     # count from the materialized verdict table (one row per doc incl.
     # corrupt uploads) — docs.count() would re-run the whole raw
@@ -297,7 +268,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     v.add_argument(
         "--xml-max", type=int, default=100,
-        help="max per-doc XML reports written with --format xml",
+        help="max per-doc TAR files written with --format xml or pdf "
+        "(the first N documents by id)",
     )
     v.add_argument("--media-catalog", default=None)
     v.add_argument("--checkpoint", default=None)

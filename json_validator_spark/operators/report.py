@@ -15,16 +15,25 @@ report items (``:139-146``), and an *aggregate* report grouping errors by
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pathlib import Path
+from xml.sax.saxutils import escape
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from json_validator_spark.rules.compiler import severity_count
 
 
+def _result(n_errors: Column) -> Column:
+    """The verdict policy: SUCCESS iff zero error-severity violations
+    (``JSONValidator.java:454-459``) — warnings/infos are counted but do
+    not fail the document."""
+    return F.when(n_errors == 0, F.lit("SUCCESS")).otherwise(F.lit("FAILURE"))
+
+
 def doc_verdicts(with_viols: DataFrame, doc_id: str = "doc_id") -> DataFrame:
-    """Per-document verdict from a ``with_violations`` frame. SUCCESS iff
-    zero error-severity violations (``JSONValidator.java:454-459``) —
-    warnings/infos are counted but do not fail the document."""
+    """Per-document verdict from a ``with_violations`` frame, by
+    ``_result`` over its error count."""
     n_err = severity_count(F.col("violations"), "error")
     n_warn = severity_count(F.col("violations"), "warning")
     # result derives from n_errors, not doc_pass: by construction every
@@ -36,44 +45,49 @@ def doc_verdicts(with_viols: DataFrame, doc_id: str = "doc_id") -> DataFrame:
         F.col(doc_id).alias("doc_id"),
         n_err.alias("n_errors"),
         n_warn.alias("n_warnings"),
-    ).withColumn(
-        "result",
-        F.when(F.col("n_errors") == 0, F.lit("SUCCESS")).otherwise(F.lit("FAILURE")),
-    )
+    ).withColumn("result", _result(F.col("n_errors")))
 
 
-def doc_verdicts_merged(
-    docs: DataFrame, violations: DataFrame, doc_id: str = "doc_id"
+def _per_doc_rollup(
+    ids: DataFrame, violations: DataFrame, doc_id: str, **aggs: Column
 ) -> DataFrame:
-    """Per-document verdict over the FULL merged violation stream —
-    row rules ∪ uniqueness ∪ referential ∪ plugin providers — the exact
-    counter semantics of the reference's report, which counts plugin
-    TAR items alongside schema errors (``JSONValidator.java:193-219``
-    merge feeding ``createReport`` ``:443-459``).
+    """``(doc_id, n_errors, n_warnings, *aggs, result)`` for every id in
+    ``ids``: the violation stream grouped by its string ``doc_id`` in
+    ONE aggregation (counters plus any extra ``aggs``), then joined back
+    LEFT so clean docs get zero counters (and NULL extras) and SUCCESS.
 
-    Shape: the violations side partial-aggregates to one (doc_id,
-    counts) row per doc-with-violations — typically a tiny fraction of
-    the corpus — and joins back LEFT so clean docs still get SUCCESS
-    rows. At scale the aggregated side is broadcast-eligible;
-    otherwise it hash-joins on the same doc_id key the corpus is
-    already salted by."""
+    The violations side partial-aggregates to one row per doc with
+    violations — typically a tiny fraction of the corpus — so at scale
+    it is broadcast-eligible; otherwise it hash-joins on the same doc_id
+    key the corpus is already salted by."""
     counts = violations.groupBy(F.col("doc_id").cast("string").alias("__d")).agg(
         F.sum((F.col("severity") == "error").cast("long")).alias("n_errors"),
         F.sum((F.col("severity") == "warning").cast("long")).alias("n_warnings"),
+        *(agg.alias(name) for name, agg in aggs.items()),
     )
-    base = docs.select(F.col(doc_id).cast("string").alias("doc_id"))
+    base = ids.select(F.col(doc_id).cast("string").alias("doc_id"))
     return (
         base.join(counts, base["doc_id"] == counts["__d"], "left")
         .select(
             "doc_id",
             F.coalesce("n_errors", F.lit(0)).alias("n_errors"),
             F.coalesce("n_warnings", F.lit(0)).alias("n_warnings"),
+            *aggs,
         )
-        .withColumn(
-            "result",
-            F.when(F.col("n_errors") == 0, F.lit("SUCCESS")).otherwise(F.lit("FAILURE")),
-        )
+        .withColumn("result", _result(F.col("n_errors")))
     )
+
+
+def doc_verdicts_merged(
+    docs: DataFrame, violations: DataFrame, doc_id: str = "doc_id"
+) -> DataFrame:
+    """Per-document verdict ``(doc_id, n_errors, n_warnings, result)``
+    over the FULL merged violation stream — row rules ∪ uniqueness ∪
+    referential ∪ plugin providers — the exact counter semantics of the
+    reference's report, which counts plugin TAR items alongside schema
+    errors (``JSONValidator.java:193-219`` merge feeding
+    ``createReport`` ``:443-459``). ``docs`` only supplies the ids."""
+    return _per_doc_rollup(docs, violations, doc_id)
 
 
 def partition_verdicts(with_viols: DataFrame) -> DataFrame:
@@ -96,10 +110,7 @@ def partition_rollup(tagged: DataFrame) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_err").alias("n_errors"),
         )
-        .withColumn(
-            "result",
-            F.when(F.col("n_errors") == 0, F.lit("SUCCESS")).otherwise(F.lit("FAILURE")),
-        )
+        .withColumn("result", _result(F.col("n_errors")))
     )
 
 
@@ -148,13 +159,20 @@ def top_violations(violations: DataFrame, k: int = 20) -> DataFrame:
     )
 
 
-_ITEM_FIELDS = "location:string,rule_id:string,severity:string,description:string"
-
-
-def _report_items_agg():
-    """Sorted report-item list aggregate — the ReportItemComparator
-    ordering (sort_array over (location, rule_id, ...) structs)."""
-    return F.sort_array(
+def tar_reports_from_violations(
+    docs: DataFrame, violations: DataFrame, doc_id: str = "doc_id"
+) -> DataFrame:
+    """Per-document TAR-shaped report rows — the reference's JSON report
+    contract (``JSONValidator.java:443-500``; JSON serialization of the
+    TAR via the REST accept header, ``RestValidationController.java:149-159``):
+    ``(doc_id, result, counters{nrOfErrors, nrOfWarnings}, reports[])``
+    with items sorted by (span_path, rule_id) — the ReportItemComparator
+    ordering (``:139-146``). Counters and the item list come out of the
+    one ``_per_doc_rollup`` aggregation; ``docs`` only supplies the ids:
+    the corpus, or any frame with one row per doc
+    (``RunResult.doc_verdicts``). The per-doc ``collect_list`` is
+    bounded by that doc's violation count, never corpus-sized."""
+    items = F.sort_array(
         F.collect_list(
             F.struct(
                 F.col("span_path").alias("location"),
@@ -164,77 +182,90 @@ def _report_items_agg():
             )
         )
     )
-
-
-def _empty_items():
-    return F.array().cast(f"array<struct<{_ITEM_FIELDS}>>")
-
-
-def tar_reports_from_violations(
-    docs: DataFrame, violations: DataFrame, doc_id: str = "doc_id"
-) -> DataFrame:
-    """``tar_reports`` computed from the exploded violation stream alone,
-    in ONE aggregation: counters (nrOfErrors/nrOfWarnings) and the sorted
-    report-item list come out of the same groupBy, then left-join back
-    to the ids in ``docs`` so clean docs get SUCCESS rows. ``docs`` only
-    supplies the ids: the corpus, or any frame with one row per doc
-    (``RunResult.doc_verdicts``)."""
-    agg = (
-        violations.groupBy(F.col("doc_id").cast("string").alias("__d"))
-        .agg(
-            F.sum((F.col("severity") == "error").cast("long")).alias("n_errors"),
-            F.sum((F.col("severity") == "warning").cast("long")).alias("n_warnings"),
-            _report_items_agg().alias("reports"),
-        )
+    no_items = F.array().cast(
+        "array<struct<location:string,rule_id:string,severity:string,description:string>>"
     )
-    empty = _empty_items()
-    base = docs.select(F.col(doc_id).cast("string").alias("doc_id"))
+    return _per_doc_rollup(docs, violations, doc_id, reports=items).select(
+        "doc_id",
+        "result",
+        F.struct(
+            F.col("n_errors").alias("nrOfErrors"),
+            F.col("n_warnings").alias("nrOfWarnings"),
+        ).alias("counters"),
+        F.coalesce("reports", no_items).alias("reports"),
+    )
+
+
+def aggregate_tar_items(violations: DataFrame) -> DataFrame:
+    """Aggregate-report items — the reference's ``AggregateReportItems``
+    keying (``JSONValidator.java:466-481``): severity element name +
+    description with the ``[location] `` prefix stripped (``:472-479``),
+    counted. Output ``(severity, description, count)``, rule-catalog-
+    sized (one partial-agg groupBy over the violation stream)."""
+    desc = F.when(
+        F.col("message").startswith("["),
+        F.expr("substring(message, instr(message, '] ') + 2)"),
+    ).otherwise(F.col("message"))
     return (
-        base.join(agg, base["doc_id"] == agg["__d"], "left")
-        .select(
-            "doc_id",
-            F.when(F.coalesce("n_errors", F.lit(0)) == 0, F.lit("SUCCESS"))
-            .otherwise(F.lit("FAILURE")).alias("result"),
-            F.struct(
-                F.coalesce("n_errors", F.lit(0)).alias("nrOfErrors"),
-                F.coalesce("n_warnings", F.lit(0)).alias("nrOfWarnings"),
-            ).alias("counters"),
-            F.coalesce("reports", empty).alias("reports"),
-        )
-    )
-
-
-def tar_reports(doc_verdicts_df: DataFrame, violations: DataFrame) -> DataFrame:
-    """Per-document TAR-shaped report rows — the reference's JSON report
-    contract (``JSONValidator.java:443-500``; JSON serialization of the
-    TAR via the REST accept header, ``RestValidationController.java:149-159``):
-    ``(doc_id, result, counters{nrOfErrors, nrOfWarnings}, reports[])``
-    with items sorted by (span_path, rule_id) — the ReportItemComparator
-    ordering (``:139-146``). Write as JSON lines for the per-doc report
-    artifact; the per-doc ``collect_list`` is bounded by that doc's
-    violation count, never corpus-sized."""
-    items = (
-        violations.groupBy(F.col("doc_id").cast("string").alias("doc_id"))
-        .agg(_report_items_agg().alias("reports"))
-    )
-    empty = _empty_items()
-    return (
-        doc_verdicts_df.select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            "result",
-            F.struct(
-                F.col("n_errors").cast("long").alias("nrOfErrors"),
-                F.col("n_warnings").cast("long").alias("nrOfWarnings"),
-            ).alias("counters"),
-        )
-        .join(items, "doc_id", "left")
-        .withColumn("reports", F.coalesce("reports", empty))
+        violations.groupBy("severity", desc.alias("description"))
+        .agg(F.count(F.lit(1)).alias("count"))
     )
 
 
 # ----------------------------------------------------------------------
-# GITB TAR XML serialization (S7 completion)
+# File sinks: GITB TAR XML and PDF. Both render the same report — a
+# result + counters head, then one entry per item — from one per-doc TAR
+# row or from the run-level aggregate items. Driver-side BY DESIGN:
+# callers pass the truncated per-doc report set or the rule-catalog-
+# sized aggregate, never a corpus-sized frame.
 # ----------------------------------------------------------------------
+
+
+def _tag(severity: str) -> str:
+    """The report element an item's severity maps to; unknown → info."""
+    return severity if severity in ("error", "warning", "info") else "info"
+
+
+def _by_severity(items) -> list:
+    """Aggregate items in (severity, description) order."""
+    return sorted(items, key=lambda r: (r["severity"], r["description"]))
+
+
+def _write_file(path: str | Path, data: bytes) -> str:
+    p = Path(path)
+    p.parent.mkdir(parents=True, exist_ok=True)
+    p.write_bytes(data)
+    return str(p)
+
+
+def _write_first_docs(
+    tar_df: DataFrame, out_dir: str, max_docs: int, ext: str, render
+) -> list[str]:
+    """Write ``TAR-<doc_id>.<ext>`` for the FIRST ``max_docs`` documents
+    by id, skipping rows ``render`` maps to None — the reference's
+    per-input report artifact is inherently per-file, so this sink is
+    explicitly truncated driver-side output (the full report stays in
+    the distributed tables; same contract as ``top_violations``).
+    Returns the written paths."""
+    out = Path(out_dir)
+    out.mkdir(parents=True, exist_ok=True)
+    paths: list[str] = []
+    for r in tar_df.orderBy("doc_id").limit(max_docs).collect():
+        data = render(r)
+        if data is not None:
+            paths.append(_write_file(out / f"TAR-{r['doc_id']}.{ext}", data))
+    return paths
+
+
+def _aggregate_counts(violations: DataFrame):
+    """``(items, n_errors, n_warnings)`` for an aggregate writer: the
+    ``aggregate_tar_items`` rows plus two counters summed from the same
+    rows — corpus-size-independent by construction."""
+    items = aggregate_tar_items(violations).collect()
+    n_err = sum(r["count"] for r in items if r["severity"] == "error")
+    n_warn = sum(r["count"] for r in items if r["severity"] == "warning")
+    return items, n_err, n_warn
+
 
 _XML_HEADER = '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
 _TAR_OPEN = (
@@ -244,43 +275,66 @@ _TAR_OPEN = (
 )
 
 
-def tar_xml(report_row, date: str | None = None) -> str:
-    """One per-document TAR report as the GITB XML wire format — the
-    shape ``FileManager.java:100-139`` saves as ``TAR-<uuid>.xml`` and
-    ``JSONValidator.java:443-465`` populates: result, counters
-    (nrOfAssertions always zero in the reference's JSON flow), and one
-    ``<error|warning|info xsi:type="BAR">`` element per report item
-    carrying description + location (the JSON-pointer contentPath,
-    ``JSONValidator.java:462-463``). ``report_row`` is one
-    ``tar_reports``/``tar_reports_from_violations`` row; items are
-    already in ReportItemComparator order (sort_array upstream), so the
-    serialization is deterministic. Driver-side BY DESIGN: callers pass
-    the truncated per-doc report set, never a corpus-sized frame."""
-    from xml.sax.saxutils import escape
-
-    c = report_row["counters"]
+def _xml_tar(result: str, n_errors: int, n_warnings: int, entries, date: str | None) -> str:
+    """One GITB TAR document: date, result and counters (nrOfAssertions
+    always zero in the reference's JSON flow), then one ``<error|warning|
+    info xsi:type="BAR">`` element per ``(severity, description,
+    location)`` entry; a None location is left out."""
     lines = [_XML_HEADER, _TAR_OPEN]
     if date is not None:
         lines.append(f"    <date>{escape(date)}</date>")
     lines += [
-        f"    <result>{escape(report_row['result'])}</result>",
+        f"    <result>{escape(result)}</result>",
         "    <counters>",
         "        <nrOfAssertions>0</nrOfAssertions>",
-        f"        <nrOfErrors>{int(c['nrOfErrors'])}</nrOfErrors>",
-        f"        <nrOfWarnings>{int(c['nrOfWarnings'])}</nrOfWarnings>",
+        f"        <nrOfErrors>{int(n_errors)}</nrOfErrors>",
+        f"        <nrOfWarnings>{int(n_warnings)}</nrOfWarnings>",
         "    </counters>",
         "    <reports>",
     ]
-    for it in report_row["reports"]:
-        tag = it["severity"] if it["severity"] in ("error", "warning", "info") else "info"
-        lines += [
-            f'        <{tag} xsi:type="BAR">',
-            f"            <description>{escape(it['description'])}</description>",
-            f"            <location>{escape(it['location'])}</location>",
-            f"        </{tag}>",
-        ]
+    for severity, description, location in entries:
+        tag = _tag(severity)
+        lines.append(f'        <{tag} xsi:type="BAR">')
+        lines.append(f"            <description>{escape(description)}</description>")
+        if location is not None:
+            lines.append(f"            <location>{escape(location)}</location>")
+        lines.append(f"        </{tag}>")
     lines += ["    </reports>", "</TAR>", ""]
     return "\n".join(lines)
+
+
+def tar_xml(report_row, date: str | None = None) -> str:
+    """One per-document TAR report as the GITB XML wire format — the
+    shape ``FileManager.java:100-139`` saves as ``TAR-<uuid>.xml`` and
+    ``JSONValidator.java:443-465`` populates; each item carries its
+    description + location (the JSON-pointer contentPath,
+    ``JSONValidator.java:462-463``). ``report_row`` is one
+    ``tar_reports_from_violations`` row; items are already in
+    ReportItemComparator order (sort_array upstream), so the
+    serialization is deterministic."""
+    c = report_row["counters"]
+    return _xml_tar(
+        report_row["result"], c["nrOfErrors"], c["nrOfWarnings"],
+        [(it["severity"], it["description"], it["location"]) for it in report_row["reports"]],
+        date,
+    )
+
+
+def tar_xml_aggregate(items, n_errors: int, n_warnings: int, date: str | None = None) -> str:
+    """One run-level aggregate TAR as XML — the ``TAR-<uuid>_aggregate``
+    sibling of the per-doc report (``FileManager.java:100-124``
+    aggregate naming; populated at ``JSONValidator.java:485-499``).
+    ``items`` are ``aggregate_tar_items`` rows. itb-commons' exact
+    aggregated-item wording is localization-dependent (library not in
+    this repo); here each item is its location-free description
+    prefixed with the occurrence count — deterministic and
+    golden-testable. Items serialize in (severity, description) order."""
+    return _xml_tar(
+        "FAILURE" if n_errors else "SUCCESS", n_errors, n_warnings,
+        [(it["severity"], f"({int(it['count'])}x) {it['description']}", None)
+         for it in _by_severity(items)],
+        date,
+    )
 
 
 def write_tar_xml_reports(
@@ -291,27 +345,22 @@ def write_tar_xml_reports(
 ) -> list[str]:
     """Write ``TAR-<doc_id>.xml`` files (the ``getReportFileNameXml``
     naming, ``FileManager.java:121-124`` with the doc id as the uuid
-    slot) for the FIRST ``max_docs`` documents by id — the reference's
-    per-input report artifact is inherently per-file, so this sink is
-    explicitly truncated driver-side output (the full report stays in
-    the distributed tables; same contract as ``top_violations``).
-    Returns the written paths."""
-    from pathlib import Path
-
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    rows = tar_df.orderBy("doc_id").limit(max_docs).collect()
-    paths: list[str] = []
-    for r in rows:
-        p = out / f"TAR-{r['doc_id']}.xml"
-        p.write_text(tar_xml(r, date=date))
-        paths.append(str(p))
-    return paths
+    slot) for the first ``max_docs`` documents by id. Returns the
+    written paths."""
+    return _write_first_docs(
+        tar_df, out_dir, max_docs, "xml", lambda r: tar_xml(r, date=date).encode()
+    )
 
 
-# ----------------------------------------------------------------------
-# PDF report serialization (the reference's report.X.pdf / TAR-<uuid>.pdf)
-# ----------------------------------------------------------------------
+def write_tar_xml_aggregate(
+    violations: DataFrame, out_path: str, date: str | None = None
+) -> str:
+    """Serialize the run-level aggregate report to ONE
+    ``TAR-aggregate.xml`` file. Returns the written path."""
+    return _write_file(
+        out_path, tar_xml_aggregate(*_aggregate_counts(violations), date=date).encode()
+    )
+
 
 _PDF_PAGE_LINES = 46  # 11pt leading inside a US-Letter text box
 _PDF_WRAP = 92  # chars per line at 10pt Helvetica in a 468pt box
@@ -337,25 +386,26 @@ def _pdf_wrap(s: str, width: int = _PDF_WRAP) -> list[str]:
     return out
 
 
-def _pdf_document(pages: list[list[tuple[bool, str]]]) -> bytes:
-    """Assemble a complete deterministic PDF 1.4 byte string from pages of
-    ``(bold, text)`` lines. Objects: 1 Catalog, 2 Pages, 3/4 the base-14
-    Helvetica fonts (no embedding), then one Page + one Content stream
-    per page; a correct xref table so any conforming reader accepts it.
-    No creation timestamp is emitted — byte-identical output for
-    identical input is part of the sink's contract (golden-testable,
-    idempotent re-runs)."""
-    n_pages = len(pages) or 1
+def _pdf_document(lines: list[tuple[bool, str]]) -> bytes:
+    """Assemble a complete deterministic PDF 1.4 byte string from
+    ``(bold, text)`` lines, ``_PDF_PAGE_LINES`` to a page. Objects: 1
+    Catalog, 2 Pages, 3/4 the base-14 Helvetica fonts (no embedding),
+    then one Page + one Content stream per page; a correct xref table so
+    any conforming reader accepts it. No creation timestamp is emitted —
+    byte-identical output for identical input is part of the sink's
+    contract (golden-testable, idempotent re-runs)."""
+    pages = [
+        lines[i : i + _PDF_PAGE_LINES] for i in range(0, len(lines), _PDF_PAGE_LINES)
+    ]
     objs: list[bytes] = []
-    kids = " ".join(f"{5 + 2 * i} 0 R" for i in range(n_pages))
+    kids = " ".join(f"{5 + 2 * i} 0 R" for i in range(len(pages)))
     objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
     objs.append(
-        f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode("ascii")
+        f"<< /Type /Pages /Kids [{kids}] /Count {len(pages)} >>".encode("ascii")
     )
     objs.append(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
     objs.append(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica-Bold >>")
-    for i in range(n_pages):
-        lines = pages[i] if pages else []
+    for i, page in enumerate(pages):
         objs.append(
             (
                 f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
@@ -365,7 +415,7 @@ def _pdf_document(pages: list[list[tuple[bool, str]]]) -> bytes:
         )
         parts = [b"BT /F1 10 Tf 11 TL 72 756 Td"]
         cur_bold = False
-        for bold, text in lines:
+        for bold, text in page:
             if bold != cur_bold:
                 parts.append(b"/F2 10 Tf" if bold else b"/F1 10 Tf")
                 cur_bold = bold
@@ -392,43 +442,60 @@ def _pdf_document(pages: list[list[tuple[bool, str]]]) -> bytes:
     return bytes(buf)
 
 
-def tar_pdf(report_row, date: str | None = None) -> bytes:
-    """One per-document validation report as a PDF — the reference's
-    ``report.X.pdf`` / ``TAR-<uuid>.pdf`` artifact
-    (``ValidationRunner.java:164-171`` via itb-commons' ReportGenerator;
-    naming ``FileManager.java:94-102``). Same content as ``tar_xml``:
-    result + counters header, then one block per report item (severity,
-    JSON-pointer location, wrapped description), items already in
-    ReportItemComparator order. Pure-Python PDF 1.4 with the base-14
-    Helvetica fonts — no libraries, byte-deterministic. Driver-side BY
-    DESIGN on the truncated report set (the reference itself refuses
-    PDF above maximumReportsForDetailedOutput)."""
-    c = report_row["counters"]
-    lines: list[tuple[bool, str]] = [
-        (True, f"Validation report - document {report_row['doc_id']}"),
-        (False, ""),
-        (False, f"Result: {report_row['result']}"),
-    ]
+def _pdf_report(
+    title: str, result: str, n_errors: int, n_warnings: int, entries, date: str | None
+) -> bytes:
+    """One report as a PDF: title, result, date and counters, then per
+    ``(severity, heading, description)`` entry a bold ``[SEVERITY]
+    heading`` line and the wrapped description."""
+    lines: list[tuple[bool, str]] = [(True, title), (False, ""), (False, f"Result: {result}")]
     if date is not None:
         lines.append((False, f"Date: {date}"))
     lines += [
         (
             False,
-            f"Errors: {int(c['nrOfErrors'])}    "
-            f"Warnings: {int(c['nrOfWarnings'])}    Assertions: 0",
+            f"Errors: {int(n_errors)}    Warnings: {int(n_warnings)}    Assertions: 0",
         ),
         (False, ""),
     ]
-    for it in report_row["reports"]:
-        sev = it["severity"] if it["severity"] in ("error", "warning", "info") else "info"
-        lines.append((True, f"[{sev.upper()}] {it['location']}"))
-        lines += [(False, ln) for ln in _pdf_wrap(it["description"])]
+    for severity, heading, description in entries:
+        lines.append((True, f"[{_tag(severity).upper()}] {heading}"))
+        lines += [(False, ln) for ln in _pdf_wrap(description)]
         lines.append((False, ""))
-    pages = [
-        lines[i : i + _PDF_PAGE_LINES]
-        for i in range(0, len(lines), _PDF_PAGE_LINES)
-    ] or [[]]
-    return _pdf_document(pages)
+    return _pdf_document(lines)
+
+
+def tar_pdf(report_row, date: str | None = None) -> bytes:
+    """One per-document validation report as a PDF — the reference's
+    ``report.X.pdf`` / ``TAR-<uuid>.pdf`` artifact
+    (``ValidationRunner.java:164-171`` via itb-commons' ReportGenerator;
+    naming ``FileManager.java:94-102``). Same content as ``tar_xml``,
+    each item headed by its JSON-pointer location. Pure-Python PDF 1.4
+    with the base-14 Helvetica fonts — no libraries, byte-deterministic."""
+    c = report_row["counters"]
+    return _pdf_report(
+        f"Validation report - document {report_row['doc_id']}",
+        report_row["result"], c["nrOfErrors"], c["nrOfWarnings"],
+        [(it["severity"], it["location"], it["description"]) for it in report_row["reports"]],
+        date,
+    )
+
+
+def tar_pdf_aggregate(
+    items, n_errors: int, n_warnings: int, date: str | None = None
+) -> bytes:
+    """Run-level aggregate report as a PDF — the ``TAR-<uuid>_aggregate.pdf``
+    sibling (``FileManager.java:94-102`` aggregate naming). ``items`` are
+    ``aggregate_tar_items`` rows; rendered in (severity, description)
+    order with the occurrence-count heading, matching
+    ``tar_xml_aggregate``."""
+    return _pdf_report(
+        "Aggregate validation report",
+        "FAILURE" if n_errors else "SUCCESS", n_errors, n_warnings,
+        [(it["severity"], f"({int(it['count'])}x)", it["description"])
+         for it in _by_severity(items)],
+        date,
+    )
 
 
 def write_tar_pdf_reports(
@@ -446,134 +513,17 @@ def write_tar_pdf_reports(
     table surfaces still carry it) — that is the reference's own
     protection against unbounded driver-side rendering, kept here for
     the same reason. Returns the written paths."""
-    from pathlib import Path
-
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    rows = tar_df.orderBy("doc_id").limit(max_docs).collect()
-    paths: list[str] = []
-    for r in rows:
-        if len(r["reports"]) > max_items_for_detailed:
-            continue
-        p = out / f"TAR-{r['doc_id']}.pdf"
-        p.write_bytes(tar_pdf(r, date=date))
-        paths.append(str(p))
-    return paths
-
-
-def tar_pdf_aggregate(
-    items, n_errors: int, n_warnings: int, date: str | None = None
-) -> bytes:
-    """Run-level aggregate report as a PDF — the ``TAR-<uuid>_aggregate.pdf``
-    sibling (``FileManager.java:94-102`` aggregate naming). ``items`` are
-    ``aggregate_tar_items`` rows; rendered in (severity, description)
-    order with the occurrence-count prefix, matching
-    ``tar_xml_aggregate``."""
-    lines: list[tuple[bool, str]] = [
-        (True, "Aggregate validation report"),
-        (False, ""),
-        (False, f"Result: {'FAILURE' if n_errors else 'SUCCESS'}"),
-    ]
-    if date is not None:
-        lines.append((False, f"Date: {date}"))
-    lines += [
-        (False, f"Errors: {int(n_errors)}    Warnings: {int(n_warnings)}    Assertions: 0"),
-        (False, ""),
-    ]
-    for it in sorted(items, key=lambda r: (r["severity"], r["description"])):
-        sev = it["severity"] if it["severity"] in ("error", "warning", "info") else "info"
-        lines.append((True, f"[{sev.upper()}] ({int(it['count'])}x)"))
-        lines += [(False, ln) for ln in _pdf_wrap(it["description"])]
-        lines.append((False, ""))
-    pages = [
-        lines[i : i + _PDF_PAGE_LINES]
-        for i in range(0, len(lines), _PDF_PAGE_LINES)
-    ] or [[]]
-    return _pdf_document(pages)
+    return _write_first_docs(
+        tar_df, out_dir, max_docs, "pdf",
+        lambda r: None if len(r["reports"]) > max_items_for_detailed else tar_pdf(r, date=date),
+    )
 
 
 def write_tar_pdf_aggregate(
     violations: DataFrame, out_path: str, date: str | None = None
 ) -> str:
-    """Serialize the run-level aggregate report to ONE PDF. Driver-side
-    data is the rule-catalog-sized aggregate frame only — corpus-size-
-    independent, same contract as ``write_tar_xml_aggregate``."""
-    from pathlib import Path
-
-    items = aggregate_tar_items(violations).collect()
-    n_err = sum(r["count"] for r in items if r["severity"] == "error")
-    n_warn = sum(r["count"] for r in items if r["severity"] == "warning")
-    p = Path(out_path)
-    p.parent.mkdir(parents=True, exist_ok=True)
-    p.write_bytes(tar_pdf_aggregate(items, n_err, n_warn, date=date))
-    return str(p)
-
-
-def aggregate_tar_items(violations: DataFrame) -> DataFrame:
-    """Aggregate-report items — the reference's ``AggregateReportItems``
-    keying (``JSONValidator.java:466-481``): severity element name +
-    description with the ``[location] `` prefix stripped (``:472-479``),
-    counted. Output ``(severity, description, count)``, rule-catalog-
-    sized (one partial-agg groupBy over the violation stream)."""
-    desc = F.when(
-        F.col("message").startswith("["),
-        F.expr("substring(message, instr(message, '] ') + 2)"),
-    ).otherwise(F.col("message"))
-    return (
-        violations.groupBy("severity", desc.alias("description"))
-        .agg(F.count(F.lit(1)).alias("count"))
+    """Serialize the run-level aggregate report to ONE PDF. Returns the
+    written path."""
+    return _write_file(
+        out_path, tar_pdf_aggregate(*_aggregate_counts(violations), date=date)
     )
-
-
-def tar_xml_aggregate(items, n_errors: int, n_warnings: int, date: str | None = None) -> str:
-    """One run-level aggregate TAR as XML — the ``TAR-<uuid>_aggregate``
-    sibling of the per-doc report (``FileManager.java:100-124``
-    aggregate naming; populated at ``JSONValidator.java:485-499``).
-    ``items`` are ``aggregate_tar_items`` rows. itb-commons' exact
-    aggregated-item wording is localization-dependent (library not in
-    this repo); here each item is its location-free description
-    prefixed with the occurrence count — deterministic and
-    golden-testable. Items serialize in (severity, description) order."""
-    from xml.sax.saxutils import escape
-
-    lines = [_XML_HEADER, _TAR_OPEN]
-    if date is not None:
-        lines.append(f"    <date>{escape(date)}</date>")
-    lines += [
-        f"    <result>{'FAILURE' if n_errors else 'SUCCESS'}</result>",
-        "    <counters>",
-        "        <nrOfAssertions>0</nrOfAssertions>",
-        f"        <nrOfErrors>{int(n_errors)}</nrOfErrors>",
-        f"        <nrOfWarnings>{int(n_warnings)}</nrOfWarnings>",
-        "    </counters>",
-        "    <reports>",
-    ]
-    for it in sorted(items, key=lambda r: (r["severity"], r["description"])):
-        tag = it["severity"] if it["severity"] in ("error", "warning", "info") else "info"
-        lines += [
-            f'        <{tag} xsi:type="BAR">',
-            f"            <description>({int(it['count'])}x) "
-            f"{escape(it['description'])}</description>",
-            f"        </{tag}>",
-        ]
-    lines += ["    </reports>", "</TAR>", ""]
-    return "\n".join(lines)
-
-
-def write_tar_xml_aggregate(
-    violations: DataFrame, out_path: str, date: str | None = None
-) -> str:
-    """Serialize the run-level aggregate report to ONE
-    ``TAR-aggregate.xml`` file. The only driver-side data is the
-    rule-catalog-sized (severity, description, count) frame plus two
-    counters from the same rows — corpus-size-independent by
-    construction. Returns the written path."""
-    from pathlib import Path
-
-    items = aggregate_tar_items(violations).collect()
-    n_err = sum(r["count"] for r in items if r["severity"] == "error")
-    n_warn = sum(r["count"] for r in items if r["severity"] == "warning")
-    p = Path(out_path)
-    p.parent.mkdir(parents=True, exist_ok=True)
-    p.write_text(tar_xml_aggregate(items, n_err, n_warn, date=date))
-    return str(p)

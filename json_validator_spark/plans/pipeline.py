@@ -53,10 +53,10 @@ class RunResult:
     aggregate: DataFrame       # (rule_id, severity, count)
     # row rules ∪ uniqueness ∪ referential ∪ plugins — the reference's
     # merged-TAR counter semantics
-    doc_verdicts_merged: DataFrame | None = None
+    doc_verdicts_merged: DataFrame
     # one-row run metrics (n_violations, n_errors, n_warnings,
     # n_failing_partitions) over the merged stream
-    metrics: DataFrame | None = None
+    metrics: DataFrame
 
 
 def validate_run(

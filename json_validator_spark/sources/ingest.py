@@ -79,14 +79,12 @@ def _parse_raw_json(raw: DataFrame, schema: str) -> DataFrame:
     """``(_raw string)`` → ``(_raw, _doc struct<schema, _cr>)`` — the
     shared acceptance step behind both the JSONL and the YAML surface.
 
-    Trailing-token leniency is a CONTRACT here, not an accident:
+    Trailing-token leniency is this repo's JSONL choice, pinned in
+    ``tests/test_ingest_messages.py::test_jsonl_trailing_token_leniency``:
     ``from_json`` (Jackson) parses the first complete JSON value and
     ignores trailing content, so a line like ``{"a":1} junk`` is
-    ACCEPTED with the parsed prefix. This matches the reference, whose
-    document acceptance also runs Jackson without
-    ``FAIL_ON_TRAILING_TOKENS`` (Spring's default ``ObjectMapper``;
-    networknt reads the uploaded payload via ``readTree``) — pinned in
-    ``tests/test_ingest_messages.py::test_jsonl_trailing_token_leniency``.
+    ACCEPTED with the parsed prefix. Whether the reference's upload
+    path accepts or rejects such a line is not settled here.
     Contrast ``vocabulary.py``'s ``contentMediaType``, where RFC 8259
     whole-string strictness is the keyword's meaning and the engine
     wraps the parse to enforce it."""

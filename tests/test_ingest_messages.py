@@ -109,12 +109,11 @@ def test_sniff_handles_all_json_whitespace(spark):
 
 
 def test_jsonl_trailing_token_leniency(tmp_path, spark):
-    """Trailing-token acceptance is a pinned CONTRACT of the ingest
-    surface (`_parse_raw_json` docstring): `{"a":1} junk` parses as the
-    prefix object — matching the reference's Jackson `readTree` without
-    FAIL_ON_TRAILING_TOKENS (Spring's default ObjectMapper) — while a
-    line with no valid JSON prefix is corrupt. contentMediaType (the
-    KEYWORD) is deliberately stricter; see vocabulary.py."""
+    """Trailing-token acceptance is this repo's JSONL ingest choice
+    (`_parse_raw_json` docstring): `{"a":1} junk` parses as the prefix
+    object, while a line with no valid JSON prefix is corrupt.
+    contentMediaType (the KEYWORD) is deliberately stricter; see
+    vocabulary.py."""
     from json_validator_spark.sources.ingest import (
         jsonl_corrupt_violations,
         jsonl_valid,

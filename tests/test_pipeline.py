@@ -458,13 +458,14 @@ def test_checkpoint_plugin_violations_bucketed(spark, tmp_path):
 
 
 def test_tar_reports_shape(spark):
-    """Per-doc TAR rows: result/counters from the verdict, ordered report
-    items nested per doc, clean docs with empty report arrays."""
-    from json_validator_spark.operators.report import tar_reports
+    """Per-doc TAR rows: result/counters and ordered report items nested
+    per doc from one rollup of the violation stream, clean docs with
+    empty report arrays."""
+    from json_validator_spark.operators.report import tar_reports_from_violations
 
     docs = synth_documents(spark, 200)
     res = validate_run(spark, docs, corpus_ruleset())
-    tar = tar_reports(res.doc_verdicts_merged, res.violations).collect()
+    tar = tar_reports_from_violations(res.doc_verdicts, res.violations).collect()
     assert len(tar) == 200
     by_id = {r["doc_id"]: r for r in tar}
     for r in tar:
@@ -904,6 +905,99 @@ def test_cli_format_pdf(tmp_path, spark):
     text = b"\n".join(streams)
     assert b"(Result: FAILURE) Tj" in text
     assert b"required value is missing) Tj" in text
+
+
+def test_tar_pdf_golden_bytes(tmp_path, spark):
+    """Byte pins for both PDF sinks: a two-page per-doc report (every
+    severity tag incl. an unknown one, a wrapped description, escaped
+    parens) and a run-level aggregate report, rendered with a fixed
+    date. Any change to the PDF renderer changes these hashes."""
+    import hashlib
+
+    from json_validator_spark.operators.report import (
+        tar_reports_from_violations,
+        write_tar_pdf_aggregate,
+        write_tar_pdf_reports,
+    )
+
+    date = "2026-08-18T00:00:00+00:00"
+    sevs = ["error", "warning", "info", "fatal"]
+    viols = spark.createDataFrame(
+        [
+            (7, f"/f{i:02d}", f"r{i:02d}", sevs[i % 4], f"[/f{i:02d}] message (n={i})")
+            for i in range(18)
+        ]
+        + [(7, "/long", "r.long", "error", "word " * 40)],
+        "doc_id long, span_path string, rule_id string, severity string, message string",
+    )
+    docs = spark.createDataFrame([(7,)], "doc_id long")
+    [doc_pdf] = write_tar_pdf_reports(
+        tar_reports_from_violations(docs, viols), str(tmp_path / "pdf"), date=date
+    )
+    agg_pdf = write_tar_pdf_aggregate(
+        viols, str(tmp_path / "pdf" / "TAR-aggregate.pdf"), date=date
+    )
+
+    def sha(path):
+        with open(path, "rb") as f:
+            return hashlib.sha256(f.read()).hexdigest()
+
+    assert sha(doc_pdf) == (
+        "2ade83a01cb9223df581d91c92a7dc69d32e3afd8f6b6953335d5b20b35314c9"
+    )
+    assert sha(agg_pdf) == (
+        "b274bef6e579e210c897978b93c068d7c499f4a34cf2ec96abee2af9aec5d8c8"
+    )
+
+
+@pytest.mark.parametrize("fmt", ["xml", "pdf"])
+def test_cli_corrupt_upload_gets_per_doc_tar(tmp_path, spark, fmt):
+    """A corrupt JSONL line FAILs in the verdicts table under its
+    ``corrupt:<md5>`` surrogate id, and the per-doc TAR sink writes its
+    report too: one file per input line, the corrupt one a FAILURE
+    carrying the ``corrupt.document`` item."""
+    import hashlib
+    import json
+    import pathlib
+
+    from json_validator_spark.cli import main
+    from json_validator_spark.sources.tables import load_table
+
+    bad = '{"doc_id": 3, "na'
+    (tmp_path / "docs.jsonl").write_text(
+        '{"doc_id": 1, "name": "alice"}\n{"doc_id": 2, "name": "bob"}\n' + bad + "\n"
+    )
+    (tmp_path / "schema.json").write_text(json.dumps({
+        "type": "object", "required": ["name"],
+        "properties": {"name": {"minLength": 2}},
+    }))
+    out = str(tmp_path / "out")
+    rc = main([
+        "validate", "--input", str(tmp_path / "docs.jsonl"), "--output", out,
+        "--input-format", "jsonl", "--input-schema", "doc_id long, name string",
+        "--schema", str(tmp_path / "schema.json"),
+        "--format", fmt, "--xml-max", "10",
+    ])
+    assert rc == 0
+    corrupt_id = "corrupt:" + hashlib.md5(bad.encode()).hexdigest()
+    files = sorted(
+        p.name for p in pathlib.Path(f"{out}/{fmt}").glob(f"TAR-*.{fmt}")
+        if p.name != f"TAR-aggregate.{fmt}"
+    )
+    assert files == [f"TAR-1.{fmt}", f"TAR-2.{fmt}", f"TAR-{corrupt_id}.{fmt}"]
+    verdicts = load_table(spark, f"{out}/verdicts").collect()
+    assert {(r["doc_id"], r["result"]) for r in verdicts} == {
+        ("1", "SUCCESS"), ("2", "SUCCESS"), (corrupt_id, "FAILURE"),
+    }
+    # TAR items carry no rule id: the corrupt.document rule shows as its message
+    report = pathlib.Path(f"{out}/{fmt}/TAR-{corrupt_id}.{fmt}").read_bytes()
+    if fmt == "xml":
+        assert b"<result>FAILURE</result>" in report
+        assert b"<description>[/] content is not parseable as JSON</description>" in report
+    else:
+        text = b"\n".join(_pdf_check_structure(report))
+        assert b"(Result: FAILURE) Tj" in text
+        assert b"([/] content is not parseable as JSON) Tj" in text
 
 
 def test_session_factory_automatic_shuffle_sizing(spark, tmp_path):
