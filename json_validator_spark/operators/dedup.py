@@ -8,18 +8,27 @@ discipline:
 
 - **exact**: one hash-groupBy — map-side combine means each content hash
   ships one (hash, partial-count) row per input partition.
-- **n-gram Jaccard**: explode shingles → self-join on shingle → pair
-  aggregation. The join key is the shingle, so co-occurrence is found
-  without any all-pairs product; frequency capping (``max_df``) drops
-  degenerate stop-shingles before they create quadratic hot keys — the
-  skew story at scale.
+- **n-gram Jaccard / containment**: explode shingles → self-join on
+  shingle → pair aggregation (``_posting_pair_scores``). The join key is
+  the shingle, so co-occurrence is found without any all-pairs product;
+  frequency capping (``max_df``) drops degenerate stop-shingles before
+  they create quadratic hot keys — the skew story at scale.
 - **MinHash + LSH**: per-doc signature (narrow) → band keys → groupBy
   band bucket → pairs only within buckets — the sub-quadratic scale
-  path; candidates are then *verified* with true shingle Jaccard.
+  path; candidates are then *verified* with true shingle Jaccard
+  restricted to the candidate pairs (``_candidate_jaccard``, shared with
+  incremental dedup).
 - **SimHash**: 60-bit fingerprint per doc from token hashes — narrow,
   one expression; hamming-close pairs via banded prefix grouping.
 - **embedding near-dup**: cosine over ``array<float>`` — delegated to
   ``operators/similarity.py`` primitives.
+
+Two private cores carry every pair operator: ``_bucket_pairs`` is the
+one hot-bucket pair join (MinHash bands, SimHash bands and the
+embedding LSH tables), and ``_pair_scores`` is the one shared-shingle
+tail (per-doc shingle counts on both ids → score → threshold) that both
+overlap counts — the posting self-join and the candidate-restricted
+join — end in.
 
 All hashing is md5-based (``functions/text``) for DuckDB-oracle parity.
 """
@@ -88,10 +97,50 @@ def ngram_jaccard_pairs(
     """Doc pairs with shingle-set Jaccard ≥ threshold:
     ``(doc_id_a, doc_id_b, n_common, n_a, n_b, jaccard)`` with a < b.
 
-    Plan shape: one explode, one groupBy(shingle) frequency cap, one
-    shuffle join on shingle, one pair groupBy — every stage partial-
-    aggregates, and ``max_df`` removes boilerplate shingles whose
-    posting lists would otherwise be the quadratic skew term at scale."""
+    Plan shape: the posting self-join of ``_posting_pair_scores``, whose
+    ``max_df`` cap removes boilerplate shingles before they become the
+    quadratic skew term at scale."""
+    return _posting_pair_scores(
+        df, text_col, id_col, k, max_df, "jaccard", _jaccard(), threshold
+    )
+
+
+def _jaccard() -> Column:
+    """Shingle-set Jaccard of a ``_pair_scores`` row."""
+    n = F.col("n_common")
+    return n / (F.col("n_a") + F.col("n_b") - n).cast("double")
+
+
+def _pair_scores(
+    common: DataFrame, sh_a: DataFrame, sh_b: DataFrame, name: str, score: Column,
+    threshold: float,
+) -> DataFrame:
+    """The tail every shingle-overlap operator ends in: per-doc shingle
+    counts of ``sh_a`` / ``sh_b`` joined onto the ``(doc_id_a, doc_id_b,
+    n_common)`` pair counts as ``n_a`` / ``n_b``, then ``score`` rounded
+    to 6 as column ``name``, kept when ≥ threshold."""
+    def sizes(sh: DataFrame, side: str) -> DataFrame:
+        return sh.groupBy(F.col("doc_id").alias(f"doc_id_{side}")).agg(
+            F.count(F.lit(1)).alias(f"n_{side}")
+        )
+
+    return (
+        common.join(sizes(sh_a, "a"), "doc_id_a")
+        .join(sizes(sh_b, "b"), "doc_id_b")
+        .withColumn(name, F.round(score, 6))
+        .filter(F.col(name) >= threshold)
+    )
+
+
+def _posting_pair_scores(
+    df: DataFrame, text_col: str, id_col: str, k: int, max_df: int | None,
+    name: str, score: Column, threshold: float,
+) -> DataFrame:
+    """``(doc_id_a, doc_id_b, n_common, n_a, n_b, <name>)`` with a < b
+    over all doc pairs, by the posting self-join: one explode, one
+    groupBy(shingle) frequency cap (shingles in more than ``max_df``
+    docs dropped), one shuffle join on shingle, one pair groupBy — every
+    stage partial-aggregates."""
     sh = doc_shingles(df, text_col, id_col, k)
     if max_df is not None:
         rare = (
@@ -101,31 +150,37 @@ def ngram_jaccard_pairs(
             .select("shingle")
         )
         sh = sh.join(rare, "shingle")
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
     common = (
-        a.join(b, "shingle")
+        sh.alias("a")
+        .join(sh.alias("b"), "shingle")
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .groupBy(
             F.col("a.doc_id").alias("doc_id_a"), F.col("b.doc_id").alias("doc_id_b")
         )
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    out = (
-        common.join(sizes.withColumnsRenamed({"doc_id": "doc_id_a", "n_sh": "n_a"}), "doc_id_a")
-        .join(sizes.withColumnsRenamed({"doc_id": "doc_id_b", "n_sh": "n_b"}), "doc_id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    out = _pair_scores(common, sh, sh, name, score, threshold)
+    return out.select("doc_id_a", "doc_id_b", "n_common", "n_a", "n_b", name)
+
+
+def _candidate_jaccard(
+    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold: float
+) -> DataFrame:
+    """``(doc_id_a, doc_id_b, jaccard)`` for the ``cand`` pairs whose
+    postings (a side in ``sh_a``, b side in ``sh_b``) have Jaccard ≥
+    threshold. The candidate frame is joined against the postings of
+    each side, so no all-pairs join is built; AQE converts both joins to
+    broadcasts of the (small) candidate side at runtime, so the posting
+    lists are SCANNED but never shuffled."""
+    common = (
+        cand.select("doc_id_a", "doc_id_b")
+        .join(sh_a.withColumnRenamed("doc_id", "doc_id_a"), "doc_id_a")
+        .join(sh_b.withColumnRenamed("doc_id", "doc_id_b"), ["doc_id_b", "shingle"])
+        .groupBy("doc_id_a", "doc_id_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    return out.select("doc_id_a", "doc_id_b", "n_common", "n_a", "n_b", "jaccard")
+    out = _pair_scores(common, sh_a, sh_b, "jaccard", _jaccard(), threshold)
+    return out.select("doc_id_a", "doc_id_b", "jaccard")
 
 
 # ----------------------------------------------------------------------
@@ -216,6 +271,53 @@ def _banded(signatures: DataFrame, n_bands: int, rows_per_band: int) -> DataFram
     )
 
 
+def _bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    max_bucket: int,
+    id_col: str = "doc_id",
+    payload: str | None = None,
+) -> DataFrame:
+    """The hot-bucket pair join behind every banded near-dup operator:
+    ``({id_col}_a, {id_col}_b)`` for the rows of ``rows`` that share a
+    ``keys`` bucket, plus ``({payload}_a, {payload}_b)`` when a payload
+    column is given (the simhash, the embedding) so the caller can score
+    the pair. One groupBy(keys) sizes each bucket and elects its hub (the
+    min id); the join back onto the rows is co-partitioned on the same
+    key.
+
+    **Hot-bucket guard** (the 10^12-doc skew story): a viral duplicate
+    cluster — one page copied 10M times — puts all its members in ONE
+    bucket, and the naive self-join emits C(10M, 2) ≈ 5·10^13 pairs.
+    Buckets at or under ``max_bucket`` emit every pair with a < b;
+    larger buckets emit STAR-shaped pairs instead: every member paired
+    with the bucket's hub only — O(|bucket|) edges that keep the
+    duplicate cluster connected (dedup keeps the min-id survivor and
+    drops docs reachable from it). A star pair carries the hub's payload
+    on the a side; its struct ordering key makes the choice among
+    duplicate ids with different payloads independent of run order."""
+    cols = [id_col] if payload is None else [id_col, payload]
+    hub = {id_col: "__hub", payload: "__hub_p"}
+    aggs = [F.count(F.lit(1)).alias("__n"), F.min(id_col).alias("__hub")]
+    if payload is not None:
+        aggs.append(F.min_by(payload, F.struct(id_col, payload)).alias("__hub_p"))
+    tagged = rows.join(rows.groupBy(*keys).agg(*aggs), keys)
+    small = tagged.filter(F.col("__n") <= max_bucket)
+    all_pairs = (
+        small.alias("a")
+        .join(small.alias("b"), keys)
+        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .select(*[F.col(f"{s}.{c}").alias(f"{c}_{s}") for s in "ab" for c in cols])
+    )
+    star_pairs = tagged.filter(
+        (F.col("__n") > max_bucket) & (F.col(id_col) != F.col("__hub"))
+    ).select(
+        *[F.col(hub[c]).alias(f"{c}_a") for c in cols],
+        *[F.col(c).alias(f"{c}_b") for c in cols],
+    )
+    return all_pairs.unionByName(star_pairs)
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     n_bands: int = 4,
@@ -225,41 +327,12 @@ def lsh_candidate_pairs(
     """Band the signature and emit ``(doc_id_a, doc_id_b, n_bands_shared)``
     for docs agreeing on ≥1 band — the classic LSH bucket join. The
     groupBy key is (band_idx, band_hash): identical-band docs co-locate,
-    everything else never meets — sub-quadratic at corpus scale.
-
-    **Hot-bucket guard** (the 10^12-doc skew story): a viral duplicate
-    cluster — one page copied 10M times — puts all its members in ONE
-    band bucket, and the naive self-join emits C(10M, 2) ≈ 5·10^13
-    pairs. Buckets larger than ``max_bucket`` therefore emit
-    STAR-shaped pairs instead: every member paired with the bucket's
-    minimum doc_id only — O(|bucket|) edges that keep the duplicate
-    cluster connected (dedup keeps the min-id survivor and drops docs
-    reachable from it), while buckets at or under the cap keep the
-    exact all-pairs semantics."""
+    everything else never meets — sub-quadratic at corpus scale. Band
+    buckets larger than ``max_bucket`` emit star pairs against the
+    bucket's min doc_id (the hot-bucket guard of ``_bucket_pairs``)."""
     banded = _banded(signatures, n_bands, rows_per_band)
-    keys = ["band_idx", "band_hash"]
-    sizes = banded.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("__n"), F.min("doc_id").alias("__min_doc")
-    )
-    tagged = banded.join(sizes, keys)  # co-partitioned: same key as the groupBy
-    small = tagged.filter(F.col("__n") <= max_bucket)
-    a = small.alias("a")
-    b = small.alias("b")
-    all_pairs = (
-        a.join(b, keys)
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"), F.col("b.doc_id").alias("doc_id_b")
-        )
-    )
-    star_pairs = (
-        tagged.filter((F.col("__n") > max_bucket) & (F.col("doc_id") != F.col("__min_doc")))
-        .select(
-            F.col("__min_doc").alias("doc_id_a"), F.col("doc_id").alias("doc_id_b")
-        )
-    )
     return (
-        all_pairs.unionByName(star_pairs)
+        _bucket_pairs(banded, ["band_idx", "band_hash"], max_bucket)
         .groupBy("doc_id_a", "doc_id_b")
         .agg(F.count(F.lit(1)).alias("n_bands_shared"))
     )
@@ -280,10 +353,8 @@ def minhash_neardup_pairs(
     for candidate pairs (a join against the shingle postings restricted
     to candidates, not the all-pairs join).
 
-    Verification joins the (small) candidate-pair frame against the
-    shingle postings: AQE converts both joins to broadcasts of the
-    candidate side at runtime, so the full posting list is SCANNED but
-    never shuffled, and only candidate rows survive the probe. The
+    Verification is ``_candidate_jaccard``: the (small) candidate-pair
+    frame joined against the shingle postings of both sides. The
     tempting alternative — persist(candidates) + semi-join filter before
     re-shingling — materializes the whole signature pipeline as a
     barrier job before verification can start; measured 6s slower on the
@@ -292,31 +363,7 @@ def minhash_neardup_pairs(
     sigs = minhash_signatures(df, text_col, id_col, k, n_hashes)
     cand = lsh_candidate_pairs(sigs, n_bands, rows_per_band, max_bucket=max_bucket)
     sh = doc_shingles(df, text_col, id_col, k)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    common = (
-        cand.select("doc_id_a", "doc_id_b")
-        .join(sh.withColumnRenamed("doc_id", "doc_id_a"), "doc_id_a")
-        .join(
-            sh.withColumnsRenamed({"doc_id": "doc_id_b"}),
-            ["doc_id_b", "shingle"],
-        )
-        .groupBy("doc_id_a", "doc_id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    out = (
-        common.join(sizes.withColumnsRenamed({"doc_id": "doc_id_a", "n_sh": "n_a"}), "doc_id_a")
-        .join(sizes.withColumnsRenamed({"doc_id": "doc_id_b", "n_sh": "n_b"}), "doc_id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return out.select("doc_id_a", "doc_id_b", "jaccard")
+    return _candidate_jaccard(cand, sh, sh, threshold)
 
 
 # ----------------------------------------------------------------------
@@ -391,47 +438,28 @@ def incremental_neardup_pairs(
     Jaccard computed ONLY for candidate pairs. Returns
     ``(new_doc_id, corpus_doc_id, jaccard)`` with jaccard ≥ threshold.
 
-    Same verification shape as ``minhash_neardup_pairs``: the candidate
-    frame is joined against both posting lists; AQE broadcasts the
-    (small) candidate side, so neither shingle table is shuffled. In
-    production the corpus signatures/postings are precomputed artifacts;
-    here they are derived inline from ``corpus_df`` so the operator is
-    self-contained."""
+    Verification is ``_candidate_jaccard`` (new side as a, corpus side
+    as b): the candidate frame is joined against both posting lists, so
+    neither shingle table is shuffled. In production the corpus
+    signatures/postings are precomputed artifacts; here they are derived
+    inline from ``corpus_df`` so the operator is self-contained."""
     rows_per_band = n_hashes // n_bands
     new_sigs = minhash_signatures(new_df, text_col, id_col, k, n_hashes)
     corpus_sigs = minhash_signatures(corpus_df, text_col, id_col, k, n_hashes)
     cand = incremental_candidate_pairs(
         new_sigs, corpus_sigs, n_bands, rows_per_band, max_bucket=max_bucket
     )
-    sh_new = doc_shingles(new_df, text_col, id_col, k).withColumnRenamed(
-        "doc_id", "new_doc_id"
+    out = _candidate_jaccard(
+        cand.withColumnsRenamed({"new_doc_id": "doc_id_a", "corpus_doc_id": "doc_id_b"}),
+        doc_shingles(new_df, text_col, id_col, k),
+        doc_shingles(corpus_df, text_col, id_col, k),
+        threshold,
     )
-    sh_c = doc_shingles(corpus_df, text_col, id_col, k).withColumnRenamed(
-        "doc_id", "corpus_doc_id"
+    return out.select(
+        F.col("doc_id_a").alias("new_doc_id"),
+        F.col("doc_id_b").alias("corpus_doc_id"),
+        "jaccard",
     )
-    n_new = sh_new.groupBy("new_doc_id").agg(F.count(F.lit(1)).alias("n_new"))
-    n_c = sh_c.groupBy("corpus_doc_id").agg(F.count(F.lit(1)).alias("n_c"))
-    common = (
-        cand.select("new_doc_id", "corpus_doc_id")
-        .join(sh_new, "new_doc_id")
-        .join(sh_c, ["corpus_doc_id", "shingle"])
-        .groupBy("new_doc_id", "corpus_doc_id")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    out = (
-        common.join(n_new, "new_doc_id")
-        .join(n_c, "corpus_doc_id")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("n_new") + F.col("n_c") - F.col("n_common")).cast("double"),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return out.select("new_doc_id", "corpus_doc_id", "jaccard")
 
 
 def accept_new_documents(
@@ -539,14 +567,14 @@ def simhash_neardup_pairs(
     differing bits shares ≥1 exact band — with hamming ≤ 3 and 4 bands,
     guaranteed recall). ``(doc_id_a, doc_id_b, hamming)``.
 
-    Same hot-bucket guard as ``lsh_candidate_pairs``: a band bucket
-    larger than ``max_bucket`` (an exact-duplicate flood — identical
-    fingerprints) emits O(n) star pairs against the bucket's min-id doc
-    instead of C(n,2). The pigeonhole recall guarantee then holds
-    through the hub (hamming(hub, member)); only member-member pairs
-    both ≤ max_hamming from each other but > max_hamming from the hub
-    are lost, which cannot occur for the identical-fingerprint floods
-    that create oversized buckets in practice."""
+    Pairs come from ``_bucket_pairs`` with the fingerprint as payload: a
+    band bucket larger than ``max_bucket`` (an exact-duplicate flood —
+    identical fingerprints) emits O(n) star pairs against the bucket's
+    min-id doc instead of C(n,2). The pigeonhole recall guarantee then
+    holds through the hub (hamming(hub, member)); only member-member
+    pairs both ≤ max_hamming from each other but > max_hamming from the
+    hub are lost, which cannot occur for the identical-fingerprint
+    floods that create oversized buckets in practice."""
     width = SIMHASH_BITS // n_bands
     mask = (1 << width) - 1
     bands = F.array(
@@ -563,41 +591,13 @@ def simhash_neardup_pairs(
     banded = sims.select("doc_id", "simhash", F.explode(bands).alias("b")).select(
         "doc_id", "simhash", "b.band_idx", "b.band_val"
     )
-    keys = ["band_idx", "band_val"]
-    sizes = banded.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.min("doc_id").alias("__hub"),
-        # struct ordering key: duplicate doc_ids with different
-        # fingerprints must not make the hub choice run-order-dependent
-        F.min_by("simhash", F.struct("doc_id", "simhash")).alias("__hub_sim"),
-    )
-    tagged = banded.join(sizes, keys)
-    small = tagged.filter(F.col("__n") <= max_bucket)
-    a = small.alias("a")
-    b = small.alias("b")
-    all_pairs = (
-        a.join(b, keys)
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-    )
-    star_pairs = (
-        tagged.filter((F.col("__n") > max_bucket) & (F.col("doc_id") != F.col("__hub")))
-        .select(
-            F.col("__hub").alias("doc_id_a"),
-            F.col("doc_id").alias("doc_id_b"),
-            F.bit_count(
-                F.col("__hub_sim").bitwiseXOR(F.col("simhash"))
-            ).alias("hamming"),
-        )
-    )
+    pairs = _bucket_pairs(banded, ["band_idx", "band_val"], max_bucket, payload="simhash")
     return (
-        all_pairs.unionByName(star_pairs)
+        pairs.select(
+            "doc_id_a",
+            "doc_id_b",
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias("hamming"),
+        )
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
@@ -835,38 +835,9 @@ def containment_pairs(
     ``(doc_id_a, doc_id_b, n_common, n_a, n_b, containment)`` with
     a < b, containment ≥ threshold, rounded to 6.
 
-    Same plan shape (and skew discipline) as ``ngram_jaccard_pairs``:
-    one explode, optional ``max_df`` boilerplate cap, one shuffle join
-    on the shingle, one pair groupBy — all partial-aggregated."""
-    sh = doc_shingles(df, text_col, id_col, k)
-    if max_df is not None:
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_df)
-            .select("shingle")
-        )
-        sh = sh.join(rare, "shingle")
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_id_a"), F.col("b.doc_id").alias("doc_id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    Plan shape (and skew discipline): the posting self-join of
+    ``_posting_pair_scores``, shared with ``ngram_jaccard_pairs``."""
+    return _posting_pair_scores(
+        df, text_col, id_col, k, max_df, "containment",
+        F.col("n_common") / F.least("n_a", "n_b").cast("double"), threshold,
     )
-    out = (
-        common.join(sizes.withColumnsRenamed({"doc_id": "doc_id_a", "n_sh": "n_a"}), "doc_id_a")
-        .join(sizes.withColumnsRenamed({"doc_id": "doc_id_b", "n_sh": "n_b"}), "doc_id_b")
-        .withColumn(
-            "containment",
-            F.round(
-                F.col("n_common") / F.least("n_a", "n_b").cast("double"), 6
-            ),
-        )
-        .filter(F.col("containment") >= threshold)
-    )
-    return out.select("doc_id_a", "doc_id_b", "n_common", "n_a", "n_b", "containment")

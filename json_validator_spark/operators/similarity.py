@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from json_validator_spark.operators.dedup import _bucket_pairs
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product — same evaluation order as the DuckDB
@@ -352,47 +354,23 @@ def lsh_neardup_pairs(
     At 10^12 docs this is the only viable shape: candidate count ≈
     Σ_buckets |b|², tunable, vs n² for the baseline — SIZE ``n_planes``
     so buckets stay small (2^n_planes ≫ n/max_bucket; the default 4 is
-    test-scale, a real corpus wants 16-24 planes), and the same
-    hot-bucket star guard as ``dedup.lsh_candidate_pairs`` caps an
-    exact-duplicate embedding flood: buckets above ``max_bucket`` emit
-    O(n) hub-anchored pairs (exact cosine vs the min-id vector) instead
-    of C(n,2)."""
+    test-scale, a real corpus wants 16-24 planes). The in-bucket pairs
+    come from ``dedup._bucket_pairs`` with the vector as payload, whose
+    hot-bucket star guard caps an exact-duplicate embedding flood:
+    buckets above ``max_bucket`` emit O(n) hub-anchored pairs (exact
+    cosine vs the min-id vector) instead of C(n,2)."""
     per_table: list[DataFrame] = []
     for t in range(n_tables):
         b = with_lsh_bucket(
             vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
             dim, n_planes, "v", plane_offset=t * n_planes,
         )
-        sizes = b.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.min("id").alias("__hub"),
-            # struct ordering key: ties on duplicate ids break on the
-            # vector itself (arrays order lexicographically) — hub
-            # choice stays deterministic across partition layouts
-            F.min_by("v", F.struct("id", "v")).alias("__hub_v"),
-        )
-        tagged = b.join(sizes, "bucket")
-        small = tagged.filter(F.col("__n") <= max_bucket)
-        a = small.select(F.col("id").alias("id_a"), F.col("v").alias("va"), "bucket")
-        c = small.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), "bucket")
-        scored = (
-            a.join(c, "bucket")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select(
-                "id_a", "id_b",
-                F.round(cosine(F.col("va"), F.col("vb")), 6).alias("sim"),
-            )
-        )
-        star = (
-            tagged.filter((F.col("__n") > max_bucket) & (F.col("id") != F.col("__hub")))
-            .select(
-                F.col("__hub").alias("id_a"),
-                F.col("id").alias("id_b"),
-                F.round(cosine(F.col("__hub_v"), F.col("v")), 6).alias("sim"),
-            )
-        )
+        pairs = _bucket_pairs(b, ["bucket"], max_bucket, id_col="id", payload="v")
         per_table.append(
-            scored.unionByName(star).filter(F.col("sim") >= threshold)
+            pairs.select(
+                "id_a", "id_b",
+                F.round(cosine(F.col("v_a"), F.col("v_b")), 6).alias("sim"),
+            ).filter(F.col("sim") >= threshold)
         )
     out = per_table[0]
     for p in per_table[1:]:

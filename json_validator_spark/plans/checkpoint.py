@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from json_validator_spark.rules.model import RuleSet
+from json_validator_spark.session import scoped_conf
 
 LINEAGE_SCHEMA = "run_id string, bucket int, status string, n_docs long, n_errors long, ts double"
 VIOLATIONS_SCHEMA = (
@@ -76,33 +77,6 @@ def run_with_checkpoint(
     filtered to THIS call's pending buckets by the same
     ``pmod(xxhash64(doc_id))`` assignment, so a redone bucket rewrites
     its plugin rows too and completed buckets never duplicate them."""
-    # save/restore: leaking dynamic overwrite mode silently changes the
-    # semantics of unrelated partitioned overwrites later in the session
-    _prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        return _run_pending(
-            spark, docs, ruleset, ckpt_dir, run_id, n_buckets, doc_id,
-            max_buckets_this_call, media_catalog, extra_violations,
-            definitions,
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", _prev_mode)
-
-
-def _run_pending(
-    spark: SparkSession,
-    docs: DataFrame,
-    ruleset: RuleSet,
-    ckpt_dir: str,
-    run_id: str,
-    n_buckets: int,
-    doc_id: str,
-    max_buckets_this_call: int | None,
-    media_catalog: DataFrame | None,
-    extra_violations: list[DataFrame] | None,
-    definitions: dict | None = None,
-) -> list[int]:
     from json_validator_spark.plans.pipeline import validate_run
 
     done = completed_buckets(spark, ckpt_dir, run_id)
@@ -124,19 +98,9 @@ def _run_pending(
         spark, subset, ruleset, definitions=definitions, doc_id=doc_id,
         media_catalog=media_catalog, extra_violations=extra_subset or None,
     )
-    # result's frames are materialized: the actions below (violations
-    # write, per-bucket counts, metrics write) re-run no rule
+    # result's frames are materialized: the actions below (per-bucket
+    # counts, violations write, metrics write) re-run no rule
     out = result.violations.withColumn("bucket", bucket_col("doc_id", n_buckets))
-
-    # clear the pending buckets' directories first: dynamic overwrite
-    # only replaces partitions PRESENT in the new data, so a redone
-    # bucket that now yields zero rows — or a reused checkpoint dir from
-    # an earlier run — would otherwise leak stale rows to readers
-    _clear_bucket_dirs(spark, ckpt_dir, pending)
-
-    out.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(ckpt_dir, "violations")
-    )
 
     per_bucket = (
         result.doc_verdicts.groupBy(bucket_col("doc_id", n_buckets).alias("__bucket"))
@@ -162,15 +126,23 @@ def _run_pending(
     # lineage + rule-level metrics"): same idempotence contract as the
     # violations — dynamic-partition overwrite per bucket, so a redone
     # bucket replaces its own metrics. Tiny: buckets × rules rows.
-    (
+    metrics = (
         out.groupBy("bucket", "rule_id", "severity")
         .agg(F.count(F.lit(1)).alias("count"))
         .withColumn("run_id", F.lit(run_id))
         .select("run_id", "rule_id", "severity", "count", "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(ckpt_dir, "metrics"))
     )
+
+    # clear the pending buckets' directories first: dynamic overwrite
+    # only replaces partitions PRESENT in the new data, so a redone
+    # bucket that now yields zero rows — or a reused checkpoint dir from
+    # an earlier run — would otherwise leak stale rows to readers
+    _clear_bucket_dirs(spark, ckpt_dir, pending)
+    with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+        for frame, sub in ((out, "violations"), (metrics, "metrics")):
+            frame.write.mode("overwrite").partitionBy("bucket").parquet(
+                os.path.join(ckpt_dir, sub)
+            )
 
     spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).write.mode("append").parquet(
         os.path.join(ckpt_dir, "lineage")
@@ -204,19 +176,9 @@ def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
     corrupted checkpoint must raise, not silently report zero
     violations (ADVICE r01: blanket ``except Exception`` here turned
     unreadable checkpoints into empty-but-successful reports)."""
-    scheme = path.split("://", 1)[0] if "://" in path else "file"
-    if scheme == "file":
-        local = path.split("://", 1)[-1]
-        has_data = os.path.isdir(local) and any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(local)
-            for f in files
-        )
-        if not has_data:
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(path)
-    # remote filesystems (hdfs://, s3a://, …): probe through Hadoop's FS
-    # API — os.path would misclassify every remote checkpoint as empty
+    # probe through Hadoop's FS API: it resolves a scheme-less path
+    # against fs.defaultFS exactly as spark.read does (os.path would
+    # probe the local disk even when the default FS is HDFS)
     jvm = spark._jvm
     jsc = spark._jsc
     hpath = jvm.org.apache.hadoop.fs.Path(path)

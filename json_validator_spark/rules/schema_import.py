@@ -242,10 +242,11 @@ def _rewrite_recursive_2019(doc: Any) -> Any:
 
 # Keyword positions for the dialect-aware walk in _rewrite_draft4_id:
 # values that ARE schemas, maps WHOSE VALUES are schemas (keys are
-# user-controlled names — never rewritten), lists of schemas, and
-# keywords whose values are DATA (never walked). Anything else passes
-# through untouched; a draft-4 `id` hiding under an unlisted keyword
-# stays `id` and _check_known raises — strict beats silent.
+# user-controlled names — never rewritten), and lists of schemas. Every
+# unlisted keyword passes through untouched, the data keywords (enum,
+# const, default, examples) included, so their values are never walked;
+# a draft-4 `id` hiding under an unlisted keyword stays `id` and
+# _check_known raises — strict beats silent.
 _SUBSCHEMA_KEYWORDS = {
     "items", "additionalItems", "additionalProperties", "propertyNames",
     "contains", "if", "then", "else", "not",
@@ -255,7 +256,6 @@ _SCHEMA_MAP_KEYWORDS = {
     "properties", "patternProperties", "dependentSchemas", "$defs", "definitions",
 }
 _SCHEMA_LIST_KEYWORDS = {"allOf", "anyOf", "oneOf", "prefixItems"}
-_DATA_KEYWORDS = {"enum", "const", "default", "examples"}
 
 
 def _is_draft4(doc: Any) -> bool:
@@ -302,8 +302,6 @@ def _rewrite_draft4_id(doc: Any) -> Any:
                 out[k] = walk(v)
             elif k in _SCHEMA_LIST_KEYWORDS and isinstance(v, list):
                 out[k] = [walk(x) for x in v]
-            elif k in _DATA_KEYWORDS:
-                out[k] = v
             else:
                 out[k] = v
         return out

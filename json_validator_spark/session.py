@@ -8,6 +8,8 @@ for the pandas-UDF slow path, and shuffle partitions sized by parallelism.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -85,6 +87,21 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set one session conf for the duration of a ``with`` block and
+    restore the value in effect before it, also on error — a pipeline
+    step that leaked e.g. dynamic ``partitionOverwriteMode`` would
+    silently change the semantics of unrelated partitioned overwrites
+    later in the session."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def size_shuffle_for(

@@ -30,6 +30,7 @@ from pyspark.sql.streaming import StreamingQuery
 from json_validator_spark.operators.row_checks import explode_violations, with_violations
 from json_validator_spark.rules.compiler import severity_count
 from json_validator_spark.rules.model import RuleSet
+from json_validator_spark.session import scoped_conf
 
 
 def validate_stream(
@@ -76,17 +77,13 @@ def write_batch_idempotent(batch: DataFrame, batch_id: int, path: str) -> None:
     ``plans/checkpoint.py``'s per-bucket violation writes. Module-level
     so the replay contract is directly unit-testable."""
     spark = batch.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         (
             batch.withColumn("batch_id", F.lit(int(batch_id)))
             .write.mode("overwrite")
             .partitionBy("batch_id")
             .parquet(path)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def windowed_violation_rates(

@@ -17,6 +17,7 @@ from json_validator_spark.plans.checkpoint import (
     run_with_checkpoint,
 )
 from json_validator_spark.plans.pipeline import salted_repartition, validate_run
+from json_validator_spark.session import scoped_conf
 from json_validator_spark.sources.synth import (
     span_signature,
     synth_documents,
@@ -361,26 +362,49 @@ def test_validate_run_plugin_hook(spark):
     assert agg.get("plugin.custom") == 1
 
 
-def test_checkpoint_read_missing_vs_corrupt(spark, tmp_path):
+@pytest.mark.parametrize("as_uri", [False, True], ids=["plain_path", "file_uri"])
+def test_checkpoint_read_missing_vs_corrupt(spark, tmp_path, as_uri):
     """Missing/empty checkpoint reads as empty; a corrupt file in a
     COMMITTED bucket raises instead of silently reporting success
     (ADVICE r01). A corrupt file in an UNCOMMITTED bucket is invisible
-    by snapshot isolation - that is correct, not a swallowed error."""
+    by snapshot isolation - that is correct, not a swallowed error.
+    A plain path and a ``file://`` URI take the same Hadoop-FS probe."""
     import pytest as _pytest
 
-    assert read_violations(spark, str(tmp_path / "nope")).count() == 0
+    def ck_dir(p):
+        return p.as_uri() if as_uri else str(p)
+
+    assert read_violations(spark, ck_dir(tmp_path / "nope")).count() == 0
     bad = tmp_path / "ck" / "violations" / "bucket=3"
     bad.mkdir(parents=True)
     (bad / "part-00000.parquet").write_bytes(b"this is not parquet")
     # uncommitted: isolation hides the torn/corrupt bucket
-    assert read_violations(spark, str(tmp_path / "ck")).count() == 0
+    assert read_violations(spark, ck_dir(tmp_path / "ck")).count() == 0
     # committed: the corruption must surface
     spark.createDataFrame(
         [("r", 3, "done", 1, 1, 0.0)],
         "run_id string, bucket int, status string, n_docs long, n_errors long, ts double",
     ).write.mode("append").parquet(str(tmp_path / "ck" / "lineage"))
     with _pytest.raises(Exception):
-        read_violations(spark, str(tmp_path / "ck")).count()
+        read_violations(spark, ck_dir(tmp_path / "ck")).count()
+
+
+def test_dynamic_overwrite_writers_restore_prior_mode(spark, tmp_path):
+    """Both dynamic-overwrite writers (the checkpoint's bucket writes and
+    the streaming sink's batch writes) leave the session's prior
+    partitionOverwriteMode in place afterwards."""
+    from json_validator_spark.streaming.validate_stream import write_batch_idempotent
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    with scoped_conf(spark, key, "STATIC"):
+        run_with_checkpoint(
+            spark, synth_documents(spark, 100), corpus_ruleset(),
+            str(tmp_path / "ck"), run_id="r", n_buckets=4,
+        )
+        assert spark.conf.get(key) == "STATIC"
+        batch = spark.createDataFrame([("d1", "r1")], "doc_id string, rule_id string")
+        write_batch_idempotent(batch, 1, str(tmp_path / "sink"))
+        assert spark.conf.get(key) == "STATIC"
 
 
 def test_checkpoint_bucket_partition_pruning(spark, tmp_path):
@@ -557,8 +581,8 @@ def test_checkpoint_torn_write_invisible_to_readers(spark, tmp_path):
     torn = spark.createDataFrame(
         [("ghost", "/x", "ghost.rule", "error", "m", 99)], VIOLATIONS_SCHEMA
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    torn.write.mode("overwrite").partitionBy("bucket").parquet(f"{ck}/violations")
+    with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+        torn.write.mode("overwrite").partitionBy("bucket").parquet(f"{ck}/violations")
     assert read_violations(spark, ck).filter("rule_id = 'ghost.rule'").count() == 0
     assert read_violations(spark, ck).count() == committed
 

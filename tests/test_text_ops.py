@@ -381,6 +381,26 @@ def test_lsh_hot_bucket_star_guard(spark):
     assert len(full) == n * (n - 1) // 2
 
 
+def test_simhash_hot_bucket_star_guard(spark):
+    """An identical-fingerprint flood larger than max_bucket emits O(n)
+    star pairs anchored at the min doc_id, each scored against the hub's
+    fingerprint (hamming 0); under the cap every pair is emitted."""
+    n = 30
+    dup_docs = spark.createDataFrame(
+        [(i, "same viral content repeated " * 3) for i in range(n)],
+        "doc_id long, text string",
+    )
+    sims = dedup.simhash(dup_docs)
+    star = dedup.simhash_neardup_pairs(sims, max_bucket=5).collect()
+    assert len(star) == n - 1                       # O(n), not 435
+    assert all(r["doc_id_a"] == 0 for r in star)    # anchored at min id
+    assert {r["doc_id_b"] for r in star} == set(range(1, n))
+    assert all(r["hamming"] == 0 for r in star)
+    full = dedup.simhash_neardup_pairs(sims, max_bucket=1000).collect()
+    assert len(full) == n * (n - 1) // 2
+    assert all(r["hamming"] == 0 for r in full)
+
+
 def test_media_codecs_roundtrip():
     """PPM and WAV encode→decode roundtrips are exact, and features come
     from the REAL decoded content (no stub in this path)."""
