@@ -18,6 +18,13 @@ projection over the corpus:
 No shuffle, no UDF: the plan is a single narrow Project. The fused span
 lambdas are higher-order functions, which Spark runs interpreted rather
 than in whole-stage codegen (see ``_branch_violations``).
+
+A rule set compiles to its Columns once per SparkContext, not once per
+call: ``with_violations`` keeps them in ``session.jvm_cached`` under the
+rule set's ``repr``, ``definitions``, ``detail`` and the message locale
+(``_message`` bakes the locale into the plan). At benchmark sizes
+building the Column tree in Python, thousands of py4j round trips,
+costs more than the executors' rule evaluation.
 """
 
 from __future__ import annotations
@@ -35,7 +42,9 @@ from json_validator_spark.rules.compiler import (
     severity_count,
     span_violation_expr,
 )
+from json_validator_spark.rules.messages import get_locale
 from json_validator_spark.rules.model import Combination, Rule, RuleSet, RuleSetGroup
+from json_validator_spark.session import jvm_cached
 
 
 def _branch_violations(
@@ -186,6 +195,33 @@ def _combine(
     return final, doc_pass, n_passed
 
 
+def _compile(
+    ruleset: RuleSet | RuleSetGroup,
+    definitions: dict[str, dict[str, Any]] | None,
+    detail: bool,
+) -> tuple[Column, Column, Column]:
+    """A rule set's ``(violations, doc_pass, n_branches_passed)`` Columns.
+
+    A ``RuleSetGroup`` conjoins groups (allOf between them,
+    ``JSONValidator.java:423-435``) while each keeps its own
+    ALL/ANY/ONE_OF algebra; ``n_branches_passed`` then counts passing
+    GROUPS. Still one projection — the group conjunction is plain
+    boolean algebra over the same narrow pass."""
+    if not isinstance(ruleset, RuleSetGroup):
+        return _combine(ruleset, definitions, detail)
+    finals: list[Column] = []
+    passes: list[Column] = []
+    for g in ruleset.groups:
+        f_g, p_g, _ = _combine(g, definitions, detail)
+        finals.append(f_g)
+        passes.append(p_g)
+    doc_pass = passes[0]
+    for p in passes[1:]:
+        doc_pass = doc_pass & p
+    n_passed = sum((p.cast("int") for p in passes), start=F.lit(0))
+    return _concat_arrays(finals), doc_pass, n_passed
+
+
 def with_violations(
     df: DataFrame,
     ruleset: RuleSet | RuleSetGroup,
@@ -195,26 +231,18 @@ def with_violations(
     """Append ``violations array<struct>``, ``doc_pass boolean`` and
     ``n_branches_passed int`` to ``df`` — still un-exploded, still narrow.
 
-    A ``RuleSetGroup`` conjoins groups (allOf between them,
-    ``JSONValidator.java:423-435``) while each keeps its own
-    ALL/ANY/ONE_OF algebra; ``n_branches_passed`` then counts passing
-    GROUPS. Still one projection — the group conjunction is plain
-    boolean algebra over the same narrow pass."""
-    if isinstance(ruleset, RuleSetGroup):
-        finals: list[Column] = []
-        passes: list[Column] = []
-        for g in ruleset.groups:
-            f_g, p_g, _ = _combine(g, definitions, detail)
-            finals.append(f_g)
-            passes.append(p_g)
-        final = _concat_arrays(finals)
-        doc_pass = passes[0]
-        for p in passes[1:]:
-            doc_pass = doc_pass & p
-        n_passed = sum((p.cast("int") for p in passes), start=F.lit(0))
-    else:
-        final, doc_pass, n_passed = _combine(ruleset, definitions, detail)
-
+    The three Columns come from ``session.jvm_cached``: ``_compile``
+    runs only when no live entry has the same key, which is the rule
+    set's ``repr`` (every dataclass field, so a fresh but equal rule set
+    hits), ``repr(definitions)``, ``detail`` and the active message
+    locale, all within one SparkContext. Building the Column tree costs
+    thousands of py4j round trips for a corpus-sized rule set; a repeat
+    call with the same key costs one ``repr`` and a dict lookup."""
+    final, doc_pass, n_passed = jvm_cached(
+        df.sparkSession,
+        ("rules", repr(ruleset), repr(definitions), detail, get_locale()),
+        lambda: _compile(ruleset, definitions, detail),
+    )
     return df.withColumns(
         {
             "violations": final,

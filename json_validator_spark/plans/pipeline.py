@@ -23,7 +23,11 @@ from json_validator_spark.operators import set_checks as sc
 from json_validator_spark.operators.row_checks import explode_violations, with_violations
 from json_validator_spark.rules.compiler import VIOLATION_FIELD_NAMES
 from json_validator_spark.rules.model import RuleSet, RuleSetGroup
-from json_validator_spark.session import size_shuffle_for
+from json_validator_spark.session import (
+    SHUFFLE_SIZING_CONFS,
+    restored_confs,
+    size_shuffle_for,
+)
 
 
 def salted_repartition(df: DataFrame, n: int, key: str = "doc_id") -> DataFrame:
@@ -96,58 +100,66 @@ def validate_run(
     DataFrame must carry ``(doc_id, span_path, rule_id, severity,
     message)`` and is unioned into the violation stream, so plugin
     findings flow through verdicts / aggregate / metrics identically to
-    built-in rules."""
-    # Data-proportional wide start for the run's shuffles (uniqueness
-    # groupBy, report aggs): input_bytes/64MB initial partitions, floored
-    # at the session base — see session.size_shuffle_for.
-    size_shuffle_for(spark, docs)
-    if repartition_to:
-        docs = salted_repartition(docs, repartition_to, key=doc_id)
+    built-in rules.
 
-    per_doc = (
-        with_violations(docs, ruleset, definitions)
-        .select(
-            F.col(doc_id).alias("doc_id"),
-            F.spark_partition_id().alias("__pid"),
-            "violations",
-        )
-        .localCheckpoint(eager=True)
-    )
+    ``size_shuffle_for`` sizes the shuffles of the two checkpoints only:
+    its confs are restored before this returns, set or unset as the
+    caller had them, so the derived ``RunResult`` plans run under the
+    caller's confs."""
 
     def _untagged(df: DataFrame) -> DataFrame:
         return df.withColumn("__pid", F.lit(None).cast("int"))
 
-    all_viols = [
-        explode_violations(
-            per_doc, F.col("doc_id").cast("string"), __pid=F.col("__pid")
+    # Data-proportional wide start for the run's shuffles (uniqueness
+    # groupBy inside the merged-stream checkpoint): input_bytes/64MB
+    # initial partitions, floored at the session base — see
+    # session.size_shuffle_for.
+    with restored_confs(spark, *SHUFFLE_SIZING_CONFS):
+        size_shuffle_for(spark, docs)
+        if repartition_to:
+            docs = salted_repartition(docs, repartition_to, key=doc_id)
+
+        per_doc = (
+            with_violations(docs, ruleset, definitions)
+            .select(
+                F.col(doc_id).alias("doc_id"),
+                F.spark_partition_id().alias("__pid"),
+                "violations",
+            )
+            .localCheckpoint(eager=True)
         )
-    ]
-    if check_uniqueness:
-        all_viols.append(_untagged(sc.uniqueness_violations(docs, key=doc_id)))
-    if media_catalog is not None:
-        refs = sc.span_media_refs(docs, doc_id=doc_id)
-        all_viols.append(
-            _untagged(
-                sc.referential_violations(
-                    refs, "media_ref", media_catalog, "media_ref",
-                    rule_id="ref.media_catalog",
-                    span_path=F.col("span_path"),
+
+        all_viols = [
+            explode_violations(
+                per_doc, F.col("doc_id").cast("string"), __pid=F.col("__pid")
+            )
+        ]
+        if check_uniqueness:
+            all_viols.append(_untagged(sc.uniqueness_violations(docs, key=doc_id)))
+        if media_catalog is not None:
+            refs = sc.span_media_refs(docs, doc_id=doc_id)
+            all_viols.append(
+                _untagged(
+                    sc.referential_violations(
+                        refs, "media_ref", media_catalog, "media_ref",
+                        rule_id="ref.media_catalog",
+                        span_path=F.col("span_path"),
+                    )
                 )
             )
-        )
-    for extra in extra_violations or []:
-        all_viols.append(
-            _untagged(
-                extra.select(
-                    F.col("doc_id").cast("string").alias("doc_id"),
-                    *VIOLATION_FIELD_NAMES,
+        for extra in extra_violations or []:
+            all_viols.append(
+                _untagged(
+                    extra.select(
+                        F.col("doc_id").cast("string").alias("doc_id"),
+                        *VIOLATION_FIELD_NAMES,
+                    )
                 )
             )
-        )
-    tagged = all_viols[0]
-    for v in all_viols[1:]:
-        tagged = tagged.unionByName(v)
-    tagged = tagged.localCheckpoint(eager=True)
+        tagged = all_viols[0]
+        for v in all_viols[1:]:
+            tagged = tagged.unionByName(v)
+        tagged = tagged.localCheckpoint(eager=True)
     violations = tagged.drop("__pid")
 
     # Total/error/warning counts plus failing row-rule partitions

@@ -3,11 +3,13 @@
 The reference validates a document against a JSON Schema (keyword tree,
 interpreted per document by networknt — ``JSONValidator.java:381-397``).
 Here a *schema* is declarative data: a flat table of rules, each one
-keyword application bound to a target path. Rules are plain Python at the
-driver; they compile once per run to Catalyst Column expressions
-(the analogue of schema parsing at ``JSONValidator.java:321-345``, except
-we deliberately cache the compiled form — the reference disables schema
-caching per request, ``JSONValidator.java:326,334``).
+keyword application bound to a target path. Rules are plain Python
+objects; they compile to Catalyst Column expressions once per rule set
+per SparkContext (the analogue of schema parsing at
+``JSONValidator.java:321-345``, except we deliberately cache the
+compiled form in ``operators/row_checks.with_violations`` — the
+reference disables schema caching per request,
+``JSONValidator.java:326,334``).
 
 Target path grammar (JSON-pointer style, mirroring the reference's
 ``PathType.JSON_POINTER`` locations, ``JSONValidator.java:327``):

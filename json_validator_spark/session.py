@@ -8,10 +8,14 @@ for the pandas-UDF slow path, and shuffle partitions sized by parallelism.
 from __future__ import annotations
 
 import os
+import threading
 from contextlib import contextmanager
-from typing import Iterator
+from typing import Any, Callable, Hashable, Iterator, TypeVar
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 # At cluster scale shuffle partitions should be ~2-3x total cores and
 # large enough that a partition of the biggest shuffle fits in executor
@@ -89,19 +93,71 @@ def get_spark(
     return builder.getOrCreate()
 
 
+# Python-side values that hold py4j references (compiled rule Columns,
+# classpath probes), memoized per SparkContext. A new context, and with
+# it any new JVM gateway, empties the cache, so a stale py4j object is
+# never handed back; pandas-UDF Columns also capture the accumulator of
+# the context that built them. At most _JVM_CACHE_SIZE entries are kept;
+# the oldest goes first. The lock covers the build too, so threads of
+# one process that miss on the same key build it once.
+_JVM_CACHE_SIZE = 16
+_jvm_cache: dict[Hashable, Any] = {}
+_jvm_cache_context: SparkContext | None = None
+_jvm_cache_lock = threading.RLock()
+
+
+def jvm_cached(spark: SparkSession, key: Hashable, build: Callable[[], T]) -> T:
+    """``build()``, memoized under ``key`` for the life of ``spark``'s
+    SparkContext. ``key`` must name everything ``build`` reads."""
+    global _jvm_cache_context
+    sc = spark.sparkContext
+    with _jvm_cache_lock:
+        if sc is not _jvm_cache_context:
+            _jvm_cache.clear()
+            _jvm_cache_context = sc
+        if key in _jvm_cache:
+            return _jvm_cache[key]
+        value = build()
+        if len(_jvm_cache) >= _JVM_CACHE_SIZE:
+            del _jvm_cache[next(iter(_jvm_cache))]
+        _jvm_cache[key] = value
+        return value
+
+
 @contextmanager
-def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
-    """Set one session conf for the duration of a ``with`` block and
-    restore the value in effect before it, also on error — a pipeline
-    step that leaked e.g. dynamic ``partitionOverwriteMode`` would
-    silently change the semantics of unrelated partitioned overwrites
-    later in the session."""
-    prev = spark.conf.get(key)
-    spark.conf.set(key, value)
+def restored_confs(spark: SparkSession, *keys: str) -> Iterator[None]:
+    """Put the named session confs back as they were when the ``with``
+    block began, also on error: a key that had a value gets it back, a
+    key that had none is unset again (``spark.conf.set(key, None)``
+    raises, so a naive restore would leave the block's value behind)."""
+    prev = {k: spark.conf.get(k, None) for k in keys}
     try:
         yield
     finally:
-        spark.conf.set(key, prev)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set one session conf for the duration of a ``with`` block and
+    restore the value in effect before it (see ``restored_confs``) — a
+    pipeline step that leaked e.g. dynamic ``partitionOverwriteMode``
+    would silently change the semantics of unrelated partitioned
+    overwrites later in the session."""
+    with restored_confs(spark, key):
+        spark.conf.set(key, value)
+        yield
+
+
+# The two confs size_shuffle_for sets, for callers that scope them.
+SHUFFLE_SIZING_CONFS = (
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+)
 
 
 def size_shuffle_for(
@@ -144,7 +200,10 @@ def size_shuffle_for(
     so a per-plan scope is impossible); concurrent queries on the same
     session share them — the same sharing every AQE knob has. Each
     pipeline entry point calls this right before its own actions, so
-    sequential workloads each execute under their own sizing.
+    sequential workloads each execute under their own sizing;
+    ``validate_run`` wraps the call and its actions in
+    ``restored_confs(spark, *SHUFFLE_SIZING_CONFS)``, so its caller's
+    confs are back when it returns.
     """
     base = int(spark.conf.get("spark.sql.shuffle.partitions"))
     try:
@@ -167,11 +226,7 @@ def size_shuffle_for(
                 pass
         total = int(got * (len(files) / max(1, len(sampled))))
     initial = max(base, min(total // advisory_bytes, cap))
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", str(initial)
-    )
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        min_partition_size,
-    )
+    initial_key, floor_key = SHUFFLE_SIZING_CONFS
+    spark.conf.set(initial_key, str(initial))
+    spark.conf.set(floor_key, min_partition_size)
     return initial

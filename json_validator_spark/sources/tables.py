@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from json_validator_spark.session import jvm_cached
+
 TPCH_TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -20,13 +22,20 @@ TPCH_TABLES = (
 
 
 def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-            "org.apache.iceberg.spark.source.SparkTable"
-        )
-        return True
-    except Exception:
-        return False
+    """Whether the Iceberg runtime is on the classpath. A failing
+    ``Class.forName`` costs ~80 py4j round trips, so the answer is
+    probed once per SparkContext (``session.jvm_cached``)."""
+
+    def probe() -> bool:
+        try:
+            spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
+                "org.apache.iceberg.spark.source.SparkTable"
+            )
+            return True
+        except Exception:
+            return False
+
+    return jvm_cached(spark, "iceberg_available", probe)
 
 
 def load_table(spark: SparkSession, name_or_path: str, sf_dir: str | None = None) -> DataFrame:

@@ -17,7 +17,11 @@ from json_validator_spark.plans.checkpoint import (
     run_with_checkpoint,
 )
 from json_validator_spark.plans.pipeline import salted_repartition, validate_run
-from json_validator_spark.session import scoped_conf
+from json_validator_spark.session import (
+    SHUFFLE_SIZING_CONFS,
+    restored_confs,
+    scoped_conf,
+)
 from json_validator_spark.sources.synth import (
     span_signature,
     synth_documents,
@@ -405,6 +409,37 @@ def test_dynamic_overwrite_writers_restore_prior_mode(spark, tmp_path):
         batch = spark.createDataFrame([("d1", "r1")], "doc_id string, rule_id string")
         write_batch_idempotent(batch, 1, str(tmp_path / "sink"))
         assert spark.conf.get(key) == "STATIC"
+
+
+def test_scoped_conf_restores_unset_key(spark):
+    """A conf that had no value before a ``scoped_conf`` block has none
+    after it: restoring it as ``None`` raises and leaves the scoped value
+    set."""
+    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    prev = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        with scoped_conf(spark, key, "7"):
+            assert spark.conf.get(key) == "7"
+        assert spark.conf.get(key, None) is None
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
+
+
+@pytest.mark.parametrize("prior", [(None, "1m"), ("7", "2m")], ids=["unset", "set"])
+def test_validate_run_restores_shuffle_sizing_confs(spark, prior):
+    """``validate_run`` sizes the shuffles of its two checkpoints only:
+    the session's shuffle-sizing confs after it equal those before it,
+    whether the caller had set them or not."""
+    with restored_confs(spark, *SHUFFLE_SIZING_CONFS):
+        for key, value in zip(SHUFFLE_SIZING_CONFS, prior):
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+        validate_run(spark, synth_documents(spark, 200), corpus_ruleset())
+        assert tuple(spark.conf.get(k, None) for k in SHUFFLE_SIZING_CONFS) == prior
 
 
 def test_checkpoint_bucket_partition_pruning(spark, tmp_path):

@@ -6,10 +6,16 @@ from __future__ import annotations
 
 import pytest
 
+from json_validator_spark import session
+from json_validator_spark.corpus import corpus_ruleset
+from json_validator_spark.operators import row_checks
 from json_validator_spark.operators.report import doc_verdicts
 from json_validator_spark.operators.row_checks import violations_df, with_violations
+from json_validator_spark.plans.pipeline import validate_run
+from json_validator_spark.rules import messages
 from json_validator_spark.rules.compiler import compile_rule, resolve_refs
 from json_validator_spark.rules.model import Rule, RuleSet
+from json_validator_spark.sources.synth import synth_documents
 from tests.conftest import rows_set
 
 SPAN_SCHEMA = "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
@@ -545,3 +551,148 @@ def test_unique_items_null_elements_are_values(spark):
     rs = RuleSet(rules=(Rule("u", "/a", "uniqueItems", {"value": True}),))
     got = sorted(r["doc_id"] for r in violations_df(df, rs).collect())
     assert got == [1, 2, 4]
+
+
+@pytest.fixture
+def compile_calls(monkeypatch):
+    """Starts the test with an empty compiled-rule cache and records
+    every call of the one rule-set compile function."""
+    monkeypatch.setattr(session, "_jvm_cache", {})
+    calls = []
+    real = row_checks._compile
+
+    def counted(*args):
+        calls.append(args)
+        return real(*args)
+
+    monkeypatch.setattr(row_checks, "_compile", counted)
+    return calls
+
+
+def test_equal_ruleset_compiles_once(spark, compile_calls):
+    """A fresh rule set equal in content to one already compiled, as the
+    CLI builds per call, reuses its Columns: two ``validate_run``s
+    compile once and give identical violations."""
+    docs = synth_documents(spark, 300)
+    runs = [
+        sorted(map(tuple, validate_run(spark, docs, corpus_ruleset()).violations.collect()))
+        for _ in range(2)
+    ]
+    assert len(compile_calls) == 1
+    assert runs[0] and runs[0] == runs[1]
+
+
+def test_compile_cache_key_covers_every_input(spark, compile_calls):
+    """``detail``, ``definitions``, a rule param and the message locale
+    each change what compiles, so each forces a recompile."""
+    df = docs_df(spark, [("d1", [span("imge", None, None, 0)])])
+
+    def rs(values):
+        return RuleSet(rules=(Rule("enum.kind", "/spans/*/kind", "enum", {"values": values}),))
+
+    def message(ruleset, **kw):
+        return violations_df(df, ruleset, **kw).collect()[0]["message"]
+
+    en = message(rs(["text"]))
+    assert message(rs(["text"])) == en
+    assert len(compile_calls) == 1
+    assert message(rs(["text"]), detail=True) != en
+    assert len(compile_calls) == 2
+    message(rs(["text"]), definitions={"unused": {"kind": "required"}})
+    assert len(compile_calls) == 3
+    message(rs(["text", "media"]))
+    assert len(compile_calls) == 4
+    messages.set_locale("fr")
+    try:
+        assert message(rs(["text"])) == "[/spans/*/kind] la valeur ne figure pas dans l'ensemble autorisé"
+    finally:
+        messages.set_locale("en")
+    assert len(compile_calls) == 5
+    assert message(rs(["text"])) == en
+    assert len(compile_calls) == 5
+
+
+def test_repeat_with_violations_skips_the_py4j_build(spark, monkeypatch):
+    """Guard for the compiled-rule cache: a repeat ``with_violations``
+    with an equal rule set makes under a tenth of the first call's py4j
+    round trips, so a cache key that silently never hits fails here."""
+    import gc
+
+    monkeypatch.setattr(session, "_jvm_cache", {})
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    calls = 0
+
+    def counted(*args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    docs = synth_documents(spark, 10)
+
+    def round_trips():
+        nonlocal calls
+        gc.collect()  # py4j releases collected objects through send_command too
+        calls = 0
+        with_violations(docs, corpus_ruleset())
+        return calls
+
+    first, repeat = round_trips(), round_trips()
+    assert repeat * 10 < first, (first, repeat)
+
+
+def test_jvm_cache_is_per_spark_context_and_bounded(monkeypatch):
+    """A different SparkContext (a restarted session, maybe on a new JVM
+    gateway) never sees entries built under another, and the cache keeps
+    at most ``_JVM_CACHE_SIZE`` entries."""
+    from types import SimpleNamespace
+
+    monkeypatch.setattr(session, "_jvm_cache", {})
+    monkeypatch.setattr(session, "_jvm_cache_context", None)
+    a, b = (SimpleNamespace(sparkContext=object()) for _ in range(2))
+    assert session.jvm_cached(a, "k", lambda: 1) == 1
+    assert session.jvm_cached(a, "k", lambda: 2) == 1
+    assert session.jvm_cached(b, "k", lambda: 3) == 3
+    for i in range(session._JVM_CACHE_SIZE + 3):
+        session.jvm_cached(b, i, lambda: i)
+    assert len(session._jvm_cache) == session._JVM_CACHE_SIZE
+    assert "k" not in session._jvm_cache
+
+
+def test_jvm_cache_threads_build_each_key_once(monkeypatch):
+    """Threads that miss on the same keys at once build each key once
+    and leave the cache within its bound."""
+    import sys
+    import threading
+    import time
+    from types import SimpleNamespace
+
+    monkeypatch.setattr(session, "_jvm_cache", {})
+    monkeypatch.setattr(session, "_jvm_cache_context", None)
+    spark = SimpleNamespace(sparkContext=object())
+    n_keys = session._JVM_CACHE_SIZE
+    builds, got = [], []
+
+    def build(k):
+        builds.append(k)
+        time.sleep(0.001)  # a real build waits on py4j with the GIL released
+        return k
+
+    def worker():
+        got.append([session.jvm_cached(spark, k, lambda: build(k)) for k in range(n_keys)])
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert got == [list(range(n_keys))] * len(threads)
+    assert sorted(builds) == list(range(n_keys))
+    assert len(session._jvm_cache) == n_keys
