@@ -433,6 +433,64 @@ def q_running_stats_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+def q_drift_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """STREAMING drift-monitoring parity: events replayed as three
+    time-ordered arrival chunks through ``windowed_histogram`` (daily
+    windows, ``value`` over [0, 100) in 10 bins — values ≥ 100 land in
+    the n_bins+1 edge bucket), and every micro-batch scored in the sink
+    by ``window_drift_scores`` against the fixed-edge baseline
+    histogram of the whole table. The row set is the last batch's
+    scores: every window over all the data. Complete output mode,
+    because append mode emits a window only once the watermark has
+    passed its end, and the stream stops before the last windows
+    close."""
+    import shutil
+    import tempfile
+
+    from json_validator_spark.operators.set_checks import histogram
+    from json_validator_spark.streaming.validate_stream import (
+        window_drift_scores,
+        windowed_histogram,
+    )
+
+    # the watermark needs TIMESTAMP; the table's TIMESTAMP_NTZ reads as
+    # the same UTC wall clock (session.py pins the session time zone)
+    ev = _load(spark, sf_dir, "events").filter(F.col("ts").isNotNull()).select(
+        F.col("ts").cast("timestamp").alias("ts"), "value"
+    )
+    baseline = histogram(ev, "value", 0, 100, 10)
+    base = tempfile.mkdtemp(prefix="jvs_drift_parity_")
+    in_dir = _arrival_chunks(spark, ev, base)
+    stream = (
+        spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(in_dir)
+    )
+    scores: list[dict] = []
+
+    def sink(batch: DataFrame, _batch_id: int) -> None:
+        scores[:] = window_drift_scores(batch, baseline, 10)
+
+    q = (
+        windowed_histogram(stream, "value", 0, 100, 10, window="1 day")
+        .writeStream.outputMode("complete")
+        .foreachBatch(sink)
+        .option("checkpointLocation", f"{base}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+        shutil.rmtree(base, ignore_errors=True)  # the scores are driver-side
+    return spark.createDataFrame(
+        [(s["window_start"], s["psi"], s["ks"]) for s in scores],
+        "window_start timestamp, psi double, ks double",
+    ).select(
+        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+        "psi", "ks",
+    )
+
+
 def q_validate_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FLAGSHIP path through Structured Streaming: the derived span
     corpus replayed as three arrival chunks through
@@ -2600,6 +2658,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "validate_stream_parity": q_validate_stream_parity,
         "neardup_ingest_parity": q_neardup_ingest_parity,
         "running_stats_stream_parity": q_running_stats_stream_parity,
+        "drift_stream_parity": q_drift_stream_parity,
         "rate_limit": q_rate_limit,
         "asof_rates": q_asof_rates,
         "funnel": q_funnel,
@@ -3432,6 +3491,42 @@ def oracle_sql() -> dict[str, str]:
             WHERE ts IS NOT NULL AND event_type IS NOT NULL
             GROUP BY event_type
             HAVING count(value) > 0
+        """,
+        # Mirrors q_drift_stream_parity: Spark width_bucket (0 below lo,
+        # n_bins+1 at or above hi, else floor(n·(v−lo)/(hi−lo)) + 1),
+        # out-of-range buckets folded into the edge bins, every window
+        # scored over all 10 bins (empty bins are zeros) against the
+        # whole table; PSI sums unrounded terms, KS is the max gap of the
+        # cumulative fractions, both rounded to 6 at the end.
+        "drift_stream_parity": """
+            WITH e AS (
+              SELECT date_trunc('day', ts) AS w,
+                     least(greatest(
+                       CASE WHEN value < 0.0 THEN 0
+                            WHEN value >= 100.0 THEN 11
+                            ELSE floor(10 * (value - 0.0) / (100.0 - 0.0))::BIGINT + 1
+                       END, 1), 10) AS bin
+              FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
+            ), bins AS (SELECT unnest(generate_series(1, 10)) AS bin),
+            p AS (
+              SELECT bins.bin, coalesce(n, 0) / (SELECT count(*) FROM e)::DOUBLE AS p
+              FROM bins LEFT JOIN (SELECT bin, count(*) AS n FROM e GROUP BY 1) c USING (bin)
+            ), wins AS (SELECT w, count(*) AS tw FROM e GROUP BY 1),
+            q AS (
+              SELECT wins.w, bins.bin, coalesce(c.n, 0) / wins.tw::DOUBLE AS q
+              FROM wins CROSS JOIN bins
+              LEFT JOIN (SELECT w, bin, count(*) AS n FROM e GROUP BY 1, 2) c
+                ON c.w = wins.w AND c.bin = bins.bin
+            ), pq AS (
+              SELECT w, p, q,
+                     sum(p) OVER (PARTITION BY w ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cp,
+                     sum(q) OVER (PARTITION BY w ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cq
+              FROM q JOIN p USING (bin)
+            )
+            SELECT strftime(w, '%Y-%m-%d %H:%M:%S') AS window_start,
+                   round(sum((p - q) * ln((p + 1e-6) / (q + 1e-6))), 6) AS psi,
+                   round(max(abs(cp - cq)), 6) AS ks
+            FROM pq GROUP BY w
         """,
         # Mirrors q_dedup_stream_parity: canonical = lexicographic-min
         # doc_id within the group's FIRST arriving chunk (chunk = doc_id

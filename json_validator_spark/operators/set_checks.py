@@ -8,9 +8,9 @@ These generalize the reference's report counters / aggregate rollup
   scanned once (SURVEY §4.3.2). Partial (map-side) aggregation means the
   shuffle carries one sketch per partition, not data.
 - ``tdigest_quantiles``: mergeable centroid sketch via ``mapInPandas``
-  (Arrow-vectorized partial) + driver-side merge — the partial+final
-  pattern; complements the built-in ``percentile_approx`` (which is a
-  GK sketch) with a true streaming-mergeable digest.
+  (Arrow-vectorized partial) + a keyed ``applyInPandas`` merge — the
+  partial+final pattern; complements the built-in ``percentile_approx``
+  (which is a GK sketch) with a true streaming-mergeable digest.
 - ``uniqueness_violations``: hash-partitioned groupBy (the groupBy's own
   hash exchange IS the explicit partitioning; AQE splits skewed keys).
 - ``referential_violations``: broadcast left_anti against a dimension
@@ -111,7 +111,7 @@ def exact_column_stats(
 
 
 # ----------------------------------------------------------------------
-# t-digest-style mergeable quantile sketch (partial via Arrow, final at driver)
+# t-digest-style mergeable quantile sketch
 # ----------------------------------------------------------------------
 
 def tdigest_quantiles(
@@ -120,49 +120,21 @@ def tdigest_quantiles(
     probs: Sequence[float] = (0.5, 0.9, 0.99),
     compression: int = 200,
 ) -> dict[float, float]:
-    """Approximate quantiles via a mergeable centroid digest.
-
-    Partial: each Arrow batch collapses to ≤``compression`` weighted
-    centroids inside ``mapInPandas`` (vectorized numpy, no per-row
-    Python). Final: centroids (≤ compression × partitions rows — tiny)
-    merge at the driver by weight-preserving re-clustering. This is the
-    partial+final pattern the built-in sketches use, expressed for a
-    custom sketch Spark lacks (SURVEY §4.3.2)."""
-    import numpy as np
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        vals = []
-        for b in batches:
-            v = b[col].dropna().to_numpy(dtype="float64")
-            if len(v):
-                vals.append(v)
-        if not vals:
-            return
-        v = np.sort(np.concatenate(vals))
-        # collapse to equal-weight centroids (quantile clustering)
-        k = min(compression, len(v))
-        splits = np.array_split(v, k)
-        yield pd.DataFrame(
-            {
-                "mean": [float(s.mean()) for s in splits],
-                "weight": [float(len(s)) for s in splits],
-            }
-        )
-
-    cent = (
-        df.select(F.col(col).cast("double").alias(col))
-        .mapInPandas(partial, schema="mean double, weight double")
-        .collect()
-    )
-    if not cent:
-        return {p: float("nan") for p in probs}
-    means = np.array([r["mean"] for r in cent])
-    weights = np.array([r["weight"] for r in cent])
-    order = np.argsort(means)
-    means, weights = means[order], weights[order]
-    cum = np.cumsum(weights) - weights / 2.0
-    total = weights.sum()
-    return {p: float(np.interp(p * total, cum, means)) for p in probs}
+    """Approximate quantiles ``{p: q}`` via a mergeable centroid digest:
+    ``grouped_tdigest_quantiles`` over one constant group, so the
+    partial (each Arrow batch → ≤``compression`` weighted centroids) and
+    the final merge (one keyed ``applyInPandas``) are the grouped
+    operator's; only the ``len(probs)`` result rows reach the driver.
+    This is the partial+final pattern the built-in sketches use,
+    expressed for a custom sketch Spark lacks (SURVEY §4.3.2). NaN per
+    prob on empty or all-NULL input."""
+    got = {
+        r["p"]: r["q"]
+        for r in grouped_tdigest_quantiles(
+            df.select(F.lit(0).alias("__g1"), col), "__g1", col, probs, compression
+        ).collect()
+    }
+    return {p: got.get(float(p), float("nan")) for p in probs}
 
 
 # ----------------------------------------------------------------------
@@ -256,8 +228,9 @@ def histogram(df: DataFrame, col: Column | str, lo: float, hi: float, n_bins: in
     )
 
 
-def _normalize(hist: DataFrame, n_bins: int) -> list[float]:
-    counts = {r["bucket"]: r["count"] for r in hist.collect()}
+def _normalize(rows, n_bins: int) -> list[float]:
+    """Collected ``(bucket, count)`` rows → ``n_bins`` mass fractions."""
+    counts = {r["bucket"]: r["count"] for r in rows}
     total = sum(counts.values()) or 1
     # width_bucket returns 0 / n_bins+1 for out-of-range → fold into edge bins
     folded = [0.0] * n_bins
@@ -267,19 +240,11 @@ def _normalize(hist: DataFrame, n_bins: int) -> list[float]:
     return [x / total for x in folded]
 
 
-def psi(baseline: DataFrame, current: DataFrame, n_bins: int = 20, eps: float = 1e-6) -> float:
-    """Population Stability Index over two fixed-edge histograms; driver-side
-    on the tiny results. PSI < 0.1 ⇒ stable, > 0.25 ⇒ drifted."""
-    p = _normalize(baseline, n_bins)
-    q = _normalize(current, n_bins)
+def _psi(p: list[float], q: list[float], eps: float = 1e-6) -> float:
     return float(sum((pi - qi) * math.log((pi + eps) / (qi + eps)) for pi, qi in zip(p, q)))
 
 
-def ks_statistic(baseline: DataFrame, current: DataFrame, n_bins: int = 20) -> float:
-    """Kolmogorov–Smirnov statistic (max CDF gap) over the bucketed
-    distributions — an upper-resolution-limited but mergeable estimate."""
-    p = _normalize(baseline, n_bins)
-    q = _normalize(current, n_bins)
+def _ks(p: list[float], q: list[float]) -> float:
     cp = cq = 0.0
     worst = 0.0
     for pi, qi in zip(p, q):
@@ -287,6 +252,20 @@ def ks_statistic(baseline: DataFrame, current: DataFrame, n_bins: int = 20) -> f
         cq += qi
         worst = max(worst, abs(cp - cq))
     return float(worst)
+
+
+def psi(baseline: DataFrame, current: DataFrame, n_bins: int = 20, eps: float = 1e-6) -> float:
+    """Population Stability Index over two fixed-edge histograms; driver-side
+    on the tiny results. PSI < 0.1 ⇒ stable, > 0.25 ⇒ drifted."""
+    return _psi(
+        _normalize(baseline.collect(), n_bins), _normalize(current.collect(), n_bins), eps
+    )
+
+
+def ks_statistic(baseline: DataFrame, current: DataFrame, n_bins: int = 20) -> float:
+    """Kolmogorov–Smirnov statistic (max CDF gap) over the bucketed
+    distributions — an upper-resolution-limited but mergeable estimate."""
+    return _ks(_normalize(baseline.collect(), n_bins), _normalize(current.collect(), n_bins))
 
 
 def stats_violations(
@@ -376,23 +355,23 @@ def drift_violations(
     between two fixed-edge histograms; breaches return violation dicts
     in the standard row shape (corpus-subject, like
     ``stats_violations``). Histograms are tiny (n_bins rows after
-    map-side combine) so the comparison is driver-side by design."""
+    map-side combine) so the comparison is driver-side by design; each
+    is collected once and both statistics read the same vectors."""
     out: list[dict] = []
-    p = psi(baseline, current, n_bins)
-    if p > max_psi:
+    p = _normalize(baseline.collect(), n_bins)
+    q = _normalize(current.collect(), n_bins)
+    if _psi(p, q) > max_psi:
         out.append({
             "doc_id": "__corpus__", "span_path": f"/{column}",
             "rule_id": f"drift.psi.{column}", "severity": "error",
             "message": f"[/{column}] population stability index exceeds the allowed maximum",
         })
-    if max_ks is not None:
-        k = ks_statistic(baseline, current, n_bins)
-        if k > max_ks:
-            out.append({
-                "doc_id": "__corpus__", "span_path": f"/{column}",
-                "rule_id": f"drift.ks.{column}", "severity": "error",
-                "message": f"[/{column}] KS statistic exceeds the allowed maximum",
-            })
+    if max_ks is not None and _ks(p, q) > max_ks:
+        out.append({
+            "doc_id": "__corpus__", "span_path": f"/{column}",
+            "rule_id": f"drift.ks.{column}", "severity": "error",
+            "message": f"[/{column}] KS statistic exceeds the allowed maximum",
+        })
     return out
 
 
@@ -461,87 +440,32 @@ def snapshot_diff(
 # Robust outliers — exact median/MAD over the value histogram
 # ----------------------------------------------------------------------
 
-def exact_median_mad(
-    df: DataFrame, col: str, max_distinct: int = 2_000_000
-) -> tuple[float, float, int]:
-    """Exact ``(median, MAD, n)`` of a BOUNDED-DOMAIN numeric column via
-    its value histogram: ``groupBy(value).count()`` (partial-agg, the
-    shuffle carries one row per DISTINCT value per partition), collect
-    the histogram, and take weighted order statistics on the driver.
+def exact_median_mad(df: DataFrame, col: str) -> tuple[float, float, int]:
+    """Exact ``(median, MAD, n)`` of a numeric column, NULLs excluded —
+    ``grouped_median_mad`` over one constant group, so there is one
+    implementation of the order statistics and their rounding, and only
+    the 1-row result reaches the driver. ``(nan, nan, 0)`` on empty
+    input.
 
-    Exact at any row count when the value domain is bounded (e.g. a
-    2-decimal metric capped at 10^4 has ≤10^6 distinct values no matter
-    whether the table has 10^4 or 10^12 rows) — the scalable exact
-    complement of ``tdigest_quantiles``, which is the right tool when
-    the domain is unbounded. Interpolation matches ANSI
-    ``percentile_cont``/DuckDB ``median``: at even n the two middle
-    order statistics interpolate; MAD = median(|x − median|) on the
-    same histogram (deviation multiset re-sorted driver-side). Both are
-    rounded to 6 decimals as part of the contract so last-ulp
-    interpolation-order differences between engines cannot leak into
-    downstream thresholds (the ``lm_scores`` quantization discipline).
+    Interpolation is ANSI ``percentile_cont``'s: at even n the two
+    middle order statistics interpolate; MAD = median(|x − median|)
+    around the ROUNDED median. Both equal DuckDB's
+    ``round(median(v), 6)`` bit for bit (same interpolant, same
+    rounding: 1.0000015 → 1.000002, where Python's ``round`` gives
+    1.000001) as part of the contract, so engine differences cannot leak
+    into downstream thresholds (the ``lm_scores`` quantization
+    discipline).
 
-    CARDINALITY GUARD: a cheap ``approx_count_distinct`` probe runs
-    first; above ``max_distinct`` (a raw-float / micro-timestamp column
-    would make the histogram corpus-sized and the collect a driver OOM)
-    the computation reroutes through the fully distributed
-    ``grouped_median_mad`` with one synthetic group — IDENTICAL
-    interpolation and rounding, so results don't depend on which path
-    ran; only a bounded 1-row frame ever reaches the driver. The
-    single-group window sorts the histogram in one spill-capable task —
-    slow at extreme cardinality but never an OOM; truly unbounded
+    Scale: the shuffle carries one row per DISTINCT value per partition,
+    and the single group's window sorts that value histogram in one
+    spill-capable task — cheap for a bounded value domain (a 2-decimal
+    metric capped at 10^4 has ≤10^6 distinct values at any row count),
+    slow but never an OOM at extreme cardinality; truly unbounded
     domains should use ``tdigest_quantiles`` instead."""
-    approx_nd = (
-        df.agg(F.approx_count_distinct(F.col(col).cast("double"))).first()[0] or 0
-    )
-    if approx_nd > max_distinct:
-        row = (
-            grouped_median_mad(
-                df.filter(F.col(col).isNotNull()).withColumn("__g1", F.lit(0)),
-                "__g1",
-                col,
-            )
-            .select("med", "mad", "n")
-            .first()
-        )
-        if row is None:
-            return (float("nan"), float("nan"), 0)
-        return (row["med"], row["mad"], row["n"])
-    rows = (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(F.col(col).cast("double").alias("__v"))
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .collect()
-    )
-    if not rows:
+    row = grouped_median_mad(df.select(F.lit(0).alias("__g1"), col), "__g1", col).first()
+    if row is None:
         return (float("nan"), float("nan"), 0)
-
-    def _wmedian(pairs: list[tuple[float, int]]) -> float:
-        pairs = sorted(pairs)
-        n = sum(c for _, c in pairs)
-        pos = (n - 1) * 0.5
-        lo_rank, frac = int(math.floor(pos)), pos - math.floor(pos)
-        lo = hi = None
-        cum = 0
-        for v, c in pairs:
-            if lo is None and cum + c > lo_rank:
-                lo = v
-            if cum + c > lo_rank + (1 if frac > 0 else 0):
-                hi = v
-                break
-            cum += c
-        hi = hi if hi is not None else lo
-        return lo + frac * (hi - lo)
-
-    pairs = [(r["__v"], r["__c"]) for r in rows]
-    n = sum(c for _, c in pairs)
-    med = round(_wmedian(pairs), 6)
-    dev: dict[float, int] = {}
-    for v, c in pairs:
-        d = abs(v - med)
-        dev[d] = dev.get(d, 0) + c
-    mad = round(_wmedian(list(dev.items())), 6)
-    return (med, mad, n)
+    return (row["med"], row["mad"], row["n"])
 
 
 def robust_outlier_violations(
@@ -559,9 +483,10 @@ def robust_outlier_violations(
     resistant to the very outliers being hunted, unlike mean/stddev
     (``stats_violations``' μ±kσ complement).
 
-    Shape: ONE bounded histogram aggregate (see ``exact_median_mad``)
-    feeding two driver constants, then a NARROW filter+projection over
-    the corpus — no second shuffle, no window; the violation frame is
+    Shape: ``exact_median_mad`` (the single-group form of
+    ``grouped_median_mad``) returns the median and MAD as two driver
+    constants, then a NARROW filter+projection over the corpus — no
+    join back, no window over the corpus; the violation frame is
     outlier-rate-sized. MAD = 0 (≥50% of mass on one value) disables
     the check rather than dividing by zero."""
     rid = rule_id or f"outlier.mad.{col}"
@@ -693,18 +618,19 @@ def completeness_gaps(
 
 def _grouped_wmedian(vc: DataFrame, out_name: str) -> DataFrame:
     """Weighted interpolated median per group over a value histogram
-    ``(g, __v, __c)`` — the fully distributed form of
-    ``exact_median_mad``'s driver-side order statistics, for when the
-    GROUP count is unbounded and collecting is off the table.
+    ``(g, __v, __c)`` — the one implementation of the order statistics
+    behind ``grouped_median_mad`` and ``exact_median_mad``; nothing
+    histogram-sized reaches the driver.
 
     Per group: window cumsums give each distinct value its start rank
     and the group total; the rows covering ranks floor/ceil((n−1)/2)
     are flagged and a conditional agg picks them out; interpolation
-    matches ANSI percentile_cont. Shape: one exchange to key the
-    histogram, one window over it (group-partitioned — never global),
-    and a final agg that reuses the window's partitioning (subset-keyed
-    ClusteredDistribution, zero extra exchange). Everything after the
-    first groupBy is histogram-sized."""
+    is ANSI percentile_cont's, written as DuckDB computes it. Shape:
+    one exchange to key the histogram, one window over it
+    (group-partitioned — never global), and a final agg that reuses the
+    window's partitioning (subset-keyed ClusteredDistribution, zero
+    extra exchange). Everything after the first groupBy is
+    histogram-sized."""
     from pyspark.sql import Window as W
 
     part = W.partitionBy("g").orderBy("__v")
@@ -721,6 +647,12 @@ def _grouped_wmedian(vc: DataFrame, out_name: str) -> DataFrame:
     lo_rank = F.floor(pos)
     hi_rank = F.ceil(pos)
     covers = lambda r: (F.col("__start") <= r) & (r < F.col("__start") + F.col("__c"))
+    # DuckDB's interpolant and round(x, 6) — half away from zero of
+    # x·10^6 on the binary value — op for op: at a 7th-decimal tie the
+    # last ulp decides, and Spark's round(x, 6) rounds the shortest
+    # decimal form instead, which disagrees on ~1% of such ties.
+    frac = F.col("__frac")
+    interp = F.col("__vlo") * (1.0 - frac) + F.col("__vhi") * frac
     return (
         ranked.withColumn("__frac", pos - lo_rank)
         .groupBy("g")
@@ -732,10 +664,7 @@ def _grouped_wmedian(vc: DataFrame, out_name: str) -> DataFrame:
         )
         .select(
             "g",
-            F.round(
-                F.col("__vlo") + F.col("__frac") * (F.col("__vhi") - F.col("__vlo")),
-                6,
-            ).alias(out_name),
+            (F.round(interp * 1e6) / 1e6).alias(out_name),
             F.col("__n").alias(f"{out_name}_n"),
         )
     )
@@ -747,8 +676,8 @@ def grouped_median_mad(df: DataFrame, group_col: str, col: str) -> DataFrame:
     joined on the group key. All exchanges carry histogram-sized rows;
     the med↔histogram join keys both sides on the group so AQE plans a
     co-partitioned (or broadcast, when groups are few) join. Median and
-    MAD are rounded to 6 as the cross-engine contract
-    (``exact_median_mad`` discipline)."""
+    MAD are rounded to 6 as the cross-engine contract (see
+    ``exact_median_mad``, which is this over one constant group)."""
     vc = (
         df.filter(F.col(col).isNotNull())
         .groupBy(
@@ -857,6 +786,24 @@ def benford_check(
     )
 
 
+def _two_sample_counts(df: DataFrame, is_baseline: Column, **keys: Column) -> DataFrame:
+    """``(keys…, nb, nc)``: ONE partial-agg groupBy on the keys that
+    splits each cell's rows by the ``is_baseline`` flag into baseline
+    and current counts — the only corpus-sized exchange of every
+    two-sample drift test."""
+    return (
+        df.select(
+            *[c.alias(k) for k, c in keys.items()],
+            is_baseline.cast("int").alias("base"),
+        )
+        .groupBy(*keys)
+        .agg(
+            F.sum("base").alias("nb"),
+            F.sum(1 - F.col("base")).alias("nc"),
+        )
+    )
+
+
 def grouped_drift_psi(
     df: DataFrame,
     segment_col: str,
@@ -881,18 +828,8 @@ def grouped_drift_psi(
     6 before the per-segment sum (cross-engine ``ln`` contract)."""
     from pyspark.sql import Window as W
 
-    flag = is_baseline.cast("int")
-    counts = (
-        df.select(
-            F.col(segment_col).alias("segment"),
-            bucket.alias("bucket"),
-            flag.alias("base"),
-        )
-        .groupBy("segment", "bucket")
-        .agg(
-            F.sum("base").alias("nb"),
-            F.sum(1 - F.col("base")).alias("nc"),
-        )
+    counts = _two_sample_counts(
+        df, is_baseline, segment=F.col(segment_col), bucket=bucket
     )
     seg = W.partitionBy("segment")
     withtot = counts.select(
@@ -926,8 +863,8 @@ def grouped_tdigest_quantiles(
     compression: int = 200,
 ) -> DataFrame:
     """Per-GROUP approximate quantiles via mergeable centroid digests —
-    the grouped form of ``tdigest_quantiles`` with the driver taken out
-    of the loop entirely: partials collapse each Arrow batch's
+    ``tdigest_quantiles`` is this over one constant group, with no
+    centroid ever reaching the driver: partials collapse each Arrow batch's
     per-group values to ≤``compression`` weighted centroids inside
     ``mapInPandas``; the final merge is ``applyInPandas`` keyed on the
     group (ONE centroid-sized shuffle), so the group count is unbounded
@@ -1195,18 +1132,8 @@ def grouped_drift_ks(
     never generated (the CDF gap is constant across them)."""
     from pyspark.sql import Window as W
 
-    flag = is_baseline.cast("int")
-    counts = (
-        df.select(
-            F.col(segment_col).alias("segment"),
-            bucket.alias("bucket"),
-            flag.alias("base"),
-        )
-        .groupBy("segment", "bucket")
-        .agg(
-            F.sum("base").alias("nb"),
-            F.sum(1 - F.col("base")).alias("nc"),
-        )
+    counts = _two_sample_counts(
+        df, is_baseline, segment=F.col(segment_col), bucket=bucket
     )
     seg = W.partitionBy("segment")
     cum = W.partitionBy("segment").orderBy("bucket").rowsBetween(
@@ -1258,17 +1185,9 @@ def categorical_drift_chi2(
     category."""
     from pyspark.sql import Window as W
 
-    flag = is_baseline.cast("int")
-    counts = (
-        df.select(
-            F.coalesce(F.col(cat_col).cast("string"), F.lit("\x00null")).alias("cat"),
-            flag.alias("base"),
-        )
-        .groupBy("cat")
-        .agg(
-            F.sum("base").alias("nb"),
-            F.sum(1 - F.col("base")).alias("nc"),
-        )
+    counts = _two_sample_counts(
+        df, is_baseline,
+        cat=F.coalesce(F.col(cat_col).cast("string"), F.lit("\x00null")),
     )
     all_w = W.partitionBy()
     cells = counts.select(

@@ -152,22 +152,23 @@ def windowed_histogram(
 def window_drift_scores(
     windowed_hist: DataFrame, baseline_hist: DataFrame, n_bins: int = 20
 ) -> "list[dict]":
-    """PSI + KS of every completed window against the baseline
-    histogram — driver-side over the tiny per-window results (the same
-    discipline as ``set_checks.psi``); call from the sink on each
-    micro-batch or on the batch result."""
-    from json_validator_spark.operators.set_checks import ks_statistic, psi
+    """PSI + KS of every window against the baseline histogram, sorted by
+    ``window_start``: the windowed histogram and the baseline are each
+    collected ONCE (tiny — ≤ windows × n_bins rows), then every window
+    is scored driver-side by the same functions as ``set_checks.psi`` /
+    ``ks_statistic``, so the job count does not depend on the number of
+    windows. Call from the sink on each micro-batch or on the batch
+    result."""
+    from collections import defaultdict
 
+    from json_validator_spark.operators.set_checks import _ks, _normalize, _psi
+
+    p = _normalize(baseline_hist.collect(), n_bins)
+    by_window = defaultdict(list)
+    for r in windowed_hist.select("window_start", "bucket", "count").collect():
+        by_window[r["window_start"]].append(r)
     out: list[dict] = []
-    for w in sorted(
-        r["window_start"] for r in windowed_hist.select("window_start").distinct().collect()
-    ):
-        cur = windowed_hist.filter(F.col("window_start") == w).select("bucket", "count")
-        out.append(
-            {
-                "window_start": w,
-                "psi": round(psi(baseline_hist, cur, n_bins), 6),
-                "ks": round(ks_statistic(baseline_hist, cur, n_bins), 6),
-            }
-        )
+    for w, rows in sorted(by_window.items()):
+        q = _normalize(rows, n_bins)
+        out.append({"window_start": w, "psi": round(_psi(p, q), 6), "ks": round(_ks(p, q), 6)})
     return out

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import itertools
+
 import pytest
 
 from json_validator_spark.session import get_spark
@@ -17,3 +19,18 @@ def rows_set(df, *cols):
     """Order-insensitive comparison helper: set of tuples."""
     sel = df.select(*cols) if cols else df
     return {tuple(r) for r in sel.collect()}
+
+
+_job_groups = itertools.count()
+
+
+def job_count(spark, fn):
+    """Number of Spark jobs ``fn()`` runs, counted through a job group."""
+    group = f"job-count-{next(_job_groups)}"
+    ctx = spark.sparkContext
+    ctx.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        ctx.setLocalProperty("spark.jobGroup.id", None)
+    return len(ctx.statusTracker().getJobIdsForGroup(group))

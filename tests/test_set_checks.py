@@ -3,12 +3,35 @@
 from __future__ import annotations
 
 import math
+import random
 
 from pyspark.sql import functions as F
 
 from json_validator_spark.operators import set_checks as sc
 from json_validator_spark.sources.synth import synth_documents, synth_media_catalog
-from tests.conftest import rows_set
+from tests.conftest import job_count, rows_set
+
+
+def _duckdb_median_mad(groups):
+    """Independent reference: DuckDB ``round(median(v), 6)`` and the MAD
+    around that rounded median, per group → ``{g: (med, mad, n)}``."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (g INTEGER, v DOUBLE)")
+    con.executemany(
+        "INSERT INTO t VALUES (?, ?)", [(g, v) for g, vals in groups.items() for v in vals]
+    )
+    return {
+        g: (med, mad, n)
+        for g, med, mad, n in con.execute(
+            """
+            WITH m AS (SELECT g, round(median(v), 6) AS med, count(*) AS n FROM t GROUP BY g)
+            SELECT g, med, round(median(abs(v - med)), 6), n FROM t JOIN m USING (g)
+            GROUP BY g, med, n
+            """
+        ).fetchall()
+    }
 
 
 def test_column_stats_single_pass(spark):
@@ -30,6 +53,8 @@ def test_tdigest_quantiles_matches_exact(spark):
     q = sc.tdigest_quantiles(df, "v", probs=(0.5, 0.9))
     assert abs(q[0.5] - 5000) < 100
     assert abs(q[0.9] - 9000) < 100
+    empty = sc.tdigest_quantiles(df.filter("v < 0"), "v", probs=(0.5, 0.9))
+    assert list(empty) == [0.5, 0.9] and all(math.isnan(x) for x in empty.values())
 
 
 def test_uniqueness(spark):
@@ -120,6 +145,39 @@ def test_drift_violations_thresholds(spark):
     got = sc.drift_violations(same, shifted, "v", 10, max_psi=0.1, max_ks=0.05)
     assert {g["rule_id"] for g in got} == {"drift.psi.v", "drift.ks.v"}
     assert all(g["doc_id"] == "__corpus__" and g["severity"] == "error" for g in got)
+
+
+def test_ungrouped_drift_goldens(spark):
+    """psi / ks_statistic / drift_violations pinned bit-for-bit over
+    histograms with the out-of-range buckets 0 and n_bins+1 (folded into
+    the edge bins) and with one side empty; drift_violations collects
+    each histogram once for both statistics."""
+    base = sc.histogram(
+        spark.range(0, 3000).select(((F.col("id") % 120) - 10).cast("double").alias("v")),
+        "v", 0, 100, 10,
+    )
+    cur = sc.histogram(
+        spark.range(0, 2000).select(((F.col("id") % 70) * 1.7 + 3).cast("double").alias("v")),
+        "v", 0, 100, 10,
+    )
+    empty = base.filter(F.lit(False))
+    assert {r["bucket"] for r in base.collect()} == set(range(12))
+    cases = [
+        (base, cur, 0.11597262843229605, 0.10500000000000001),
+        (base, empty, 11.561662968308923, 1.0),
+        (empty, cur, 11.60934871426881, 0.9999999999999998),
+    ]
+    for b, c, want_psi, want_ks in cases:
+        assert sc.psi(b, c, 10) == want_psi
+        assert sc.ks_statistic(b, c, 10) == want_ks
+        assert sc.drift_violations(b, c, "v", 10, max_psi=want_psi, max_ks=want_ks) == []
+        got = sc.drift_violations(
+            b, c, "v", 10,
+            max_psi=math.nextafter(want_psi, 0), max_ks=math.nextafter(want_ks, 0),
+        )
+        assert [g["rule_id"] for g in got] == ["drift.psi.v", "drift.ks.v"]
+    both = job_count(spark, lambda: sc.drift_violations(base, cur, "v", 10, max_ks=0.0))
+    assert both == job_count(spark, lambda: sc.psi(base, cur, 10))
 
 
 def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
@@ -236,6 +294,11 @@ def test_exact_median_mad_matches_statistics(spark):
     # empty
     med3, mad3, n3 = sc.exact_median_mad(df2.filter("v > 100"), "v")
     assert n3 == 0 and math.isnan(med3)
+    # a 7th-decimal tie rounds as DuckDB does (Python's round gives 1.000001)
+    tie = [1.000001, 1.000002]
+    got = sc.exact_median_mad(spark.createDataFrame([(v,) for v in tie], "v double"), "v")
+    assert got == _duckdb_median_mad({0: tie})[0]
+    assert got[0] == 1.000002
 
 
 def test_robust_outlier_violations(spark):
@@ -303,9 +366,24 @@ def test_grouped_median_mad_matches_statistics(spark):
         mad = round(statistics.median(sorted(abs(x - med) for x in vals)), 6)
         assert got[key]["med"] == med and got[key]["mad"] == mad
         assert got[key]["n"] == len(vals)
-    # agrees with the driver-side implementation on a single group
+    # agrees with the ungrouped entry point on a single group
     med1, mad1, n1 = sc.exact_median_mad(df.filter("g = 'a'"), "v")
     assert (got["a"]["med"], got["a"]["mad"], got["a"]["n"]) == (med1, mad1, n1)
+    # 6-decimal fuzz: even-n medians are 7th-decimal ties, so the
+    # interpolant's last ulp and the rounding rule both show
+    rng = random.Random(7)
+    fuzz = {
+        i: [round(rng.uniform(0, 10), 6) for _ in range(rng.randint(2, 9))]
+        for i in range(40)
+    }
+    fdf = spark.createDataFrame(
+        [(g, v) for g, vals in fuzz.items() for v in vals], "g int, v double"
+    )
+    got = {
+        r["g"]: (r["med"], r["mad"], r["n"])
+        for r in sc.grouped_median_mad(fdf, "g", "v").collect()
+    }
+    assert got == _duckdb_median_mad(fuzz)
 
 
 def test_grouped_outliers_use_per_group_scale(spark):
@@ -492,22 +570,19 @@ def test_categorical_drift_chi2_one_sided_guard(spark):
     ).count() == 0
 
 
-# ----------------------------------------------------------------------
-# Cardinality guards: high-distinct columns must not collect to the
-# driver (exact_median_mad) or single-task the window (value_ranks)
-# ----------------------------------------------------------------------
-
-
-def test_exact_median_mad_guard_matches_driver_path(spark):
-    from json_validator_spark.operators.set_checks import exact_median_mad
-
+def test_exact_median_mad_5001_rows_matches_duckdb(spark):
     df = spark.range(5001).select(
         F.col("id"), ((F.col("id") % 977) / 7.0 + (F.col("id") % 13)).alias("x")
     )
-    fast = exact_median_mad(df, "x")                      # driver histogram
-    guarded = exact_median_mad(df, "x", max_distinct=50)  # forced distributed
-    assert guarded == fast
-    assert guarded[2] == 5001 and guarded[1] > 0
+    got = sc.exact_median_mad(df, "x")
+    assert got == _duckdb_median_mad({0: [r["x"] for r in df.collect()]})[0]
+    assert got[2] == 5001 and got[1] > 0
+
+
+# ----------------------------------------------------------------------
+# Cardinality guard: a high-distinct column must not single-task the
+# value_ranks window
+# ----------------------------------------------------------------------
 
 
 def test_value_ranks_sharded_path_matches_and_distributes(spark):

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from json_validator_spark.sources.derive import SPAN_SCHEMA, derive_corpus, derived_corpus_ruleset
-from tests.conftest import rows_set
+from tests.conftest import job_count, rows_set
 
 
 @pytest.fixture()
@@ -388,6 +388,30 @@ def test_windowed_drift_scores(spark):
     calm, drifted = scores[0], scores[1]
     assert calm["psi"] < 0.01 and calm["ks"] < 0.01
     assert drifted["psi"] > 0.25 and drifted["ks"] > 0.2
+    assert [(s["psi"], s["ks"]) for s in scores] == [(0.0, 0.0), (7.457532, 0.6)]
+
+    # the job count does not grow with the number of windows
+    def hist_of(n_windows):
+        ids = spark.range(0, 3000 * n_windows)
+        hour = (F.col("id") / 3000).cast("int")
+        v = F.when(hour % 2 == 0, F.col("id") % 100).otherwise(60 + F.col("id") % 40)
+        return windowed_histogram(
+            ids.select(
+                (F.lit("2024-01-01 10:00:30").cast("timestamp")
+                 + F.make_interval(hours=hour)).alias("ts"),
+                v.cast("double").alias("v"),
+            ),
+            "v", 0, 100, 10, window="1 hour",
+        )
+
+    jobs = {}
+    for n in (2, 6):
+        out = []
+        jobs[n] = job_count(
+            spark, lambda: out.extend(window_drift_scores(hist_of(n), baseline, 10))
+        )
+        assert [(s["psi"], s["ks"]) for s in out] == [(0.0, 0.0), (7.457532, 0.6)] * (n // 2)
+    assert jobs[2] == jobs[6]
 
 
 def test_neardup_ingest_stream(tmp_path, spark):
