@@ -355,6 +355,20 @@ def _write_chunks(df: DataFrame, base: str, conds) -> str:
     return in_dir
 
 
+def _rows_then_remove(df: DataFrame, base: str) -> DataFrame:
+    """``df`` — a read of a stream's output under ``base`` — collected
+    to a driver-side frame of the same schema, and ``base`` (arrival
+    chunks, checkpoint, outputs) removed, so a parity row leaves no
+    temp dir behind."""
+    import shutil
+
+    try:
+        rows, schema = df.collect(), df.schema
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+    return df.sparkSession.createDataFrame(rows, schema)
+
+
 def _arrival_chunks(spark: SparkSession, df: DataFrame, base: str) -> str:
     """Write ``df`` as three event-time-ordered parquet arrival chunks
     under ``{base}/in`` — the landing-directory shape the streaming
@@ -399,8 +413,11 @@ def q_session_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{base}/out", f"{base}/ckpt", gap_minutes=30, max_files_per_trigger=1,
     )
     q.awaitTermination()
-    return spark.read.parquet(f"{base}/out/sessions").select(
-        "user_id", "event_id", "session_idx", "session_id"
+    return _rows_then_remove(
+        spark.read.parquet(f"{base}/out/sessions").select(
+            "user_id", "event_id", "session_idx", "session_id"
+        ),
+        base,
     )
 
 
@@ -428,8 +445,9 @@ def q_running_stats_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     q.awaitTermination()
     out = spark.read.parquet(f"{base}/out/stats")
     last = out.groupBy("key").agg(F.max("batch_id").alias("batch_id"))
-    return out.join(last, ["key", "batch_id"]).select(
-        "key", "n", "mean", "std", "min", "max"
+    return _rows_then_remove(
+        out.join(last, ["key", "batch_id"]).select("key", "n", "mean", "std", "min", "max"),
+        base,
     )
 
 
@@ -513,8 +531,11 @@ def q_validate_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_files_per_trigger=1,
     )
     q.awaitTermination()
-    return spark.read.parquet(f"{base}/out/violations").select(
-        "doc_id", "span_path", "rule_id", "severity", "message"
+    return _rows_then_remove(
+        spark.read.parquet(f"{base}/out/violations").select(
+            "doc_id", "span_path", "rule_id", "severity", "message"
+        ),
+        base,
     )
 
 
@@ -539,8 +560,11 @@ def q_dedup_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{base}/out", f"{base}/ckpt", max_files_per_trigger=1,
     )
     q.awaitTermination()
-    return spark.read.parquet(f"{base}/out/dedup").select(
-        "doc_id", "text_hash", "is_duplicate", "first_doc_id"
+    return _rows_then_remove(
+        spark.read.parquet(f"{base}/out/dedup").select(
+            "doc_id", "text_hash", "is_duplicate", "first_doc_id"
+        ),
+        base,
     )
 
 
@@ -1122,7 +1146,7 @@ def q_neardup_ingest_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=3, n_hashes=16, n_bands=8, threshold=0.999, max_bucket=10**6,
     )
     q.awaitTermination()
-    return spark.read.parquet(f"{base}/out/accepted").select("doc_id")
+    return _rows_then_remove(spark.read.parquet(f"{base}/out/accepted").select("doc_id"), base)
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -122,8 +122,9 @@ def main() -> None:
             check_uniqueness=True,
         )
         # validate_run has already evaluated the rules once into its
-        # materialized frames; metrics is a small agg over them
-        # (equivalence with the other RunResult fields asserted in
+        # materialized frames and observed the metrics while doing so;
+        # collecting them runs no job (equivalence with the other
+        # RunResult fields asserted in
         # tests/test_pipeline.py::test_run_metrics_single_action).
         m = res.metrics.collect()[0]
         return m["n_violations"], m["n_failing_partitions"]

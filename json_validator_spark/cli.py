@@ -65,6 +65,7 @@ def _load_ruleset(path: str | None):
 
 
 def cmd_validate(args: argparse.Namespace) -> int:
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from json_validator_spark.operators import report as rpt
@@ -171,7 +172,16 @@ def cmd_validate(args: argparse.Namespace) -> int:
     # n_errors, n_warnings, result); the partition rollup gets its own
     # table where there is one
     write_table(rpt.ordered(violations), f"{args.output}/violations")
-    write_table(rpt.doc_verdicts_merged(ids, violations), f"{args.output}/verdicts")
+    # n_docs is counted while the verdict table (one row per doc incl.
+    # corrupt uploads) is written: docs.count() would re-run the whole
+    # raw ingestion, and re-reading the table costs two more jobs
+    verdict_rows = Observation()
+    write_table(
+        rpt.doc_verdicts_merged(ids, violations).observe(
+            verdict_rows, F.count(F.lit(1)).alias("n_docs")
+        ),
+        f"{args.output}/verdicts",
+    )
     if partition_verdicts is not None:
         write_table(partition_verdicts, f"{args.output}/partition_verdicts")
     write_table(aggregate, f"{args.output}/aggregate")
@@ -194,10 +204,7 @@ def cmd_validate(args: argparse.Namespace) -> int:
         )
         write_aggregate(violations, f"{out_dir}/TAR-aggregate.{args.format}", date=now)
     elapsed = time.perf_counter() - t0
-    # count from the materialized verdict table (one row per doc incl.
-    # corrupt uploads) — docs.count() would re-run the whole raw
-    # ingestion (text/binaryFile scan + parse) a second time
-    n_docs = load_table(spark, f"{args.output}/verdicts").count()
+    n_docs = verdict_rows.get["n_docs"]
     print(
         json.dumps(
             {

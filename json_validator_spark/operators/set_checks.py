@@ -175,7 +175,10 @@ def referential_violations(
     span_path: Column | None = None,
 ) -> DataFrame:
     """Fact keys absent from the dimension → violations, via broadcast
-    left_anti (dim ships once per executor; no shuffle of the fact side)."""
+    left_anti: no shuffle of either side. The dimension's key column
+    ships once per executor as it is — a left-anti result is the same
+    under duplicate dimension keys, and the hashed relation stores them
+    anyway, so a ``distinct()`` would only add a shuffle and a job."""
     path = span_path if span_path is not None else F.lit(f"/{fact_key}")
     probe = fact.select(
         F.col(doc_id).cast("string").alias("doc_id"),
@@ -183,7 +186,7 @@ def referential_violations(
         F.col(fact_key).alias("__k"),
     ).filter(F.col("__k").isNotNull())
     missing = probe.join(
-        F.broadcast(dim.select(F.col(dim_key).alias("__k")).distinct()),
+        F.broadcast(dim.select(F.col(dim_key).alias("__k"))),
         on="__k",
         how="left_anti",
     )
@@ -198,9 +201,12 @@ def referential_violations(
 
 def span_media_refs(docs: DataFrame, doc_id: str = "doc_id") -> DataFrame:
     """Explode media spans to (doc_id, span_path, media_ref) for the
-    referential check — posexplode keeps the span index for the path."""
+    referential check — posexplode keeps the span index for the path.
+    Only ``kind`` and ``media_ref`` of each span are zipped and
+    exploded, so the scan reads neither span text nor offsets."""
+    spans = F.arrays_zip(F.col("spans.kind"), F.col("spans.media_ref"))
     return (
-        docs.select(F.col(doc_id).alias("doc_id"), F.posexplode("spans").alias("i", "s"))
+        docs.select(F.col(doc_id).alias("doc_id"), F.posexplode(spans).alias("i", "s"))
         .filter(F.col("s.kind") == "media")
         .select(
             "doc_id",

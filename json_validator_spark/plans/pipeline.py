@@ -4,18 +4,22 @@ The reference's per-document loop (``RestValidationController.java:276-289``
 ``validateMultiple``; CLI loop ``ValidationRunner.java:141-192``) becomes
 one set-based run: scan → salted repartition → row rules (one narrow
 projection, materialized per doc) → set checks (uniqueness groupBy +
-broadcast referential) → one materialized violation stream. Verdicts,
-partition verdicts, aggregate and metrics are all derived from those two
-materialized frames, so the rules are evaluated once per run however
-many reports the caller writes.
+broadcast referential) → one materialized violation stream. Those two
+materializations are the only work ``validate_run`` does: the run
+metrics are observed while the violation stream is materialized, and
+verdicts, partition verdicts and the aggregate are plans over the two
+materialized frames, built the first time a caller reads them. So the
+rules are evaluated once per run however many reports the caller
+writes, and a caller pays only for the reports it reads.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from json_validator_spark.operators import report as rpt
@@ -51,16 +55,48 @@ def salted_repartition(df: DataFrame, n: int, key: str = "doc_id") -> DataFrame:
 
 @dataclass
 class RunResult:
-    violations: DataFrame      # (doc_id, span_path, rule_id, severity, message)
-    doc_verdicts: DataFrame    # (doc_id, n_errors, n_warnings, result) — row rules only
-    partition_verdicts: DataFrame  # (partition_id, n_docs, n_errors, result) — row rules only
-    aggregate: DataFrame       # (rule_id, severity, count)
-    # row rules ∪ uniqueness ∪ referential ∪ plugins — the reference's
-    # merged-TAR counter semantics
-    doc_verdicts_merged: DataFrame
+    """The frames of one ``validate_run``.
+
+    ``per_doc`` ``(doc_id, __pid, violations)`` and ``tagged`` (the
+    merged violation stream with its ``__pid``, NULL on set-layer rows)
+    are the run's two materialized frames; ``metrics`` is a one-row
+    local relation of the values observed while ``tagged`` was
+    materialized, so collecting it runs no Spark job. Every other field
+    is a plan over ``per_doc`` and ``tagged``, built on first read and
+    then kept, so a caller that never reads one never pays for its
+    analysis."""
+
+    per_doc: DataFrame
+    tagged: DataFrame
     # one-row run metrics (n_violations, n_errors, n_warnings,
     # n_failing_partitions) over the merged stream
     metrics: DataFrame
+
+    @cached_property
+    def violations(self) -> DataFrame:
+        """(doc_id, span_path, rule_id, severity, message)"""
+        return self.tagged.drop("__pid")
+
+    @cached_property
+    def doc_verdicts(self) -> DataFrame:
+        """(doc_id, n_errors, n_warnings, result) — row rules only"""
+        return rpt.doc_verdicts(self.per_doc)
+
+    @cached_property
+    def partition_verdicts(self) -> DataFrame:
+        """(partition_id, n_docs, n_errors, result) — row rules only"""
+        return rpt.partition_rollup(self.per_doc)
+
+    @cached_property
+    def aggregate(self) -> DataFrame:
+        """(rule_id, severity, count)"""
+        return rpt.aggregate_report(self.violations)
+
+    @cached_property
+    def doc_verdicts_merged(self) -> DataFrame:
+        """Per-doc verdicts over row rules ∪ uniqueness ∪ referential ∪
+        plugins — the reference's merged-TAR counter semantics."""
+        return rpt.doc_verdicts_merged(self.per_doc, self.violations)
 
 
 def validate_run(
@@ -86,8 +122,12 @@ def validate_run(
     - the merged violation stream (row rules ∪ uniqueness ∪ referential
       ∪ extras), carrying ``__pid`` (NULL on set-layer rows).
 
-    Every ``RunResult`` field is a cheap plan over those two frames, so
-    writing all of them costs no second rule evaluation or corpus scan.
+    The run metrics are observed on the second materialization, so
+    ``RunResult.metrics`` is a one-row local relation and reading it
+    runs no job; every other ``RunResult`` field is a plan over the two
+    frames, built on first read, so writing all of them costs no second
+    rule evaluation or corpus scan, and a field nobody reads costs
+    nothing.
     A local checkpoint leaves no cache entry to unpersist, but its blocks
     live on the executors and are not recomputed from lineage: losing an
     executor loses them. At a scale where that matters,
@@ -159,32 +199,35 @@ def validate_run(
         tagged = all_viols[0]
         for v in all_viols[1:]:
             tagged = tagged.unionByName(v)
-        tagged = tagged.localCheckpoint(eager=True)
-    violations = tagged.drop("__pid")
+        # Total/error/warning counts plus failing row-rule partitions
+        # (distinct __pid among error rows; set-layer rows carry NULL
+        # __pid, which collect_set drops, matching partition_verdicts'
+        # row-rule scope). Observed metrics refuse DISTINCT aggregates,
+        # hence the size of a set. coalesce: F.sum over an EMPTY stream
+        # is NULL — a fully clean corpus must report 0 counters, not
+        # None. Unnamed, so no name can clash with a caller's frames.
+        observed = Observation()
+        tagged = tagged.observe(
+            observed,
+            F.count(F.lit(1)).alias("n_violations"),
+            F.coalesce(
+                F.sum((F.col("severity") == "error").cast("long")), F.lit(0)
+            ).alias("n_errors"),
+            F.coalesce(
+                F.sum((F.col("severity") == "warning").cast("long")), F.lit(0)
+            ).alias("n_warnings"),
+            F.size(
+                F.collect_set(F.when(F.col("severity") == "error", F.col("__pid")))
+            ).alias("n_failing_partitions"),
+        ).localCheckpoint(eager=True)
 
-    # Total/error/warning counts plus failing row-rule partitions
-    # (distinct __pid among error rows; set-layer rows carry NULL __pid
-    # and are excluded, matching partition_verdicts' row-rule scope).
-    # coalesce: F.sum over an EMPTY stream is NULL — a fully clean corpus
-    # must report 0 counters, not None
-    metrics = tagged.agg(
-        F.count(F.lit(1)).alias("n_violations"),
-        F.coalesce(
-            F.sum((F.col("severity") == "error").cast("long")), F.lit(0)
-        ).alias("n_errors"),
-        F.coalesce(
-            F.sum((F.col("severity") == "warning").cast("long")), F.lit(0)
-        ).alias("n_warnings"),
-        F.count_distinct(
-            F.when(F.col("severity") == "error", F.col("__pid"))
-        ).alias("n_failing_partitions"),
+    # a LocalRelation: collecting it runs no job (createDataFrame would
+    # be RDD-backed and run one)
+    metrics = spark.sql(
+        "SELECT * FROM VALUES (CAST(:n_violations AS BIGINT), "
+        "CAST(:n_errors AS BIGINT), CAST(:n_warnings AS BIGINT), "
+        "CAST(:n_failing_partitions AS BIGINT)) "
+        "AS t(n_violations, n_errors, n_warnings, n_failing_partitions)",
+        args=observed.get,
     )
-
-    return RunResult(
-        violations=violations,
-        doc_verdicts=rpt.doc_verdicts(per_doc),
-        partition_verdicts=rpt.partition_rollup(per_doc),
-        aggregate=rpt.aggregate_report(violations),
-        doc_verdicts_merged=rpt.doc_verdicts_merged(per_doc, violations),
-        metrics=metrics,
-    )
+    return RunResult(per_doc=per_doc, tagged=tagged, metrics=metrics)

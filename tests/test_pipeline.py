@@ -27,6 +27,7 @@ from json_validator_spark.sources.synth import (
     synth_documents,
     synth_media_catalog,
 )
+from tests.conftest import job_count
 
 N_DOCS = 1500
 
@@ -58,10 +59,12 @@ def test_validate_run_end_to_end(spark):
 
 
 def test_run_metrics_single_action(spark):
-    """RunResult.metrics (the one-action bench path) must agree exactly
-    with the multi-action ground truth: total/error/warning violation
-    counts over the merged stream and the failing-row-rule-partition
-    count from partition_verdicts."""
+    """RunResult.metrics, observed while the merged violation stream is
+    materialized, must agree exactly with the multi-action ground
+    truth: total/error/warning violation counts over the merged stream
+    and the failing-row-rule-partition count from partition_verdicts.
+    Collecting it runs no job, and its schema is four non-nullable
+    bigints."""
     from pyspark.sql import functions as F
 
     docs = synth_documents(spark, N_DOCS)
@@ -69,6 +72,11 @@ def test_run_metrics_single_action(spark):
     res = validate_run(
         spark, docs, corpus_ruleset(), media_catalog=cat, repartition_to=8,
     )
+    assert job_count(spark, res.metrics.collect) == 0
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in res.metrics.schema] == [
+        (name, "bigint", False)
+        for name in ("n_violations", "n_errors", "n_warnings", "n_failing_partitions")
+    ]
     m = res.metrics.collect()[0]
     assert m["n_violations"] == res.violations.count()
     sev = dict(res.violations.groupBy("severity").count().collect())
@@ -78,9 +86,36 @@ def test_run_metrics_single_action(spark):
     assert m["n_failing_partitions"] == n_fail
 
 
+def test_validate_run_job_count(spark):
+    """A run with a media catalog runs 4 jobs here, all inside its two
+    materializations; a ``distinct()`` shuffle of the catalog before its
+    broadcast made it 5."""
+    docs = synth_documents(spark, 300)
+    cat = synth_media_catalog(spark)
+    rs = corpus_ruleset()
+    validate_run(spark, docs, rs, media_catalog=cat)  # warm the rule cache
+    assert job_count(spark, lambda: validate_run(spark, docs, rs, media_catalog=cat)) == 4
+
+
+def _metrics_within(make_run, seconds=120):
+    """``make_run().metrics`` as a tuple, run in a daemon thread so that
+    an observation that never fills in fails the test instead of
+    blocking it."""
+    import threading
+
+    got = []
+    t = threading.Thread(target=lambda: got.append(tuple(make_run().metrics.first())), daemon=True)
+    t.start()
+    t.join(timeout=seconds)
+    assert not t.is_alive(), "validate_run blocked on its metrics"
+    return got[0]
+
+
 def test_run_metrics_clean_corpus_zero_counters(spark):
     """A violation-free corpus reports 0 counters, not NULL (F.sum over
-    an empty stream is NULL without the coalesce)."""
+    an empty stream is NULL without the coalesce); so do an empty
+    corpus and a corpus with no partitions at all, without blocking on
+    the observation."""
     from json_validator_spark.rules.model import Rule, RuleSet
 
     docs = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, s string")
@@ -90,6 +125,23 @@ def test_run_metrics_clean_corpus_zero_counters(spark):
     assert (m["n_violations"], m["n_errors"], m["n_warnings"], m["n_failing_partitions"]) == (0, 0, 0, 0)
     # the merged violation stream carries doc_id as string whatever the corpus type
     assert dict(res.violations.dtypes)["doc_id"] == "string"
+
+    no_parts = spark.createDataFrame(spark.sparkContext.emptyRDD(), docs.schema)
+    for corpus in (docs.filter("false"), no_parts):
+        assert _metrics_within(lambda: validate_run(spark, corpus, rs)) == (0, 0, 0, 0)
+
+
+def test_run_metrics_uniqueness_only_errors(spark):
+    """Set-layer errors count in ``n_errors`` but fail no row-rule
+    partition: their rows carry no partition id."""
+    from json_validator_spark.rules.model import Rule, RuleSet
+
+    docs = spark.createDataFrame(
+        [(1, "a"), (1, "b"), (2, "c"), (3, "d"), (3, "e")], "doc_id long, s string"
+    )
+    rs = RuleSet(rules=(Rule("req.s", "/s", "required"),))
+    m = validate_run(spark, docs, rs).metrics.first()
+    assert (m["n_violations"], m["n_errors"], m["n_warnings"], m["n_failing_partitions"]) == (2, 2, 0, 0)
 
 
 def test_validate_run_evaluates_rules_once(spark, tmp_path):
@@ -774,6 +826,44 @@ def test_cli_format_xml(tmp_path, spark):
     assert "<result>FAILURE</result>" in x2
     assert "<location>/name</location>" in x2
     assert "<date>" in x2
+
+
+def test_cli_n_docs_counts_verdict_rows(tmp_path, spark):
+    """The printed ``n_docs``, counted while the verdicts table is
+    written, equals that table's row count for a table input, raw JSON
+    lines with corrupt lines, and a ``--checkpoint`` run."""
+    import json
+
+    from json_validator_spark.cli import main
+
+    lines = ['{"doc_id": 1, "name": "alice"}', '{"doc_id": 2}', '{"doc_id": 3, "name": "b"}']
+    (tmp_path / "docs.jsonl").write_text("\n".join([*lines, '{"doc_id": 4, "na', "not json"]) + "\n")
+    spark.read.schema("doc_id long, name string").json(
+        spark.sparkContext.parallelize(lines)
+    ).write.parquet(str(tmp_path / "docs"))
+    (tmp_path / "schema.json").write_text(json.dumps({
+        "type": "object", "required": ["name"],
+        "properties": {"name": {"minLength": 2}},
+    }))
+
+    def n_docs(out: str, *args: str) -> int:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            assert main([
+                "validate", "--output", out, "--schema", str(tmp_path / "schema.json"), *args,
+            ]) == 0
+        return json.loads(buf.getvalue().strip().splitlines()[-1])["n_docs"]
+
+    runs = {
+        "table": ("--input", str(tmp_path / "docs")),
+        "jsonl": ("--input", str(tmp_path / "docs.jsonl"), "--input-format", "jsonl",
+                  "--input-schema", "doc_id long, name string"),
+        "checkpoint": ("--input", str(tmp_path / "docs"), "--checkpoint", str(tmp_path / "ck")),
+    }
+    for name, args in runs.items():
+        out = str(tmp_path / name)
+        assert n_docs(out, *args) == spark.read.parquet(f"{out}/verdicts").count(), name
+    assert spark.read.parquet(str(tmp_path / "jsonl" / "verdicts")).count() == 5
 
 
 def test_tar_xml_aggregate_golden(tmp_path, spark):

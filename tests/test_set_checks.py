@@ -67,14 +67,52 @@ def test_uniqueness(spark):
 
 def test_referential_broadcast_anti(spark):
     fact = spark.createDataFrame(
-        [("d1", "k1"), ("d2", "k2"), ("d3", None)], "doc_id string, k string"
+        [("d1", "k1"), ("d2", "k2"), ("d3", None), ("d4", "k3")], "doc_id string, k string"
     )
-    dim = spark.createDataFrame([("k1",)], "k string")
+    # duplicate dimension keys leave a left-anti result unchanged
+    dim = spark.createDataFrame([("k1",), ("k3",), ("k1",), (None,)], "k string")
     v = sc.referential_violations(fact, "k", dim, "k", rule_id="ref.k")
     assert rows_set(v, "doc_id", "rule_id") == {("d2", "ref.k")}
-    # the plan must broadcast the dimension side
+    # the plan broadcasts the dimension side, and shuffles neither side
     plan = v._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    # the build side is the join's last child, so its subtree ends the plan
+    assert "Exchange" not in plan.split("BroadcastExchange", 1)[1], plan
+
+
+def test_span_media_refs_reads_no_span_text(spark, tmp_path):
+    """The referential branch reads only each span's ``kind`` and
+    ``media_ref``, and yields the rows of a posexplode of whole spans,
+    NULL ``spans`` and NULL span elements included."""
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [
+            (1, [("text", "hello", 0, None), ("media", "", 5, "media://a"), ("media", "x", 6, None)]),
+            (2, None),
+            (3, [None, ("media", "y", 0, "media://b")]),
+            (4, []),
+            (5, [("text", "z", 0, "media://c")]),
+        ],
+        "doc_id long, spans array<struct<kind string, text string, offset int, media_ref string>>",
+    ).write.parquet(path)
+    docs = spark.read.parquet(path)
+    refs = sc.span_media_refs(docs)
+    plan = refs._jdf.queryExecution().executedPlan().toString()
+    read_schema = [line[line.index("ReadSchema"):] for line in plan.splitlines() if "ReadSchema" in line]
+    assert read_schema == ["ReadSchema: struct<doc_id:bigint,spans:array<struct<kind:string,media_ref:string>>>"]
+    whole = (
+        docs.select("doc_id", F.posexplode("spans").alias("i", "s"))
+        .filter(F.col("s.kind") == "media")
+        .select(
+            "doc_id",
+            F.concat(F.lit("/spans/"), F.col("i").cast("string"), F.lit("/media_ref")),
+            F.col("s.media_ref"),
+        )
+    )
+    got = sorted(map(tuple, refs.collect()))
+    assert got == sorted(map(tuple, whole.collect()))
+    assert got == [(1, "/spans/1/media_ref", "media://a"), (1, "/spans/2/media_ref", None),
+                   (3, "/spans/1/media_ref", "media://b")]
 
 
 def test_span_media_refs_and_catalog_coverage(spark):
