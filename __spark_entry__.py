@@ -1868,7 +1868,7 @@ def q_schema_draft4_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Draft-4's ``id`` keyword — no ``$`` (draft-4 core §7.2, renamed
     ``$id`` in draft-6; networknt's V4 mode resolves both,
     ``JSONValidator.java:321-345``): the dialect pre-pass
-    (``rules/schema_import._rewrite_draft4_id``) renames it in schema
+    (``rules/schema_import._dialect_step``) renames it in schema
     positions only, so a property literally NAMED ``id`` is untouched.
     Exercises all three ``id`` roles at once: document registration key
     (a draft-4 library registered by ``id`` and cross-referenced), root
@@ -1903,7 +1903,7 @@ def q_schema_draft4_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_schema_recursive_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2019-09 ``$recursiveRef``/``$recursiveAnchor`` (VERDICT r04 #3),
     mapped onto the dynamic-binding machinery they were renamed into
-    (``rules/schema_import._rewrite_recursive_2019``): a library document
+    (``rules/schema_import._dialect_step``): a library document
     whose root declares ``$recursiveAnchor: true`` and a default cap
     exposes the extension point via ``$recursiveRef: "#"``; the entry
     either overrides it (stricter cap, the spec's recursive meta-schema

@@ -27,18 +27,10 @@ from pyspark.sql import functions as F
 
 from json_validator_spark.functions.text import hash_long
 
-MEDIA_SCHEMA = (
-    "media_ref string, mime_type string, size_bytes long, "
-    "width int, height int, duration_ms int, payload binary"
-)
-
 FEATURE_SCHEMA = (
     "media_ref string, mime_type string, n_bytes long, "
     "byte_mean double, byte_entropy_proxy double, feature array<float>"
 )
-
-FRAME_SCHEMA = "media_ref string, frame_idx int, frame_offset_ms int, frame_hash string"
-
 
 def synth_media_table(spark, catalog, payload_bytes: int = 256) -> DataFrame:
     """Attach a deterministic fake ``payload`` to a media catalog
@@ -139,18 +131,6 @@ def frame_sample(media: DataFrame, every_ms: int = 10000) -> DataFrame:
             (F.col("frame_idx") * every_ms).cast("int").alias("frame_offset_ms"),
             F.md5(F.concat_ws(":", "media_ref", "frame_idx")).alias("frame_hash"),
         )
-    )
-
-
-def media_span_join(docs: DataFrame, media: DataFrame) -> DataFrame:
-    """Join exploded media spans to their payload metadata — broadcast
-    when the media table is a dimension; shuffle-hash when it is fact-
-    sized (Spark/AQE picks; we only assert the join key)."""
-    from json_validator_spark.operators.set_checks import span_media_refs
-
-    refs = span_media_refs(docs)
-    return refs.join(
-        media.select("media_ref", "mime_type", "size_bytes"), "media_ref", "left"
     )
 
 

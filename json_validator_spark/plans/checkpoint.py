@@ -6,9 +6,12 @@ partition ids. A run processes pending buckets, writes violations
 dynamic-partition-overwritten per bucket (idempotent redo), then appends
 lineage rows ``(run_id, bucket, status, n_docs, n_errors, ts)``. Crash
 between the two ⇒ the bucket's lineage is absent ⇒ it is redone and its
-output overwritten — exactly-once at the bucket level. On Iceberg the
-violation write + lineage append become one snapshot commit; the parquet
-fallback keeps the same contract per bucket directory.
+output overwritten — exactly-once at the bucket level. Both writes are
+parquet (violations per bucket directory, lineage appended), so they
+are two commits, not one: readers see only buckets whose lineage row
+exists (``_committed_buckets``), which stands in for the single
+snapshot commit an Iceberg table would give. No Iceberg path exists
+here.
 """
 
 from __future__ import annotations

@@ -25,8 +25,8 @@ from typing import Any, Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from json_validator_spark.rules.model import Rule
-from json_validator_spark.rules.vocabulary import PRESENCE_KINDS, build_pass
+from json_validator_spark.rules.model import Rule, map_subnodes, subnodes
+from json_validator_spark.rules.vocabulary import null_pass
 
 VIOLATION_FIELD_NAMES = ("span_path", "rule_id", "severity", "message")
 VIOLATION_FIELDS = ", ".join(f"{f} string" for f in VIOLATION_FIELD_NAMES)
@@ -108,30 +108,10 @@ def resolve_refs(
         if not definitions or name not in definitions:
             raise ValueError(f"unresolved $ref: {name}")
         return resolve_refs(definitions[name], definitions, _seen | {name})
-    params = schema.get("params", {})
-    new_params = dict(params)
-    if "schema" in params:
-        new_params["schema"] = resolve_refs(params["schema"], definitions, _seen)
-    if "schemas" in params and isinstance(params["schemas"], list):
-        new_params["schemas"] = [resolve_refs(s, definitions, _seen) for s in params["schemas"]]
-    # subschemas held in dict-valued params: per-key `properties` and the
-    # discriminator `mapping` (same holders _uses_python_predicate walks)
-    for holder in ("properties", "mapping"):
-        if isinstance(params.get(holder), dict):
-            new_params[holder] = {
-                k: resolve_refs(v, definitions, _seen) if isinstance(v, dict) else v
-                for k, v in params[holder].items()
-            }
-    # unevaluated* dynamic contributors carry pass-predicate nodes in `when`
-    if isinstance(params.get("contributors"), list):
-        new_params["contributors"] = [
-            {**c, "when": [
-                resolve_refs(n, definitions, _seen) if isinstance(n, dict) else n
-                for n in c.get("when", [])
-            ]}
-            for c in params["contributors"]
-        ]
-    return {**schema, "params": new_params}
+    params = map_subnodes(
+        schema.get("params", {}), lambda n: resolve_refs(n, definitions, _seen)
+    )
+    return {**schema, "params": params}
 
 
 # ----------------------------------------------------------------------
@@ -196,28 +176,10 @@ def _uses_python_predicate(kind: str, params: dict[str, Any]) -> bool:
         kind == "format" and params.get("format") == "regex"
     ):
         return True
-    subs: list[dict[str, Any]] = []
-    if isinstance(params.get("schema"), dict):
-        subs.append(params["schema"])
-    if isinstance(params.get("schemas"), list):
-        subs.extend(s for s in params["schemas"] if isinstance(s, dict))
-    for holder in ("properties", "mapping"):
-        if isinstance(params.get(holder), dict):
-            subs.extend(v for v in params[holder].values() if isinstance(v, dict))
-    for c in params.get("contributors", []):
-        subs.extend(n for n in c.get("when", []) if isinstance(n, dict))
     return any(
-        _uses_python_predicate(s.get("kind", ""), s.get("params", {})) for s in subs
+        _uses_python_predicate(s.get("kind", ""), s.get("params", {}))
+        for s in subnodes(params)
     )
-
-
-def _null_wrapped(kind: str, value: Column, params: dict[str, Any]) -> Column:
-    """JSON-Schema null semantics: absent value passes all keywords except
-    the presence family (``required`` etc.)."""
-    raw = build_pass(kind, value, params)
-    if kind in PRESENCE_KINDS:
-        return raw
-    return F.when(value.isNull(), F.lit(True)).otherwise(raw)
 
 
 def _pointer_value(target: str) -> Column:
@@ -254,7 +216,7 @@ def compile_rule(rule: Rule, detail: bool = False) -> Column:
         if_val = _pointer_value(rule.params["if_target"])
         ok = F.when(if_val.isNotNull(), value.isNotNull()).otherwise(F.lit(True))
     else:
-        ok = _null_wrapped(rule.kind, value, rule.params)
+        ok = null_pass(rule.kind, value, rule.params)
         w = rule.params.get("when_doc")
         if w:  # doc-level guard: apply only when another column matches
             gv = _pointer_value(w["target"])
@@ -278,7 +240,7 @@ def _per_span_ok(rule: Rule, s: Column) -> Column:
         if_val = s[rule.params["if_field"]]
         ok = F.when(if_val.isNotNull(), s[fld].isNotNull()).otherwise(F.lit(True))
     else:
-        ok = _null_wrapped(rule.kind, s[fld], rule.params)
+        ok = null_pass(rule.kind, s[fld], rule.params)
     if guard is not None:
         ok = F.when(guard(s), ok).otherwise(F.lit(True))
     return ok

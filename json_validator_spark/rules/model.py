@@ -24,9 +24,43 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 from enum import Enum
-from typing import Any
+from typing import Any, Callable
 
 SEVERITIES = ("error", "warning", "info")
+
+
+def map_subnodes(
+    params: dict[str, Any], fn: Callable[[dict[str, Any]], Any]
+) -> dict[str, Any]:
+    """Copy of a compiled node's ``params`` with ``fn`` applied to every
+    nested ``{kind, params}`` node — the one list of where they sit:
+    ``schema``, ``schemas``, the values of ``properties`` (per-key) and
+    ``mapping`` (discriminator), and the ``when`` conjunctions of
+    ``unevaluated*`` ``contributors``. Key order is preserved."""
+    out = dict(params)
+    if isinstance(params.get("schema"), dict):
+        out["schema"] = fn(params["schema"])
+    if isinstance(params.get("schemas"), list):
+        out["schemas"] = [fn(s) if isinstance(s, dict) else s for s in params["schemas"]]
+    for holder in ("properties", "mapping"):
+        if isinstance(params.get(holder), dict):
+            out[holder] = {
+                k: fn(v) if isinstance(v, dict) else v for k, v in params[holder].items()
+            }
+    if isinstance(params.get("contributors"), list):
+        out["contributors"] = [
+            {**c, "when": [fn(n) if isinstance(n, dict) else n for n in c.get("when", [])]}
+            for c in params["contributors"]
+        ]
+    return out
+
+
+def subnodes(params: dict[str, Any]) -> list[dict[str, Any]]:
+    """The nested nodes of a compiled node's ``params``, in
+    ``map_subnodes`` order."""
+    found: list[dict[str, Any]] = []
+    map_subnodes(params, found.append)
+    return found
 
 
 class Combination(str, Enum):

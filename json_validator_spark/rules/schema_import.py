@@ -25,12 +25,15 @@ names (``#/$defs/<name>``), cycle guard included.
 
 from __future__ import annotations
 
+import copy
 import json
-from dataclasses import dataclass, field
-from typing import Any
+from dataclasses import dataclass, field, replace
+from typing import Any, Iterator
 from urllib.parse import urldefrag, urljoin
 
-from json_validator_spark.rules.model import Rule, RuleSet, RuleSetGroup
+from json_validator_spark.rules.model import (
+    Rule, RuleSet, RuleSetGroup, map_subnodes, subnodes,
+)
 from json_validator_spark.rules.schema_registry import SchemaRegistry
 
 # Annotation-only keywords: legal everywhere, produce no rule.
@@ -93,7 +96,7 @@ _HANDLED = (
 
 @dataclass
 class _ImportCtx:
-    """Per-document import context: canonicalizes every ``$ref`` the way
+    """One document's view of an import: resolves every ``$ref`` the way
     the reference's resolver does (``LocalSchemaResolver.java:71-85``
     resolves the ref URI against the owning document's ``$id`` before the
     local-cache lookup) and records cross-reference targets for the
@@ -102,7 +105,9 @@ class _ImportCtx:
     ``prefix`` is None for the ROOT document so same-document refs keep
     their literal ``#/$defs/<n>`` keys (back-compat with hand-built
     definition maps); for a registry document it is that document's
-    ``$id``, so its internal refs namespace as ``<id>#/...``."""
+    ``$id``, so its internal refs namespace as ``<id>#/...``. ``need``,
+    ``root_doc``, ``dyn`` and ``registry`` are shared by every document
+    of one import."""
 
     base_uri: str | None = None   # RFC 3986 base for relative refs
     prefix: str | None = None     # key namespace for '#...' refs
@@ -112,18 +117,57 @@ class _ImportCtx:
     dyn: dict[str, str] = field(default_factory=dict)  # $dynamicAnchor bindings
     registry: SchemaRegistry | None = None
 
-    def canon(self, ref: str) -> str:
-        if ref.startswith("#"):
-            key = ref if self.prefix is None else self.prefix.rstrip("#") + ref
-        else:
-            doc, frag = urldefrag(urljoin((self.base_uri or "").rstrip("#"), ref))
-            if not doc:
+    def key(self, ref: str, dynamic: bool = False, where: str | None = None) -> str:
+        """The definitions key a ``$ref`` (or, with ``dynamic``, a
+        ``$dynamicRef``) in this document names. A plain-name
+        ``$dynamicRef`` (2020-12 §8.2.3.2) first resolves as a normal
+        anchor here; if (and only if) that initial target declares a
+        matching ``$dynamicAnchor`` — the spec's bookending rule — it
+        re-routes to the binding map's outermost declaration
+        (``_collect_dynamic_bindings``); otherwise it behaves as a plain
+        ``$ref``."""
+        if dynamic and ref.startswith("#") and not ref.startswith("#/"):
+            name = ref[1:]
+            initial = _find_anchor(self.doc, name)
+            if initial is None:
+                at = f" at {where}" if where else ""
                 raise ValueError(
-                    f"relative $ref {ref!r} with no base $id to resolve against"
+                    f"$dynamicRef {ref!r}{at}: no anchor {name!r} in the "
+                    "containing document"
                 )
-            key = f"{doc}#{frag}"
+            if initial.get("$dynamicAnchor") == name and name in self.dyn:
+                return self.dyn[name]
+        if ref.startswith("#"):
+            return ref if self.prefix is None else self.prefix.rstrip("#") + ref
+        doc, frag = urldefrag(urljoin((self.base_uri or "").rstrip("#"), ref))
+        if not doc:
+            raise ValueError(f"relative $ref {ref!r} with no base $id to resolve against")
+        return f"{doc}#{frag}"
+
+    def canon(self, ref: str, dynamic: bool = False, where: str | None = None) -> str:
+        """``key``, recorded for the compile worklist."""
+        key = self.key(ref, dynamic, where)
         self.need.add(key)
         return key
+
+    def target(self, key: str) -> tuple[Any, "_ImportCtx"]:
+        """``(subschema, its owning document's context)`` for a key."""
+        doc_part, _, frag = key.partition("#")
+        if doc_part == "":
+            doc, prefix = self.root_doc, None
+            base = doc.get("$id") if isinstance(doc, dict) else None
+        elif self.registry is None:
+            raise ValueError(
+                f"cross-document $ref {key!r}: pass a SchemaRegistry with "
+                "the preloaded schema set (the reference's shared-schema "
+                "config, validator.schemaFile.*)"
+            )
+        else:
+            doc = self.registry.resolve(doc_part)  # KeyError lists known $ids
+            base = prefix = doc.get("$id") or doc_part
+        return _json_pointer(doc, frag, key), replace(
+            self, base_uri=base, prefix=prefix, doc=doc
+        )
 
 
 def _json_pointer(doc: Any, frag: str, where: str) -> Any:
@@ -149,104 +193,15 @@ def _json_pointer(doc: Any, frag: str, where: str) -> Any:
     return node
 
 
-def _find_anchor(node: Any, name: str) -> Any:
-    """Depth-first search for the subschema declaring ``$anchor: name``
-    (draft-7 spelling ``$id: "#name"``, or ``$dynamicAnchor: name`` —
-    the 2020-12 spec says a dynamic anchor is ALSO a plain anchor).
-    Deterministic: dict insertion order, first hit wins — matching
-    networknt's single-anchor expectation (duplicate anchors are a
-    schema-authoring error)."""
-    if isinstance(node, dict):
-        if (
-            node.get("$anchor") == name
-            or node.get("$id") == f"#{name}"
-            or node.get("$dynamicAnchor") == name
-        ):
-            return node
-        for v in node.values():
-            hit = _find_anchor(v, name)
-            if hit is not None:
-                return hit
-    elif isinstance(node, list):
-        for v in node:
-            hit = _find_anchor(v, name)
-            if hit is not None:
-                return hit
-    return None
-
-
-# Reserved anchor name for the 2019-09 → 2020-12 recursive-ref rewrite.
-# Draft 2020-12 renamed $recursiveRef/$recursiveAnchor into the dynamic
-# forms (2020-12 Appendix CREF); the restricted 2019-09 semantics map
-# exactly onto a $dynamicAnchor with one implicit, spec-reserved name.
-_RECURSIVE_NAME = "__recursive2019__"
-
-
-def _rewrite_recursive_2019(doc: Any) -> Any:
-    """2019-09 ``$recursiveRef``/``$recursiveAnchor`` → the 2020-12
-    dynamic forms they became: ``$recursiveAnchor: true`` (boolean-only,
-    meaningful at the resource root) becomes ``$dynamicAnchor`` with the
-    reserved ``__recursive2019__`` name; ``$recursiveRef: "#"`` (the only
-    value 2019-09 allows) becomes ``$dynamicRef: "#__recursive2019__"``
-    when the containing document's ROOT declares the anchor — the
-    bookending precondition — and a plain ``$ref: "#"`` otherwise
-    (2019-09 §8.2.4.2: without a root anchor the recursive ref behaves
-    as a normal root reference). The entry-chain binding map then gives
-    the spec's recursive meta-schema extension pattern for free: the
-    outermost document on the $ref-discovery chain declaring the anchor
-    wins, exactly as the outermost ``$recursiveAnchor: true`` resource
-    would at runtime. The reference accepts 2019-09 schemas through
-    networknt's V201909 mode (``JSONValidator.java:321-345`` dialect
-    selection). Returns the input object unchanged (same identity) when
-    neither keyword occurs."""
-    if not isinstance(doc, dict):
-        return doc
-    root_recursive = doc.get("$recursiveAnchor") is True
-    changed = False
-
-    def walk(node: Any) -> Any:
-        nonlocal changed
-        if isinstance(node, dict):
-            out = {}
-            for k, v in node.items():
-                if k == "$recursiveAnchor":
-                    changed = True
-                    if not isinstance(v, bool):
-                        raise ValueError(
-                            "$recursiveAnchor must be a boolean (2019-09 §8.2.4.2.2)"
-                        )
-                    if v:
-                        out["$dynamicAnchor"] = _RECURSIVE_NAME
-                    # false is the default: no-op
-                elif k == "$recursiveRef":
-                    changed = True
-                    if v != "#":
-                        raise ValueError(
-                            f"$recursiveRef value must be '#' (2019-09 "
-                            f"§8.2.4.2.1), got {v!r}"
-                        )
-                    if root_recursive:
-                        out["$dynamicRef"] = "#" + _RECURSIVE_NAME
-                    else:
-                        out["$ref"] = "#"
-                else:
-                    out[k] = walk(v)
-            return out
-        if isinstance(node, list):
-            return [walk(v) for v in node]
-        return node
-
-    rewritten = walk(doc)
-    return rewritten if changed else doc
-
-
-# Keyword positions for the dialect-aware walk in _rewrite_draft4_id:
-# values that ARE schemas, maps WHOSE VALUES are schemas (keys are
-# user-controlled names — never rewritten), and lists of schemas. Every
-# unlisted keyword passes through untouched, the data keywords (enum,
-# const, default, examples) included, so their values are never walked;
-# a draft-4 `id` hiding under an unlisted keyword stays `id` and
-# _check_known raises — strict beats silent.
+# The schema-position table. Values that ARE schemas (draft-4's
+# array-form `items` is a list of them), maps WHOSE VALUES are schemas
+# (keys are user-controlled names), lists of schemas, the schema-valued
+# entries of draft-4/7 `dependencies` and the OpenAPI discriminator's
+# `mapping` values: every place `_applications`, `_evaluated_closure` or
+# `_dynamic_contributors` compile a subschema. Every other keyword holds
+# data (enum, const, default, examples…) and is never walked, so a
+# keyword-shaped key inside a value, or a property NAMED like a keyword,
+# is never read as one.
 _SUBSCHEMA_KEYWORDS = {
     "items", "additionalItems", "additionalProperties", "propertyNames",
     "contains", "if", "then", "else", "not",
@@ -258,112 +213,146 @@ _SCHEMA_MAP_KEYWORDS = {
 _SCHEMA_LIST_KEYWORDS = {"allOf", "anyOf", "oneOf", "prefixItems"}
 
 
+def _subschemas(node: dict[str, Any]) -> Iterator[Any]:
+    """The subschemas ``node`` holds, in key order, per the table."""
+    for kw, v in node.items():
+        if kw == "items" and isinstance(v, list):
+            yield from v
+        elif kw in _SUBSCHEMA_KEYWORDS:
+            yield v
+        elif kw in _SCHEMA_MAP_KEYWORDS and isinstance(v, dict):
+            yield from v.values()
+        elif kw in _SCHEMA_LIST_KEYWORDS and isinstance(v, list):
+            yield from v
+        elif kw == "dependencies" and isinstance(v, dict):
+            yield from (s for s in v.values() if not isinstance(s, list))
+        elif kw == "discriminator" and isinstance(v, dict) and isinstance(
+            v.get("mapping"), dict
+        ):
+            yield from v["mapping"].values()
+
+
+def _schema_nodes(doc: Any) -> Iterator[dict[str, Any]]:
+    """Pre-order walk over every object schema in ``doc`` reached through
+    ``_subschemas`` (dict insertion order). A node's children are read
+    only after it is yielded, so a caller may rewrite it in place."""
+    stack = [doc]
+    while stack:
+        node = stack.pop()
+        if isinstance(node, dict):
+            yield node
+            stack.extend(reversed(list(_subschemas(node))))
+
+
+def _find_anchor(doc: Any, name: str) -> dict[str, Any] | None:
+    """The first subschema declaring ``$anchor: name`` (draft-7 spelling
+    ``$id: "#name"``, or ``$dynamicAnchor: name`` — the 2020-12 spec says
+    a dynamic anchor is ALSO a plain anchor). Deterministic: pre-order,
+    first hit wins — matching networknt's single-anchor expectation
+    (duplicate anchors are a schema-authoring error)."""
+    return next(
+        (
+            n for n in _schema_nodes(doc)
+            if n.get("$anchor") == name
+            or n.get("$id") == f"#{name}"
+            or n.get("$dynamicAnchor") == name
+        ),
+        None,
+    )
+
+
+# Reserved anchor name for the 2019-09 → 2020-12 recursive-ref rewrite.
+# Draft 2020-12 renamed $recursiveRef/$recursiveAnchor into the dynamic
+# forms (2020-12 Appendix CREF); the restricted 2019-09 semantics map
+# exactly onto a $dynamicAnchor with one implicit, spec-reserved name.
+_RECURSIVE_NAME = "__recursive2019__"
+
+
 def _is_draft4(doc: Any) -> bool:
     s = doc.get("$schema") if isinstance(doc, dict) else None
     return isinstance(s, str) and "draft-04" in s
 
 
-def _rewrite_draft4_id(doc: Any) -> Any:
-    """Draft-4 spells the base-URI/anchor keyword ``id`` — no ``$``
-    (draft-4 core §7.2; renamed ``$id`` in draft-6). networknt's V4 mode
-    resolves it like ``$id`` (the reference selects that mode from
-    ``$schema``, ``JSONValidator.java:321-345``); without this rewrite a
-    draft-4 document registering itself by ``id`` or declaring
-    ``id: "#name"`` anchors would fail ``_check_known``. Applied ONLY
-    when the document root declares the draft-4 dialect, and only in
-    schema positions — a PROPERTY literally named ``id`` (ubiquitous in
-    real data) lives as a KEY of ``properties``/``patternProperties``
-    maps, which the walk never renames. Returns the input object
-    unchanged (same identity) for non-draft-4 documents."""
-    if not _is_draft4(doc):
-        return doc
+def _dialect_step(
+    node: dict[str, Any], draft4: bool, root_recursive: bool
+) -> dict[str, Any] | None:
+    """One schema node in this importer's spelling, or None when it
+    already is. Three dialect rewrites, each keeping key order:
+
+    - draft-4 ``id`` → ``$id`` (draft-4 core §7.2; renamed in draft-6),
+      only when the document root declares the draft-4 dialect.
+      networknt's V4 mode resolves it like ``$id`` (the reference
+      selects that mode from ``$schema``, ``JSONValidator.java:321-345``).
+    - draft-4/7 ``dependencies`` → ``dependentRequired`` (array values)
+      and ``dependentSchemas`` (schema values), the 2019-09 split
+      spellings. The keyword was REMOVED in 2019-09, so this applies in
+      every dialect.
+    - 2019-09 ``$recursiveAnchor: true`` (boolean-only) → ``$dynamicAnchor``
+      with the reserved ``__recursive2019__`` name; ``$recursiveRef: "#"``
+      (the only value 2019-09 allows) → ``$dynamicRef:
+      "#__recursive2019__"`` when the document ROOT declares the anchor —
+      the bookending precondition — and a plain ``$ref: "#"`` otherwise
+      (2019-09 §8.2.4.2: without a root anchor the recursive ref behaves
+      as a normal root reference). The entry-chain binding map then gives
+      the recursive meta-schema extension pattern for free: the outermost
+      document on the $ref-discovery chain declaring the anchor wins, as
+      the outermost ``$recursiveAnchor: true`` resource would at runtime."""
+    out: dict[str, Any] = {}
+    required: dict[str, Any] = {}
+    schemas: dict[str, Any] = {}
     changed = False
-
-    def walk(node: Any) -> Any:  # node sits in a SCHEMA position
-        nonlocal changed
-        if isinstance(node, list):  # draft-4 tuple `items`
-            return [walk(v) for v in node]
-        if not isinstance(node, dict):
-            return node
-        out: dict[str, Any] = {}
-        for k, v in node.items():
-            if k == "id" and isinstance(v, str):
-                changed = True
-                out["$id"] = v
-            elif k in _SCHEMA_MAP_KEYWORDS and isinstance(v, dict):
-                out[k] = {name: walk(sub) for name, sub in v.items()}
-            elif k == "dependencies" and isinstance(v, dict):
-                # per-name value: list of required names (data) | schema
-                out[k] = {
-                    name: walk(sub) if isinstance(sub, (dict, bool)) else sub
-                    for name, sub in v.items()
-                }
-            elif k in _SUBSCHEMA_KEYWORDS:
-                out[k] = walk(v)
-            elif k in _SCHEMA_LIST_KEYWORDS and isinstance(v, list):
-                out[k] = [walk(x) for x in v]
+    for k, v in node.items():
+        if draft4 and k == "id" and isinstance(v, str):
+            out["$id"] = v
+        elif k == "dependencies" and isinstance(v, dict):
+            for name, sub in v.items():
+                (required if isinstance(sub, list) else schemas)[name] = sub
+        elif k == "$recursiveAnchor":
+            if not isinstance(v, bool):
+                raise ValueError(
+                    "$recursiveAnchor must be a boolean (2019-09 §8.2.4.2.2)"
+                )
+            if v:  # false is the default: no-op
+                out["$dynamicAnchor"] = _RECURSIVE_NAME
+        elif k == "$recursiveRef":
+            if v != "#":
+                raise ValueError(
+                    f"$recursiveRef value must be '#' (2019-09 §8.2.4.2.1), got {v!r}"
+                )
+            if root_recursive:
+                out["$dynamicRef"] = "#" + _RECURSIVE_NAME
             else:
-                out[k] = v
-        return out
-
-    rewritten = walk(doc)
-    return rewritten if changed else doc
-
-
-def _rewrite_dependencies(doc: Any) -> Any:
-    """Draft-4/7 ``dependencies`` → the 2019-09 split spellings this
-    importer compiles: array values become ``dependentRequired``
-    entries, schema values ``dependentSchemas`` entries (2019-09 core
-    changelog; networknt's v4/v7 modes accept the legacy keyword —
-    ``JSONValidator.java:321-345`` selects those modes from
-    ``$schema``). The keyword was REMOVED in 2019-09, so the rewrite is
-    unambiguous in every dialect and applied unconditionally, at every
-    schema position (top level included). Identity-preserving when the
-    keyword is absent."""
-    changed = False
-
-    def walk(node: Any) -> Any:  # node sits in a SCHEMA position
-        nonlocal changed
-        if isinstance(node, list):
-            return [walk(v) for v in node]
-        if not isinstance(node, dict):
-            return node
-        out: dict[str, Any] = {}
-        pending_req: dict[str, Any] = {}
-        pending_sch: dict[str, Any] = {}
-        for k, v in node.items():
-            if k == "dependencies" and isinstance(v, dict):
-                changed = True
-                for name, sub in v.items():
-                    if isinstance(sub, list):
-                        pending_req[name] = sub
-                    else:
-                        pending_sch[name] = walk(sub)
-            elif k in _SCHEMA_MAP_KEYWORDS and isinstance(v, dict):
-                out[k] = {name: walk(sub) for name, sub in v.items()}
-            elif k in _SUBSCHEMA_KEYWORDS:
-                out[k] = walk(v)
-            elif k in _SCHEMA_LIST_KEYWORDS and isinstance(v, list):
-                out[k] = [walk(x) for x in v]
-            else:
-                out[k] = v
-        if pending_req:
-            out["dependentRequired"] = {**pending_req, **out.get("dependentRequired", {})}
-        if pending_sch:
-            out["dependentSchemas"] = {**pending_sch, **out.get("dependentSchemas", {})}
-        return out
-
-    rewritten = walk(doc)
-    return rewritten if changed else doc
+                out["$ref"] = "#"
+        else:
+            out[k] = v
+            continue
+        changed = True
+    if required:
+        out["dependentRequired"] = {**required, **out.get("dependentRequired", {})}
+    if schemas:
+        out["dependentSchemas"] = {**schemas, **out.get("dependentSchemas", {})}
+    return out if changed else None
 
 
 def _rewrite_dialects(doc: Any) -> Any:
-    """All dialect-normalizing pre-passes, oldest first: draft-4 ``id``
-    → ``$id``, draft-4/7 ``dependencies`` → ``dependentRequired``/
-    ``dependentSchemas``, then 2019-09 ``$recursiveRef``/
-    ``$recursiveAnchor`` → the 2020-12 dynamic forms.
-    Identity-preserving when nothing matches."""
-    return _rewrite_recursive_2019(_rewrite_dependencies(_rewrite_draft4_id(doc)))
+    """``doc`` with ``_dialect_step`` applied at every schema position —
+    a PROPERTY literally named ``id`` or ``$recursiveRef`` is a key of
+    ``properties``, and ``enum``/``const``/``default`` values are data,
+    so neither is ever rewritten. Returns the input object unchanged
+    (same identity) when no node needs a rewrite."""
+    if not isinstance(doc, dict):
+        return doc
+    draft4 = _is_draft4(doc)
+    root_recursive = doc.get("$recursiveAnchor") is True
+    out = copy.deepcopy(doc)
+    changed = False
+    for node in _schema_nodes(out):
+        new = _dialect_step(node, draft4, root_recursive)
+        if new is not None:
+            node.clear()
+            node.update(new)
+            changed = True
+    return out if changed else doc
 
 
 class _Recursive2019Registry:
@@ -394,24 +383,6 @@ def _check_known(sub: dict[str, Any], where: str) -> None:
         )
 
 
-def _scan_anchors_refs(node: Any, anchors: list[str], refs: list[str]) -> None:
-    """Pre-order raw-document scan: every ``$dynamicAnchor`` name and
-    every ``$ref``/``$dynamicRef`` target string, in document order."""
-    if isinstance(node, dict):
-        v = node.get("$dynamicAnchor")
-        if isinstance(v, str):
-            anchors.append(v)
-        for kw in ("$ref", "$dynamicRef"):
-            r = node.get(kw)
-            if isinstance(r, str):
-                refs.append(r)
-        for val in node.values():
-            _scan_anchors_refs(val, anchors, refs)
-    elif isinstance(node, list):
-        for val in node:
-            _scan_anchors_refs(val, anchors, refs)
-
-
 def _collect_dynamic_bindings(
     schema: dict[str, Any], registry: SchemaRegistry | None
 ) -> dict[str, str]:
@@ -434,11 +405,15 @@ def _collect_dynamic_bindings(
     queue: list[tuple[Any, str | None]] = [(schema, None)]
     while queue:
         doc, prefix = queue.pop(0)
-        anchors: list[str] = []
         refs: list[str] = []
-        _scan_anchors_refs(doc, anchors, refs)
-        for name in anchors:
-            bind.setdefault(name, f"{prefix or ''}#{name}")
+        for node in _schema_nodes(doc):
+            if isinstance(node.get("$dynamicAnchor"), str):
+                name = node["$dynamicAnchor"]
+                bind.setdefault(name, f"{prefix or ''}#{name}")
+            refs.extend(
+                r for r in (node.get("$ref"), node.get("$dynamicRef"))
+                if isinstance(r, str)
+            )
         base = (doc.get("$id") if isinstance(doc, dict) else None) or prefix
         for ref in refs:
             if ref.startswith("#"):
@@ -455,89 +430,8 @@ def _collect_dynamic_bindings(
     return bind
 
 
-def _dynamic_ref_key(ref: Any, where: str, ctx: _ImportCtx | None) -> str:
-    """Compile-time resolution of ``$dynamicRef`` (2020-12 §8.2.3.2):
-    the fragment first resolves as a normal anchor in the containing
-    document; if (and only if) that initial target declares a matching
-    ``$dynamicAnchor`` — the spec's bookending rule — the reference
-    re-routes to the binding map's outermost declaration
-    (``_collect_dynamic_bindings``); otherwise it behaves as a plain
-    ``$ref``. Non-fragment forms (``other.json#name``) are refused
-    explicitly rather than mis-resolved."""
-    if ctx is None or ctx.doc is None:
-        raise ValueError(
-            f"$dynamicRef at {where}: requires document context — import the "
-            "schema via ruleset_from_json_schema"
-        )
-    if not (isinstance(ref, str) and ref.startswith("#")) or ref.startswith("#/"):
-        raise ValueError(
-            f"$dynamicRef at {where}: only plain-name fragments ('#name') are "
-            "supported (the bookending rule needs an anchor name)"
-        )
-    name = ref[1:]
-    initial = _find_anchor(ctx.doc, name)
-    if initial is None:
-        raise ValueError(
-            f"$dynamicRef {ref!r} at {where}: no anchor {name!r} in the "
-            "containing document"
-        )
-    if (
-        isinstance(initial, dict)
-        and initial.get("$dynamicAnchor") == name
-        and name in ctx.dyn
-    ):
-        key = ctx.dyn[name]
-        ctx.need.add(key)
-        return key
-    return ctx.canon(ref)
-
-
-def _resolve_ref_raw(
-    ref: str, is_dynamic: bool, ctx: _ImportCtx, doc: Any, base: str | None
-) -> tuple[Any, Any, str | None]:
-    """Statically resolve a sibling ``$ref``/``$dynamicRef`` to its RAW
-    target subschema: ``(subschema, owning_doc, owning_base)`` — the
-    evaluated-set closure needs the uncompiled JSON to read its
-    ``properties``/``prefixItems``."""
-    if is_dynamic and ref.startswith("#") and not ref.startswith("#/"):
-        name = ref[1:]
-        initial = _find_anchor(doc, name)
-        if initial is None:
-            raise ValueError(
-                f"$dynamicRef {ref!r}: no anchor {name!r} in the containing document"
-            )
-        if (
-            isinstance(initial, dict)
-            and initial.get("$dynamicAnchor") == name
-            and name in ctx.dyn
-        ):
-            key = ctx.dyn[name]
-            dpart, _, frag = key.partition("#")
-            if dpart == "":
-                rd = ctx.root_doc
-                rb = rd.get("$id") if isinstance(rd, dict) else None
-                return _json_pointer(rd, frag, key), rd, rb
-            d = ctx.registry.resolve(dpart)  # bound during BFS -> resolvable
-            return _json_pointer(d, frag, key), d, d.get("$id") or dpart
-        return initial, doc, base
-    if ref.startswith("#"):
-        return _json_pointer(doc, ref[1:], ref), doc, base
-    target, frag = urldefrag(urljoin((base or "").rstrip("#"), ref))
-    if not target:
-        raise ValueError(f"relative $ref {ref!r} with no base $id to resolve against")
-    if ctx.registry is None:
-        raise ValueError(
-            f"cross-document $ref {ref!r}: pass a SchemaRegistry with the "
-            "preloaded schema set (the reference's shared-schema config, "
-            "validator.schemaFile.*)"
-        )
-    d = ctx.registry.resolve(target)
-    return _json_pointer(d, frag, ref), d, d.get("$id") or target
-
-
 def _evaluated_closure(
-    sub: dict[str, Any], ctx: _ImportCtx | None, where: str,
-    doc: Any = None, base: str | None = None,
+    sub: dict[str, Any], ctx: _ImportCtx | None
 ) -> tuple[set[str], set[str], list[int], bool]:
     """Static evaluated-set closure for ``unevaluatedProperties``/
     ``unevaluatedItems``: keys/prefixes contributed by this subschema,
@@ -547,7 +441,8 @@ def _evaluated_closure(
     annotations are exactly the evaluated set networknt's annotation
     flow would produce for the conjunction — this closes the spec's
     canonical strict-tree pattern, where the evaluated keys come from a
-    ``$ref`` sibling of ``unevaluatedProperties: false``. Returns
+    ``$ref`` sibling of ``unevaluatedProperties: false``. ``ctx`` is the
+    context of the document ``sub`` sits in. Returns
     ``(allowed, patterns, starts, full_items)``; ``full_items`` True
     means some member's non-tuple ``items`` evaluates EVERY element, so
     ``unevaluatedItems`` is a spec no-op. The residue that stays out of
@@ -559,7 +454,7 @@ def _evaluated_closure(
     full_items = [False]
     seen: set[int] = set()
 
-    def walk(s: Any, doc: Any, base: str | None) -> None:
+    def walk(s: Any, dc: _ImportCtx | None) -> None:
         if not isinstance(s, dict) or id(s) in seen:
             return
         seen.add(id(s))
@@ -573,20 +468,26 @@ def _evaluated_closure(
         if isinstance(it, dict) or it is True:
             full_items[0] = True
         for m in s.get("allOf", []):
-            walk(m, doc, base)
-        if ctx is not None and doc is not None:
-            for kw in ("$ref", "$dynamicRef"):
-                r = s.get(kw)
-                if isinstance(r, str):
-                    t, td, tb = _resolve_ref_raw(r, kw == "$dynamicRef", ctx, doc, base)
-                    walk(t, td, tb)
+            walk(m, dc)
+        for t, tc in _sibling_ref_targets(s, dc):
+            walk(t, tc)
 
-    walk(
-        sub,
-        doc if doc is not None else (ctx.doc if ctx else None),
-        base if base is not None else (ctx.base_uri if ctx else None),
-    )
+    walk(sub, ctx)
     return allowed, patterns, starts, full_items[0]
+
+
+def _sibling_ref_targets(
+    s: dict[str, Any], ctx: _ImportCtx | None
+) -> list[tuple[Any, _ImportCtx]]:
+    """The raw targets of ``s``'s own ``$ref``/``$dynamicRef``, each with
+    its owning document's context (none without a document context)."""
+    if ctx is None:
+        return []
+    return [
+        ctx.target(ctx.key(s[kw], dynamic=kw == "$dynamicRef"))
+        for kw in ("$ref", "$dynamicRef")
+        if isinstance(s.get(kw), str)
+    ]
 
 
 def _dynamic_contributors(
@@ -623,13 +524,11 @@ def _dynamic_contributors(
     out: list[dict[str, Any]] = []
     keys_seen: set[str] = set()
 
-    def emit(branch: Any, conds: list, depth: int, doc: Any, base: str | None,
+    def emit(branch: Any, conds: list, depth: int, dc: _ImportCtx | None,
              path: frozenset) -> None:
         if depth > max_depth or not isinstance(branch, dict):
             return
-        allowed, patterns, starts, full = _evaluated_closure(
-            branch, ctx, where, doc=doc, base=base
-        )
+        allowed, patterns, starts, full = _evaluated_closure(branch, dc)
         start = max(starts)
         if allowed or patterns or start or full:
             c = {
@@ -643,9 +542,9 @@ def _dynamic_contributors(
             if k not in keys_seen:
                 keys_seen.add(k)
                 out.append(c)
-        spine(branch, conds, depth, doc, base, path)
+        spine(branch, conds, depth, dc, path)
 
-    def spine(s: Any, conds: list, depth: int, doc: Any, base: str | None,
+    def spine(s: Any, conds: list, depth: int, dc: _ImportCtx | None,
               path: frozenset) -> None:
         # conjunctive spine: the node itself, literal allOf members and
         # statically-resolved $ref/$dynamicRef targets all MUST apply, so
@@ -654,42 +553,36 @@ def _dynamic_contributors(
             return
         path = path | {id(s)}
         for m in s.get("anyOf", []):
-            emit(m, conds + [_node(m, f"{where}/anyOf", ctx)],
-                 depth + 1, doc, base, path)
+            emit(m, conds + [_node(m, f"{where}/anyOf", dc)], depth + 1, dc, path)
         one = s.get("oneOf")
         if isinstance(one, list) and one:
-            one_node = _node({"oneOf": one}, f"{where}/oneOf", ctx)
+            one_node = _node({"oneOf": one}, f"{where}/oneOf", dc)
             for m in one:
-                emit(m, conds + [one_node, _node(m, f"{where}/oneOf", ctx)],
-                     depth + 1, doc, base, path)
+                emit(m, conds + [one_node, _node(m, f"{where}/oneOf", dc)],
+                     depth + 1, dc, path)
         if "if" in s:
-            if_node = _node(s["if"], f"{where}/if", ctx)
-            emit(s["if"], conds + [if_node], depth + 1, doc, base, path)
+            if_node = _node(s["if"], f"{where}/if", dc)
+            emit(s["if"], conds + [if_node], depth + 1, dc, path)
             if "then" in s:
                 emit(s["then"],
-                     conds + [if_node, _node(s["then"], f"{where}/then", ctx)],
-                     depth + 1, doc, base, path)
+                     conds + [if_node, _node(s["then"], f"{where}/then", dc)],
+                     depth + 1, dc, path)
             if "else" in s:
                 not_if = {"kind": "not", "params": {"schema": if_node}}
                 emit(s["else"],
-                     conds + [not_if, _node(s["else"], f"{where}/else", ctx)],
-                     depth + 1, doc, base, path)
+                     conds + [not_if, _node(s["else"], f"{where}/else", dc)],
+                     depth + 1, dc, path)
         for key, ds in s.get("dependentSchemas", {}).items():
             guard = {"kind": "requiredKey", "params": {"key": key}}
             emit(ds,
-                 conds + [guard, _node(ds, f"{where}/dependentSchemas/{key}", ctx)],
-                 depth + 1, doc, base, path)
+                 conds + [guard, _node(ds, f"{where}/dependentSchemas/{key}", dc)],
+                 depth + 1, dc, path)
         for m in s.get("allOf", []):
-            spine(m, conds, depth, doc, base, path)
-        if ctx is not None and doc is not None:
-            for kw in ("$ref", "$dynamicRef"):
-                r = s.get(kw)
-                if isinstance(r, str):
-                    t, td, tb = _resolve_ref_raw(r, kw == "$dynamicRef", ctx, doc, base)
-                    spine(t, conds, depth, td, tb, path)
+            spine(m, conds, depth, dc, path)
+        for t, tc in _sibling_ref_targets(s, dc):
+            spine(t, conds, depth, tc, path)
 
-    spine(sub, [], 0,
-          ctx.doc if ctx else None, ctx.base_uri if ctx else None, frozenset())
+    spine(sub, [], 0, ctx, frozenset())
     return out
 
 
@@ -737,7 +630,18 @@ def _applications(
         ref = sub["$ref"] if ctx is None else ctx.canon(sub["$ref"])
         apps.append(("$ref", {"ref": ref}))
     if "$dynamicRef" in sub:
-        apps.append(("$ref", {"ref": _dynamic_ref_key(sub["$dynamicRef"], where, ctx)}))
+        ref = sub["$dynamicRef"]
+        if ctx is None:
+            raise ValueError(
+                f"$dynamicRef at {where}: requires document context — import the "
+                "schema via ruleset_from_json_schema"
+            )
+        if not (isinstance(ref, str) and ref.startswith("#")) or ref.startswith("#/"):
+            raise ValueError(
+                f"$dynamicRef at {where}: only plain-name fragments ('#name') are "
+                "supported (the bookending rule needs an anchor name)"
+            )
+        apps.append(("$ref", {"ref": ctx.canon(ref, dynamic=True, where=where)}))
 
     for kw, (kind, to_params) in _SCALAR_KEYWORDS.items():
         if kw in sub:
@@ -827,7 +731,7 @@ def _applications(
     #   runtime $dynamicRef rebinding (statically bound instead) — see
     #   README "Draft-2020-12 annotation boundary".
     if sub.get("unevaluatedProperties") is False:
-        allowed, patterns, _starts, _full = _evaluated_closure(sub, ctx, where)
+        allowed, patterns, _starts, _full = _evaluated_closure(sub, ctx)
         p = {
             "allowed": sorted(allowed),
             "allowed_patterns": sorted(patterns),
@@ -851,7 +755,7 @@ def _applications(
             raise ValueError(
                 f"unevaluatedItems at {where}: must be `false` or a subschema"
             )
-        _allowed, _patterns, starts, full = _evaluated_closure(sub, ctx, where)
+        _allowed, _patterns, starts, full = _evaluated_closure(sub, ctx)
         if not full:  # a non-tuple `items` in the closure evaluates everything
             p = {
                 "schema": _node(uitems, f"{where}/unevaluatedItems", ctx),
@@ -947,10 +851,7 @@ def _node(sub: Any, where: str, ctx: _ImportCtx | None = None) -> dict[str, Any]
 # ----------------------------------------------------------------------
 
 def _resolve_worklist(
-    definitions: dict[str, dict[str, Any]],
-    ctx: _ImportCtx,
-    root: dict[str, Any],
-    registry: SchemaRegistry | None,
+    definitions: dict[str, dict[str, Any]], ctx: _ImportCtx
 ) -> None:
     """Compile every ``$ref`` target recorded during import into the flat
     ``definitions`` map — the ``LocalSchemaCache`` resolution loop
@@ -967,26 +868,7 @@ def _resolve_worklist(
             return
         key = pending[0]
         done.add(key)
-        if key in definitions:
-            continue
-        doc_part, _, frag = key.partition("#")
-        if doc_part == "":
-            fragment = _json_pointer(root, frag, key)
-            sub_ctx = ctx  # same document → same (root) namespace
-        else:
-            if registry is None:
-                raise ValueError(
-                    f"cross-document $ref {key!r}: pass a SchemaRegistry with "
-                    "the preloaded schema set (the reference's shared-schema "
-                    "config, validator.schemaFile.*)"
-                )
-            doc = registry.resolve(doc_part)  # KeyError lists known $ids
-            fragment = _json_pointer(doc, frag, key)
-            base = doc.get("$id") or doc_part
-            sub_ctx = _ImportCtx(
-                base_uri=base, prefix=base, need=ctx.need, doc=doc,
-                root_doc=ctx.root_doc, dyn=ctx.dyn, registry=ctx.registry,
-            )
+        fragment, sub_ctx = ctx.target(key)
         definitions[key] = _node(fragment, key, sub_ctx)
 
 
@@ -994,22 +876,8 @@ def _ref_targets(node: dict[str, Any], out: set[str]) -> None:
     if node.get("kind") == "$ref":
         out.add(node["params"]["ref"])
         return
-    params = node.get("params", {})
-    if isinstance(params.get("schema"), dict):
-        _ref_targets(params["schema"], out)
-    if isinstance(params.get("schemas"), list):
-        for s in params["schemas"]:
-            if isinstance(s, dict):
-                _ref_targets(s, out)
-    for holder in ("properties", "mapping"):
-        if isinstance(params.get(holder), dict):
-            for v in params[holder].values():
-                if isinstance(v, dict):
-                    _ref_targets(v, out)
-    for c in params.get("contributors", []):
-        for n in c.get("when", []):
-            if isinstance(n, dict):
-                _ref_targets(n, out)
+    for n in subnodes(node.get("params", {})):
+        _ref_targets(n, out)
 
 
 def _rewrite_refs(node: dict[str, Any], fn) -> dict[str, Any]:
@@ -1025,30 +893,8 @@ def _rewrite_refs(node: dict[str, Any], fn) -> dict[str, Any]:
                 "params": {"ref": node["params"]["ref"]},
             }
         return {"kind": "$ref", "params": {**node["params"], "ref": new}}
-    params = node.get("params", {})
-    np = dict(params)
-    if isinstance(params.get("schema"), dict):
-        np["schema"] = _rewrite_refs(params["schema"], fn)
-    if isinstance(params.get("schemas"), list):
-        np["schemas"] = [
-            _rewrite_refs(s, fn) if isinstance(s, dict) else s
-            for s in params["schemas"]
-        ]
-    for holder in ("properties", "mapping"):
-        if isinstance(params.get(holder), dict):
-            np[holder] = {
-                k: _rewrite_refs(v, fn) if isinstance(v, dict) else v
-                for k, v in params[holder].items()
-            }
-    if isinstance(params.get("contributors"), list):
-        np["contributors"] = [
-            {**c, "when": [
-                _rewrite_refs(n, fn) if isinstance(n, dict) else n
-                for n in c.get("when", [])
-            ]}
-            for c in params["contributors"]
-        ]
-    return {**node, "params": np}
+    params = map_subnodes(node.get("params", {}), lambda n: _rewrite_refs(n, fn))
+    return {**node, "params": params}
 
 
 def _unroll_definitions(
@@ -1191,7 +1037,7 @@ def ruleset_from_json_schema(
     static entry-chain binding: each dynamic anchor name binds to its
     outermost declaration in $ref-discovery order from THIS entry schema
     (``_collect_dynamic_bindings``), the spec's bookending rule is
-    honored per occurrence (``_dynamic_ref_key``), and the canonical
+    honored per occurrence (``_ImportCtx.key``), and the canonical
     strict-tree extensibility pattern — an entry-side override re-routing
     a library's recursive ``$dynamicRef`` — compiles to the overriding
     definitions (recursion still bounded by ``max_ref_depth``)."""
@@ -1228,25 +1074,24 @@ def ruleset_from_json_schema(
     rules: list[Rule] = []
     seen: dict[str, int] = {}
 
-    def add(prop: str, kind: str, params: dict, severity: str,
-            ruleset: str = "default", prefix: str = "") -> None:
-        base = f"{prefix}{prop}.{kind}"
+    def add_rule(base: str, target: str, kind: str, params: dict,
+                 severity: str, ruleset: str) -> None:
+        # rule_id = base, then base.1, base.2… for repeated applications
         n = seen.get(base, 0)
         seen[base] = n + 1
         rules.append(
-            Rule(base if n == 0 else f"{base}.{n}", f"/{prop}", kind, params,
+            Rule(base if n == 0 else f"{base}.{n}", target, kind, params,
                  severity=severity, ruleset=ruleset)
         )
 
+    def add(prop: str, kind: str, params: dict, severity: str,
+            ruleset: str = "default", prefix: str = "") -> None:
+        add_rule(f"{prefix}{prop}.{kind}", f"/{prop}", kind, params, severity, ruleset)
+
     def add_span(prop: str, fld: str, kind: str, params: dict, severity: str,
                  ruleset: str = "default", prefix: str = "") -> None:
-        base = f"{prefix}{prop}.items.{fld}.{kind}"
-        n = seen.get(base, 0)
-        seen[base] = n + 1
-        rules.append(
-            Rule(base if n == 0 else f"{base}.{n}", f"/{prop}/*/{fld}", kind,
-                 params, severity=severity, ruleset=ruleset)
-        )
+        add_rule(f"{prefix}{prop}.items.{fld}.{kind}", f"/{prop}/*/{fld}", kind,
+                 params, severity, ruleset)
 
     def add_object_schema(obj: dict[str, Any], where: str,
                           ruleset: str = "default", prefix: str = "") -> None:
@@ -1286,16 +1131,11 @@ def ruleset_from_json_schema(
         _require_object_member(member, f"#/allOf/{i}")
         add_object_schema(member, f"#/allOf/{i}", prefix=f"allOf{i}.")
 
-    main = RuleSet(rules=tuple(rules), name=name)
+    result: RuleSet | RuleSetGroup = RuleSet(rules=tuple(rules), name=name)
 
     combo_kw = "anyOf" if "anyOf" in schema else ("oneOf" if "oneOf" in schema else None)
-    if combo_kw is None:
-        _resolve_worklist(definitions, ctx, schema, registry)
-        if max_ref_depth is not None:
-            definitions = _unroll_definitions(definitions, max_ref_depth)
-        return main, definitions
     rules = []
-    for i, member in enumerate(schema[combo_kw]):
+    for i, member in enumerate(schema[combo_kw] if combo_kw else []):
         _require_object_member(member, f"#/{combo_kw}/{i}")
         n_before = len(rules)
         add_object_schema(member, f"#/{combo_kw}/{i}",
@@ -1314,15 +1154,17 @@ def ruleset_from_json_schema(
                 Rule(f"{combo_kw}{i}.true", "/", "true", {},
                      severity="error", ruleset=f"branch{i}")
             )
-    branches = RuleSet(
-        rules=tuple(rules),
-        combination=Combination.ANY if combo_kw == "anyOf" else Combination.ONE_OF,
-        name=f"{name}-{combo_kw}",
-    )
-    _resolve_worklist(definitions, ctx, schema, registry)
+    if combo_kw is not None:
+        branches = RuleSet(
+            rules=tuple(rules),
+            combination=Combination.ANY if combo_kw == "anyOf" else Combination.ONE_OF,
+            name=f"{name}-{combo_kw}",
+        )
+        result = RuleSetGroup(groups=(result, branches), name=name)
+    _resolve_worklist(definitions, ctx)
     if max_ref_depth is not None:
         definitions = _unroll_definitions(definitions, max_ref_depth)
-    return RuleSetGroup(groups=(main, branches), name=name), definitions
+    return result, definitions
 
 
 def _require_object_member(member: Any, where: str) -> None:

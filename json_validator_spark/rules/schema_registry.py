@@ -67,7 +67,7 @@ class SchemaRegistry:
         or draft-4's ``id`` when the root ``$schema`` declares that
         dialect (networknt's V4 mode resolves ``id`` the same way —
         the importer rewrites it to ``$id`` at compile,
-        ``schema_import._rewrite_draft4_id``)."""
+        ``schema_import._dialect_step``)."""
         sid = schema.get("$id")
         if isinstance(sid, str) and sid:
             return sid

@@ -8,7 +8,7 @@ satisfies the keyword. All predicates are Catalyst Column expressions —
 JVM-side, whole-stage-codegen — never per-row Python.
 
 Null semantics follow JSON Schema: an absent (null) value vacuously
-passes every keyword except ``required`` / ``forbidden``; the compiler
+passes every keyword except ``required`` / ``forbidden``; ``null_pass``
 applies that wrapper, so builders here may assume non-null input.
 """
 
@@ -29,18 +29,20 @@ def _num(v: Any) -> Column:
     return F.lit(v)
 
 
+def null_pass(kind: str, value: Column, params: dict[str, Any]) -> Column:
+    """``build_pass`` under JSON-Schema null semantics: an absent value
+    passes every keyword except the presence kinds (``required`` etc.)."""
+    raw = build_pass(kind, value, params)
+    if kind in PRESENCE_KINDS:
+        return raw
+    return F.when(value.isNull(), F.lit(True)).otherwise(raw)
+
+
 def _inner_pred(schema: dict[str, Any]) -> Callable[[Column], Column]:
     """Compile a nested subschema ``{"kind": ..., "params": {...}}`` into
     an element-level pass predicate (used by contains / items / allOf…)."""
     kind, params = schema["kind"], schema.get("params", {})
-
-    def pred(v: Column) -> Column:
-        raw = build_pass(kind, v, params)
-        if kind in PRESENCE_KINDS:
-            return raw
-        return F.when(v.isNull(), F.lit(True)).otherwise(raw)
-
-    return pred
+    return lambda v: null_pass(kind, v, params)
 
 
 # Reference-catalog keywords that are semantic aliases of another

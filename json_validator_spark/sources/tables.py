@@ -15,12 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from json_validator_spark.session import jvm_cached
 
-TPCH_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-
 def iceberg_available(spark: SparkSession) -> bool:
     """Whether the Iceberg runtime is on the classpath. A failing
     ``Class.forName`` costs ~80 py4j round trips, so the answer is
@@ -47,11 +41,6 @@ def load_table(spark: SparkSession, name_or_path: str, sf_dir: str | None = None
     if iceberg_available(spark):
         return spark.read.format("iceberg").load(name_or_path)
     return spark.read.parquet(name_or_path)
-
-
-def load_sf(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All driver testdata tables for one scale factor (TESTDATA.md)."""
-    return {t: load_table(spark, t, sf_dir) for t in TPCH_TABLES}
 
 
 def write_table(df: DataFrame, path_or_ident: str, mode: str = "overwrite") -> None:

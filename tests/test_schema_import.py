@@ -297,6 +297,63 @@ def test_import_nested_ref_in_map_properties(spark):
     assert got == {(1, "meta.properties")}
 
 
+# Every params holder a compiled node can nest nodes under: (wrap a
+# nested node into a parent node, read it back out) — written out here
+# rather than through rules.model.subnodes, so a holder the shared walker
+# misses fails below.
+_NODE_HOLDERS = {
+    "schema": (
+        lambda n: {"kind": "not", "params": {"schema": n}},
+        lambda p: p["schema"],
+    ),
+    "schemas": (
+        lambda n: {"kind": "anyOf", "params": {"schemas": [n]}},
+        lambda p: p["schemas"][0],
+    ),
+    "properties": (
+        lambda n: {"kind": "properties", "params": {"properties": {"k": n}}},
+        lambda p: p["properties"]["k"],
+    ),
+    "mapping": (
+        lambda n: {"kind": "discriminator", "params": {"key": "t", "mapping": {"a": n}}},
+        lambda p: p["mapping"]["a"],
+    ),
+    "contributors.when": (
+        lambda n: {"kind": "unevaluatedProperties", "params": {
+            "allowed": [], "allowed_patterns": [],
+            "contributors": [{"when": [n], "allowed": ["x"], "allowed_patterns": []}],
+        }},
+        lambda p: p["contributors"][0]["when"][0],
+    ),
+}
+
+
+@pytest.mark.parametrize("holder", sorted(_NODE_HOLDERS))
+def test_ref_under_every_node_holder(holder):
+    """A `$ref` nested under each holder is inlined by resolve_refs,
+    rewritten by the bounded unrolling, and seen by the span-level
+    Python-predicate guard."""
+    from json_validator_spark.rules.compiler import _uses_python_predicate, resolve_refs
+    from json_validator_spark.rules.schema_import import _unroll_definitions
+
+    wrap, get = _NODE_HOLDERS[holder]
+
+    def ref(name):
+        return {"kind": "$ref", "params": {"ref": name}}
+
+    short = {"kind": "maxLength", "params": {"value": 2}}
+    assert get(resolve_refs(wrap(ref("d")), {"d": short})["params"]) == short
+
+    out = _unroll_definitions({"d": wrap(ref("d"))}, max_depth=2)
+    assert out["d"] == ref("d@1")
+    assert get(out["d@1"]["params"]) == ref("d@2")
+    assert get(out["d@2"]["params"]) == {
+        "kind": "refDepthExceeded", "params": {"ref": "d"}}
+
+    py = {"kind": "pattern", "params": {"regex": "^a", "engine": "python"}}
+    assert _uses_python_predicate(*wrap(py).values())
+
+
 def test_import_draft4_tuple_items(spark):
     """Draft-4 array-form `items` + `additionalItems` maps to
     prefixItems + items(start=len(prefix))."""
@@ -867,12 +924,15 @@ def test_import_anchor_fragments(spark):
     root = {
         "$id": "https://example.test/aroot.schema.json",
         "type": "object",
-        "$defs": {"local": {"$anchor": "loc", "minLength": 2}},
         "properties": {
             "a": {"$ref": "anchored.schema.json#tag"},
             "b": {"$ref": "anchored.schema.json#old"},
+            # an anchor-shaped `default` VALUE earlier in the document is
+            # data, not a subschema: `#loc` must still reach the $defs one
+            "z": {"default": {"$anchor": "loc"}},
             "c": {"$ref": "#loc"},
         },
+        "$defs": {"local": {"$anchor": "loc", "minLength": 2}},
     }
     reg = SchemaRegistry()
     reg.register(shared)
@@ -1228,6 +1288,41 @@ def test_unevaluated_sibling_ref_closure(spark):
         if r.rule_id == "m.unevaluatedProperties"
     )
     assert got == [(1, "m.unevaluatedProperties")]
+
+
+def test_unevaluated_contributor_in_registry_document(spark):
+    """A dynamic contributor branch reached through the sibling `$ref`
+    sits in another document, so its own `$ref`s resolve against THAT
+    document: the branch's `#/$defs/x` is the library's, not the
+    entry's (which has no `$defs`)."""
+    from json_validator_spark.rules.schema_registry import SchemaRegistry
+
+    reg = SchemaRegistry()
+    reg.register({
+        "$id": "https://example.test/uneval-lib",
+        "$defs": {"x": {"properties": {"a": {"maxLength": 2}}}},
+        "anyOf": [{"$ref": "#/$defs/x"}],
+    })
+    schema = {
+        "$id": "https://example.test/uneval-entry",
+        "type": "object",
+        "properties": {
+            "m": {"$ref": "uneval-lib", "unevaluatedProperties": False},
+        },
+    }
+    rs, defs = ruleset_from_json_schema(schema, registry=reg)
+    rows = [(0, {"a": "ab"}), (1, {"a": "abc"}), (2, {"b": "x"})]
+    df = spark.createDataFrame(rows, "doc_id long, m map<string,string>")
+    got = sorted(
+        (r.doc_id, r.rule_id)
+        for r in violations_df(df, rs, definitions=defs).collect()
+    )
+    # row 1 fails the library's anyOf, so `a` is not evaluated; row 2's
+    # `b` is evaluated by no branch
+    assert got == [
+        (1, "m.$ref"), (1, "m.unevaluatedProperties"),
+        (2, "m.unevaluatedProperties"),
+    ]
 
 
 def test_unevaluated_items_full_items_noop():
@@ -1907,24 +2002,57 @@ def test_import_draft4_id_keyword(spark):
 
 
 def test_import_draft4_id_property_name_not_rewritten(spark):
-    """A property literally NAMED `id` (ubiquitous in real data) is a
-    KEY of the `properties` map, not a keyword — the dialect rewrite
-    must leave it alone and its subschema must still compile."""
-    schema = {
-        "$schema": "http://json-schema.org/draft-04/schema#",
-        "type": "object",
-        "properties": {"id": {"type": "string", "pattern": "^u-"}},
-        "required": ["id"],
+    """A property literally NAMED `id` (ubiquitous in real data), or
+    named like the 2019-09 `$recursiveRef` keyword, is a KEY of the
+    `properties` map, not a keyword — the dialect rewrite must leave it
+    alone and its subschema must still compile."""
+    dialects = {
+        "id": "http://json-schema.org/draft-04/schema#",
+        "$recursiveRef": "https://json-schema.org/draft/2019-09/schema",
     }
-    rs, defs = ruleset_from_json_schema(schema, name="d4prop")
-    assert {r.rule_id for r in rs.rules} == {
-        "id.type", "id.pattern", "id.required"}
-    df = spark.createDataFrame(
-        [(0, "u-1"), (1, "x-1"), (2, None)], "doc_id long, id string"
-    )
-    got = {(r["doc_id"], r["rule_id"])
-           for r in violations_df(df, rs, definitions=defs).collect()}
-    assert got == {(1, "id.pattern"), (2, "id.required")}
+    for prop, dialect in dialects.items():
+        schema = {
+            "$schema": dialect,
+            "type": "object",
+            "properties": {prop: {"type": "string", "pattern": "^u-"}},
+            "required": [prop],
+        }
+        rs, defs = ruleset_from_json_schema(schema, name="d4prop")
+        assert {r.rule_id for r in rs.rules} == {
+            f"{prop}.type", f"{prop}.pattern", f"{prop}.required"}
+        df = spark.createDataFrame(
+            [(0, "u-1"), (1, "x-1"), (2, None)], f"doc_id long, `{prop}` string"
+        )
+        got = {(r["doc_id"], r["rule_id"])
+               for r in violations_df(df, rs, definitions=defs).collect()}
+        assert got == {(1, f"{prop}.pattern"), (2, f"{prop}.required")}
+
+
+def test_import_keyword_shaped_data_values_not_rewritten():
+    """`enum`/`const`/`default` values are data: a `$recursiveRef` or
+    `$recursiveAnchor` key inside one is neither validated nor rewritten
+    by the 2019-09 → 2020-12 pass, so the values compile unchanged."""
+    values = {
+        "enum": [{"$recursiveAnchor": "x"}, {"$recursiveRef": "#"}],
+        "const": {"$recursiveRef": "#"},
+        "default": {"$recursiveRef": "other"},
+    }
+    for kw, value in values.items():
+        schema = {
+            "$schema": "https://json-schema.org/draft/2019-09/schema",
+            "$recursiveAnchor": True,
+            "type": "object",
+            "properties": {"v": {kw: value, "maxLength": 3}},
+        }
+        rs, _ = ruleset_from_json_schema(schema)
+        got = {r.kind: r.params for r in rs.rules}
+        assert got.pop("maxLength") == {"value": 3}
+        # `default` is an annotation: no rule; the others keep the value
+        assert got == {
+            "enum": {"enum": {"values": value}},
+            "const": {"const": {"value": value}},
+            "default": {},
+        }[kw]
 
 
 def test_import_draft4_id_requires_declared_dialect():
